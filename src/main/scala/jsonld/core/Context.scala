@@ -58,6 +58,17 @@ final class Context(val options: JsonLdOptions) extends Serializable {
   // built lazily by Compaction.getInverse; never copied (regenerated)
   @transient var inverseCtx: mutable.HashMap[String, Any] = null
   @transient var fastCurie: mutable.HashMap[String, Any] = null
+  // set while a remote context is processed for the memo in parseWith, and
+  // carried by every context derived from it there: records whether the
+  // processing read the active base, which makes its result specific to
+  // the document that loaded it
+  @transient private var baseReads: Context.BaseReads = null
+
+  /** The active base, noted as read when processing is being watched. */
+  private def activeBase: String = {
+    if (baseReads != null) baseReads.seen = true
+    base
+  }
 
   def isMode11: Boolean = processingMode >= JsonLdOptions.JsonLd11
   def isMode10: Boolean = !isMode11
@@ -69,6 +80,7 @@ final class Context(val options: JsonLdOptions) extends Serializable {
     c.processingMode = processingMode
     c.version = version
     c.noValidateScoped = noValidateScoped
+    c.baseReads = baseReads
     c.terms = terms.clone()
     c.protectedTerms = protectedTerms.clone()
     if (previousContext != null) c.previousContext = previousContext.copyContext()
@@ -79,6 +91,55 @@ final class Context(val options: JsonLdOptions) extends Serializable {
     if (previousContext == null) this else previousContext.copyContext()
 
   def getTermDefinition(term: String): TermDefinition = terms.getOrElse(term, null)
+
+  /** No definitions or defaults of its own: what processing a remote
+    * context against this context yields depends only on its base, its
+    * processing mode and its options.
+    */
+  private def isInitial: Boolean =
+    terms.isEmpty && protectedTerms.isEmpty && vocab == null && !hasLanguage &&
+      language == "" && direction == "" && version == null && previousContext == null &&
+      !noValidateScoped && baseReads == null
+
+  /** A fresh context with this context's options and base and the
+    * definitions and defaults of `processed`, a memoized remote context.
+    */
+  private def withTermsOf(processed: Context): Context = {
+    val c = new Context(options)
+    c.base = base
+    c.vocab = processed.vocab; c.language = processed.language
+    c.hasLanguage = processed.hasLanguage; c.direction = processed.direction
+    c.processingMode = processed.processingMode
+    c.version = processed.version
+    c.terms = processed.terms.clone()
+    c.protectedTerms = processed.protectedTerms.clone()
+    c
+  }
+
+  /** Processes `remoteCtx`, the `@context` of `rd`, against this initial
+    * context, reusing the result memoized on `rd`. The processed context
+    * depends only on the document and the key when it never read the base;
+    * this context's base and options are laid over it.
+    */
+  private def parseRemoteMemoized(rd: RemoteDocument, remoteCtx: Any, remoteContexts: List[String],
+                                  overrideProtected: Boolean): Context = {
+    val key = (processingMode, overrideProtected)
+    val memo = rd.processedContexts
+    val cached = memo.get(key)
+    if (cached != null) return withTermsOf(cached)
+    val reads = new Context.BaseReads
+    val watched = copyContext()
+    watched.baseReads = reads
+    val processed = watched.parseWith(remoteCtx, remoteContexts, parsingRemote = true,
+      propagate0 = true, protectedFlag = false, overrideProtected = overrideProtected)
+    var c = processed
+    while (c != null) { c.baseReads = null; c = c.previousContext }
+    if (reads.seen || processed.previousContext != null) processed
+    else {
+      memo.putIfAbsent(key, processed)
+      withTermsOf(processed)
+    }
+  }
 
   // ---------------------------------------------------------------- parse
 
@@ -114,12 +175,16 @@ final class Context(val options: JsonLdOptions) extends Serializable {
           if (!overrideProtected && result.protectedTerms.nonEmpty)
             throw JsonLdError(JsonLdError.InvalidContextNullification,
               "tried to nullify a context with protected terms")
+          // the base resets to the option's, not the active one
+          if (result.baseReads != null) result.baseReads.seen = true
           val nullCtx = new Context(options)
+          nullCtx.baseReads = result.baseReads
           if (!propagate) nullCtx.previousContext = result
           result = nullCtx
 
         case s: String =>
-          val uri = Uri.resolve(result.base, s)
+          val uri = Uri.resolve(result.activeBase, s)
+          val memoizable = remoteContexts.isEmpty && result.isInitial
           if (remoteContexts.contains(uri))
             throw JsonLdError(JsonLdError.RecursiveContextInclusion, uri)
           remoteContexts = remoteContexts :+ uri
@@ -134,8 +199,10 @@ final class Context(val options: JsonLdOptions) extends Serializable {
             case m: JObj @unchecked if m.contains("@context") => m("@context")
             case _ => throw JsonLdError(JsonLdError.InvalidRemoteContext, uri)
           }
-          result = result.parseWith(remoteCtx, remoteContexts, parsingRemote = true,
-            propagate0 = true, protectedFlag = false, overrideProtected = overrideProtected)
+          result =
+            if (memoizable) result.parseRemoteMemoized(rd, remoteCtx, remoteContexts, overrideProtected)
+            else result.parseWith(remoteCtx, remoteContexts, parsingRemote = true,
+              propagate0 = true, protectedFlag = false, overrideProtected = overrideProtected)
 
         case m: JObj @unchecked =>
           contextMap = m
@@ -172,7 +239,7 @@ final class Context(val options: JsonLdOptions) extends Serializable {
               case s: String => s
               case _ => throw JsonLdError(JsonLdError.InvalidImportValue, "@import must be a string")
             }
-            val uri = Uri.resolve(result.base, importStr)
+            val uri = Uri.resolve(result.activeBase, importStr)
             val rd =
               try options.documentLoader.loadDocument(uri)
               catch {
@@ -201,7 +268,7 @@ final class Context(val options: JsonLdOptions) extends Serializable {
             case s: String =>
               if (isAbsoluteIri(s)) result.base = s
               else {
-                if (!isAbsoluteIri(result.base))
+                if (!isAbsoluteIri(result.activeBase))
                   throw JsonLdError(JsonLdError.InvalidBaseIri, result.base)
                 result.base = Uri.resolve(result.base, s)
               }
@@ -625,7 +692,7 @@ final class Context(val options: JsonLdOptions) extends Serializable {
     }
 
     if (vocabFlag && vocab != null) return vocab + value
-    if (relative) return Uri.resolve(base, value)
+    if (relative) return Uri.resolve(activeBase, value)
     if (context != null && isRelativeIri(value))
       throw JsonLdError(JsonLdError.InvalidIriMapping, s"not an absolute IRI: $value")
     value
@@ -729,6 +796,9 @@ final class Context(val options: JsonLdOptions) extends Serializable {
 }
 
 object Context {
+  /** Whether a watched context processing read the active base. */
+  private final class BaseReads { var seen = false }
+
   val NonTermDefKeys: Set[String] = Set(
     "@base", "@direction", "@import", "@language", "@propagate",
     "@protected", "@version", "@vocab")

@@ -57,7 +57,18 @@ object JsonLdOptions {
   * never a network call).
   */
 final case class RemoteDocument(documentUrl: String, document: Any, contextUrl: String = null,
-                                baseHref: String = null)
+                                baseHref: String = null) {
+  /** This document's `@context`, already processed against an initial
+    * active context, keyed by (processing mode, override-protected); filled
+    * and read by [[Context.parseWith]]. It lives as long as the document:
+    * a loader that returns the same document for every load (as
+    * [[MapDocumentLoader]] does) shares it across all documents it serves.
+    * Transient: a serialized loader or document carries no processed
+    * contexts.
+    */
+  @transient private[core] lazy val processedContexts =
+    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), Context]()
+}
 
 trait DocumentLoader extends Serializable {
   def loadDocument(url: String): RemoteDocument
@@ -68,12 +79,21 @@ object EmptyDocumentLoader extends DocumentLoader {
     throw JsonLdError(JsonLdError.LoadingDocumentFailed, s"no loader for $url")
 }
 
-/** Preloaded url → raw JSON string map; broadcastable. Parsing happens on
-  * access so the broadcast payload stays compact strings.
+/** Preloaded url → raw JSON string map; broadcastable, so the broadcast
+  * payload stays compact strings. Each body is parsed on its first load
+  * and every later load returns the same [[RemoteDocument]], so a remote
+  * context is also processed only once per loader (see
+  * [[RemoteDocument.processedContexts]]). Both caches are transient: they
+  * are scoped to one deserialized loader instance — one per partition in
+  * `Pipeline.transformStage` — and never travel with the broadcast.
+  * A body that fails to parse is not cached; every load of it fails.
   */
 final class MapDocumentLoader(docs: Map[String, String]) extends DocumentLoader {
+  @transient private lazy val parsed =
+    new java.util.concurrent.ConcurrentHashMap[String, RemoteDocument]()
+
   def loadDocument(url: String): RemoteDocument =
-    docs.get(url) match {
+    parsed.computeIfAbsent(url, _ => docs.get(url) match {
       case Some(body) =>
         try RemoteDocument(url, Json.parse(body))
         catch {
@@ -82,5 +102,5 @@ final class MapDocumentLoader(docs: Map[String, String]) extends DocumentLoader 
         }
       case None =>
         throw JsonLdError(JsonLdError.LoadingDocumentFailed, s"not preloaded: $url")
-    }
+    })
 }

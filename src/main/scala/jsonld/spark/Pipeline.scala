@@ -117,9 +117,16 @@ object Pipeline extends Serializable {
                      maxPermutations: Long = 100000L): Dataset[PipeRow] = {
     import docs.sparkSession.implicits._
     docs.mapPartitions { iter =>
-      // one loader per partition: parsed-context cache lives across docs
+      // one loader per partition: it parses each remote context once, and
+      // each parsed context is processed once and reused by every document
+      // of the partition that names it (MapDocumentLoader)
       val loader = new MapDocumentLoader(contextCache.value)
       iter.flatMap { d =>
+        def failed(code: String, message: String): Iterator[PipeRow] = {
+          counters.docsFailed.add(1)
+          Iterator.single(PipeRow(ok = false, d.docId, d.repo, d.path,
+            "", "", "", QuadRow.KindIri, "", "", "", code, String.valueOf(message).take(200)))
+        }
         counters.docsDetected.add(1)
         try {
           val opts = JsonLdOptions(base = d.baseIri, documentLoader = loader)
@@ -154,14 +161,12 @@ object Pipeline extends Serializable {
               if (graphName == "@default") "" else graphName, "", "")
           }
         } catch {
-          case e: JsonLdError =>
-            counters.docsFailed.add(1)
-            Iterator.single(PipeRow(ok = false, d.docId, d.repo, d.path,
-              "", "", "", QuadRow.KindIri, "", "", "", e.code, e.details.take(200)))
-          case e: Exception =>
-            counters.docsFailed.add(1)
-            Iterator.single(PipeRow(ok = false, d.docId, d.repo, d.path,
-              "", "", "", QuadRow.KindIri, "", "", "", "crash", String.valueOf(e.getMessage).take(200)))
+          case e: JsonLdError => failed(e.code, e.details)
+          // the recursive algorithms overflow on deeply nested input; the
+          // stack is unwound by now, so this fails the document, not the task
+          case _: StackOverflowError =>
+            failed(JsonLdError.NestingTooDeep, "the document's nesting exhausted the stack")
+          case e: Exception => failed("crash", e.getMessage)
         }
       }
     }

@@ -192,6 +192,27 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(counters.docsFailed.value >= 1L)
   }
 
+  test("a 500-deep document is quarantined for its nesting; the job survives") {
+    val depth = 500
+    val deep = """{"@context": {"@vocab": "http://ex.org/"}, "@id": "http://ex.org/root", "p": """ +
+      """{"p": """ * depth + "\"leaf\"" + "}" * depth + "}"
+    val counters = Pipeline.newCounters(spark)
+    val ctxCache = spark.sparkContext.broadcast(Map.empty[String, String])
+    val rows = Seq(
+      DetectedDoc("deep", "r", "deep.jsonld", "c", 0, "graft://r/deep", deep, "x"),
+      DetectedDoc("good", "r", "ok.jsonld", "c", 0, "graft://r/ok",
+        """{"@id": "http://ex.org/s", "http://ex.org/p": "v"}""", "x"))
+    val pipe = Pipeline.transformStage(
+      spark.createDataset(rows)(org.apache.spark.sql.Encoders.product[DetectedDoc]),
+      ctxCache, counters)
+    val quads = Pipeline.quads(pipe).collect()
+    val errs = Pipeline.quarantine(pipe).collect()
+    assert(quads.map(_.docId).toSet == Set("good"))
+    assert(errs.map(e => (e.docId, e.errorCode)).toSeq ==
+      Seq(("deep", JsonLdError.NestingTooDeep)), errs.toSeq)
+    assert(!spark.sparkContext.isStopped)
+  }
+
   test("lineage rows aggregate per partition") {
         val counters = Pipeline.newCounters(spark)
     val ctxCache = spark.sparkContext.broadcast(Map.empty[String, String])
