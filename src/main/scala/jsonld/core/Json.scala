@@ -1,6 +1,7 @@
 package jsonld.core
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken, JsonGenerator}
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonGenerator, JsonParser, JsonToken, StreamReadConstraints}
+import com.fasterxml.jackson.core.exc.StreamConstraintsException
 import java.io.{StringWriter, Writer}
 import scala.collection.mutable
 
@@ -25,8 +26,23 @@ object Json {
   def arr(): JArr = mutable.ArrayBuffer.empty[Any]
   def arr(xs: Any*): JArr = { val a = arr(); a ++= xs; a }
 
-  private val factory = new JsonFactory()
+  /** Deepest nesting of objects and arrays [[parse]] accepts. The JSON-LD
+    * algorithms recurse once or more per level, and on a cold JVM with the
+    * default 1 MB thread stack expand + toRdf overflow at ~420 levels (once
+    * JIT-compiled, past 990), so a deeper document is refused while parsing,
+    * deterministically, instead of by a `StackOverflowError` that depends
+    * on what the JIT has compiled so far.
+    */
+  val MaxNestingDepth = 256
 
+  private val factory = new JsonFactoryBuilder()
+    .streamReadConstraints(StreamReadConstraints.builder().maxNestingDepth(MaxNestingDepth).build())
+    .build()
+
+  /** Parses one JSON value. Nesting deeper than [[MaxNestingDepth]] throws
+    * `JsonLdError(NestingTooDeep)`; any other malformed input throws the
+    * parser's exception.
+    */
   def parse(s: String): Any = {
     val p = factory.createParser(s)
     try {
@@ -36,6 +52,10 @@ object Json {
       // trailing garbage check
       if (p.nextToken() != null) throw new IllegalArgumentException("trailing content after JSON value")
       v
+    } catch {
+      // the parser enters the offending level before it checks the limit
+      case e: StreamConstraintsException if p.getParsingContext.getNestingDepth > MaxNestingDepth =>
+        throw JsonLdError(JsonLdError.NestingTooDeep, e.getOriginalMessage)
     } finally p.close()
   }
 

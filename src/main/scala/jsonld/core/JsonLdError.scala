@@ -66,8 +66,8 @@ object JsonLdError {
   // tripped — the document is adversarial/pathological and gets quarantined
   // instead of stalling an executor (Canonicalize.scala)
   val CanonicalizationBudgetExceeded = "canonicalization budget exceeded"
-  // ours (not a spec code): the per-document recursion exhausted the
-  // thread's stack, in practice on very deeply nested input
+  // ours (not a spec code): the document nests deeper than
+  // Json.MaxNestingDepth, or its recursion still exhausted the thread's stack
   val NestingTooDeep = "nesting too deep"
   val InvalidProperty = "invalid property"
   val InvalidInput = "invalid input"

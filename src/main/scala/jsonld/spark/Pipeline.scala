@@ -1,6 +1,6 @@
 package jsonld.spark
 
-import org.apache.spark.sql.{Dataset, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.LongAccumulator
@@ -17,7 +17,9 @@ import jsonld.core.Rdf._
   * per-document state ever crosses a task boundary (blank-node scopes are
   * per document). Corpus-level relational work (dedup, joins, bucketing,
   * lineage aggregation) is left to Catalyst: it shuffles only at
-  * `dropDuplicates` / `repartition(predBucket)`.
+  * `dropDuplicates` / the predicate-bucket repartition, which writes one
+  * parquet file per bucket whenever `buckets >= spark.sql.shuffle.partitions`
+  * ([[bucketSorted]]).
   *
   * Scale notes (100 TB / 1000 executors):
   * - detection is a narrow map over the scan — predicate + column pruning
@@ -65,15 +67,6 @@ object Pipeline extends Serializable {
     spark.sparkContext.longAccumulator("graft.quadsOut"),
     spark.sparkContext.longAccumulator("graft.quadsDropped"))
 
-  /** Stage 1: detection. Cheap column-level pre-filter first (pushable /
-    * codegen'd), then the per-file extractor.
-    *
-    * `filesIn` counts files entering the JVM-side extractor, i.e. AFTER
-    * the pushed-down pre-filter — counting raw scanned rows would require
-    * piercing predicate pushdown with a per-row accumulator map, defeating
-    * the pruning the stage exists for. Scanned-row totals belong to the
-    * storage layer (parquet footer counts), not this metric.
-    */
   /** Incremental ingest: keep only files that are NEW or whose content
     * CHANGED since a prior run. `prevManifest` is the previous run's
     * (path, content_sha256) table — exactly what the detect stage records
@@ -94,6 +87,15 @@ object Pipeline extends Serializable {
       .as[RepoFile]
   }
 
+  /** Stage 1: detection. Cheap column-level pre-filter first (pushable /
+    * codegen'd), then the per-file extractor.
+    *
+    * `filesIn` counts files entering the JVM-side extractor, i.e. AFTER
+    * the pushed-down pre-filter — counting raw scanned rows would require
+    * piercing predicate pushdown with a per-row accumulator map, defeating
+    * the pruning the stage exists for. Scanned-row totals belong to the
+    * storage layer (parquet footer counts), not this metric.
+    */
   def detectStage(corpus: Dataset[RepoFile], counters: Counters): Dataset[DetectedDoc] = {
     import corpus.sparkSession.implicits._
     val prefiltered = corpus.filter(
@@ -132,8 +134,10 @@ object Pipeline extends Serializable {
           val opts = JsonLdOptions(base = d.baseIri, documentLoader = loader)
           val parsed =
             try Json.parse(d.json)
-            catch { case e: Exception =>
-              throw JsonLdError(JsonLdError.InvalidInput, String.valueOf(e.getMessage))
+            catch {
+              case e: JsonLdError => throw e // too deeply nested
+              case e: Exception =>
+                throw JsonLdError(JsonLdError.InvalidInput, String.valueOf(e.getMessage))
             }
           val expanded = Processor.expand(parsed, opts)
           val dataset = ToRdf.toRdf(expanded, opts)
@@ -162,8 +166,9 @@ object Pipeline extends Serializable {
           }
         } catch {
           case e: JsonLdError => failed(e.code, e.details)
-          // the recursive algorithms overflow on deeply nested input; the
-          // stack is unwound by now, so this fails the document, not the task
+          // Json.parse refuses the nesting depth that overflows the recursive
+          // algorithms; should another input still exhaust the stack, it is
+          // unwound by now, so this fails the document, not the task
           case _: StackOverflowError =>
             failed(JsonLdError.NestingTooDeep, "the document's nesting exhausted the stack")
           case e: Exception => failed("crash", e.getMessage)
@@ -258,35 +263,67 @@ object Pipeline extends Serializable {
     * pushdown-able reads at 100 TB (SURVEY.md §2.10).
     */
   def writePartitioned(quadsDf: DataFrame, outDir: String, buckets: Int = 64): Unit = {
-    // repartition by (bucket, subj-salt), not bucket alone: a corpus with
-    // few distinct predicates would otherwise confine the sort+write stage
-    // to #buckets tasks regardless of cluster size; the salt keeps every
-    // core busy while partitionBy still yields one directory per bucket
-    quadsDf
-      .withColumn("predBucket", pmod(hash(col("pred")), lit(buckets)))
-      .repartition(col("predBucket"), pmod(hash(col("subj")), lit(16)))
+    val (bucketed, key) = withBucketKey(quadsDf, buckets)
+    bucketed
+      .repartition(key: _*)
       .sortWithinPartitions("subj", "pred", "obj")
       .write.mode("overwrite")
       .partitionBy("predBucket")
       .parquet(outDir)
   }
 
+  /** Adds `predBucket` (hash of `pred` mod `buckets`) to `df` and returns
+    * it with the dedup/write exchange key; [[bucketSorted]] states the
+    * salt rule.
+    */
+  private def withBucketKey(df: DataFrame, buckets: Int): (DataFrame, Seq[Column]) = {
+    val salts = subjectSalts(df.sparkSession, buckets)
+    val key =
+      if (salts == 1) Seq(col("predBucket"))
+      else Seq(col("predBucket"), pmod(hash(col("subj")), lit(salts)))
+    (df.withColumn("predBucket", pmod(hash(col("pred")), lit(buckets))), key)
+  }
+
+  /** Subject salts of the dedup/write exchange key: 1 when
+    * `spark.sql.shuffle.partitions <= buckets`, else 16.
+    */
+  private[spark] def subjectSalts(spark: SparkSession, buckets: Int): Int =
+    if (spark.conf.get("spark.sql.shuffle.partitions").toInt <= buckets) 1 else 16
+
   private val graphCols =
     Seq("subj", "pred", "obj", "objKind", "objDatatype", "objLang", "graph")
 
-  /** Fused dedup + bucketed materialize — ONE shuffle for both.
+  /** The single-Exchange stage feeding the fused dedup + bucketed
+    * materialize (exposed so PlanSpec can pin the one-shuffle shape — the
+    * InternalRow map of [[dedupForWrite]] hides it behind an RDD scan).
     *
-    * `dropDuplicates` followed by `writePartitioned` shuffles every quad
-    * twice (hash-agg exchange, then the write repartition). But two equal
-    * quads share pred and subj, hence the same (predBucket, subjSalt)
-    * write partition — so the write's own repartition already co-locates
-    * duplicates, and dedup degenerates to dropping adjacent rows after the
-    * per-partition sort (which the bucketed layout wants anyway). Halves
-    * shuffle bytes AND skips the hash-aggregate build over what is, on a
-    * real corpus, an almost-entirely-distinct key set.
-    */
-  /** The fused plan, exposed for plan assertions (PlanSpec pins the
-    * single-Exchange shape as a regression test).
+    * Exchange key: `predBucket` alone when `buckets >= P`, where P is
+    * `spark.sql.shuffle.partitions` (the exchange's partition count),
+    * else `(predBucket, pmod(hash(subj), 16))`. With `buckets >= P` the
+    * buckets alone offer at least as many keys as the exchange has
+    * partitions, so each bucket lands whole in one reduce task and is
+    * written as ONE parquet file: a triple-pattern scan of a bucket opens
+    * one file, and the build opens one parquet writer per bucket. With
+    * fewer buckets than partitions the buckets alone would leave
+    * partitions idle, so a subject salt splits each bucket over up to 16
+    * reduce tasks and files. 16, not `ceil(P / buckets)`: a corpus with
+    * few, skewed predicates (graft.Bench's fills 8 of 32 buckets, at
+    * P = 64) needs the finer split to keep its largest bucket off the
+    * write stage's critical path. The rule reads a session setting, not
+    * the executor cores registered so far, so one configuration always
+    * yields one layout. Its limit: with `buckets >= P`, a corpus whose
+    * predicates fill fewer buckets than there are cores sorts and writes
+    * on fewer tasks than cores, its largest bucket on one task; set P
+    * above `buckets` for such a corpus.
+    *
+    * ONE shuffle for dedup and write: `dropDuplicates` followed by
+    * `writePartitioned` shuffles every quad twice (hash-agg exchange,
+    * then the write repartition). But two equal quads share pred and
+    * subj, hence the same exchange key whatever `salts` is, so the
+    * write's own repartition already co-locates duplicates, and dedup
+    * degenerates to dropping adjacent rows after the per-partition sort.
+    * This halves shuffle bytes AND skips the hash-aggregate build over
+    * what is, on a real corpus, an almost-entirely-distinct key set.
     *
     * Dedup mechanics: sorting by the quad columns directly is
     * pathologically slow here — subject IRIs share long prefixes, so the
@@ -298,16 +335,13 @@ object Pipeline extends Serializable {
     * so a collision can never drop a distinct quad. The dynamic-partition
     * writer re-sorts by the int predBucket only — cheap.
     */
-  /** The single-Exchange stage feeding the fused dedup (exposed so
-    * PlanSpec can pin the one-shuffle shape — the InternalRow map below
-    * hides it behind an RDD scan).
-    */
-  def bucketSorted(q: Dataset[QuadRow], buckets: Int): DataFrame =
-    q.toDF().drop("docId")
-      .withColumn("predBucket", pmod(hash(col("pred")), lit(buckets)))
+  def bucketSorted(q: Dataset[QuadRow], buckets: Int): DataFrame = {
+    val (bucketed, key) = withBucketKey(q.toDF().drop("docId"), buckets)
+    bucketed
       .withColumn("qh", xxhash64(graphCols.map(col): _*))
-      .repartition(col("predBucket"), pmod(hash(col("subj")), lit(16)))
+      .repartition(key: _*)
       .sortWithinPartitions(col("qh"))
+  }
 
   def dedupForWrite(q: Dataset[QuadRow], buckets: Int = 64): DataFrame =
     adjacentDedupUnsafe(bucketSorted(q, buckets), qhIdx = 8).drop("qh")
@@ -327,15 +361,15 @@ object Pipeline extends Serializable {
                        dict: Map[String, Int]): DataFrame = {
     val dictCol = map(dict.toSeq.sortBy(_._1)
       .flatMap { case (p, c) => Seq(lit(p), lit(c)) }: _*)
-    q.toDF().drop("docId")
-      .withColumn("predBucket", pmod(hash(col("pred")), lit(buckets)))
+    val (bucketed, key) = withBucketKey(q.toDF().drop("docId"), buckets)
+    bucketed
       .withColumn("predCode", element_at(dictCol, col("pred")))
       .withColumn("predStr",
         when(col("predCode").isNotNull, lit(null).cast("string")).otherwise(col("pred")))
       .drop("pred")
       .withColumn("qh", xxhash64(Seq("subj", "predCode", "predStr", "obj", "objKind",
         "objDatatype", "objLang", "graph").map(col): _*))
-      .repartition(col("predBucket"), pmod(hash(col("subj")), lit(16)))
+      .repartition(key: _*)
       .sortWithinPartitions(col("qh"))
   }
 

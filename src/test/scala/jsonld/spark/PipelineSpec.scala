@@ -226,10 +226,12 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lin.length >= 1)
   }
 
-  test("fused dedupAndWritePartitioned equals dropDuplicates-then-write, with one shuffle") {
+  /** 60 documents, 20 distinct quads over 3 predicates: duplicates across
+    * docs AND within the same write bucket.
+    */
+  private def duplicatedQuads(): org.apache.spark.sql.Dataset[QuadRow] = {
     val counters = Pipeline.newCounters(spark)
     val ctxCache = spark.sparkContext.broadcast(Map.empty[String, String])
-    // duplicates across docs AND within the same write bucket
     val rows = (0 until 60).map { i =>
       DetectedDoc(s"d$i", "r", s"f$i.jsonld", "c", 0, s"graft://r/f$i",
         s"""{"@id": "http://ex.org/s${i % 20}", "http://ex.org/p${(i % 20) % 3}": "v${i % 20}"}""", "x")
@@ -237,18 +239,86 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pipe = Pipeline.transformStage(
       spark.createDataset(rows)(org.apache.spark.sql.Encoders.product[DetectedDoc]).repartition(4),
       ctxCache, counters)
-    val quads = Pipeline.quads(pipe)
+    Pipeline.quads(pipe)
+  }
 
-    val expected = Pipeline.dedupQuads(quads)
+  private def sortedQuads(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("subj", "pred", "obj", "objKind", "objDatatype", "objLang", "graph")
       .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  /** Parquet data files per `predBucket=` directory of a written graph. */
+  private def filesPerBucket(out: String): Map[String, Int] =
+    Files.list(Paths.get(out)).iterator().asScala
+      .filter(d => Files.isDirectory(d) && d.getFileName.toString.startsWith("predBucket="))
+      .map { d =>
+        d.getFileName.toString -> Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet"))
+      }.toMap
+
+  /** Runs `body` with AQE's partition coalescing off, so each reduce task
+    * of the exchange writes its own files.
+    */
+  private def withoutCoalescing[T](body: => T): T = {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("fused dedupAndWritePartitioned equals dropDuplicates-then-write, with one shuffle") {
+    val quads = duplicatedQuads()
+    val expected = sortedQuads(Pipeline.dedupQuads(quads))
     assert(expected.size == 20, s"fixture should dedup 60 → 20, got ${expected.size}")
 
     val out = Files.createTempDirectory("fused").toString
     Pipeline.dedupAndWritePartitioned(quads, out, buckets = 8)
-    val written = spark.read.parquet(out)
-      .select("subj", "pred", "obj", "objKind", "objDatatype", "objLang", "graph")
-      .collect().map(_.toSeq.mkString("|")).sorted.toSeq
-    assert(written == expected, "fused path must produce the exact dedup set")
+    assert(sortedQuads(spark.read.parquet(out)) == expected,
+      "fused path must produce the exact dedup set")
+  }
+
+  test("buckets >= shuffle partitions: each non-empty predicate bucket is written as one parquet file") {
+    val quads = duplicatedQuads()
+    val expected = sortedQuads(Pipeline.dedupQuads(quads))
+    val out = Files.createTempDirectory("onefile").toString
+    // 8 buckets and 8 shuffle partitions: no subject salt, so a bucket
+    // cannot be split over reduce tasks even when none of them is coalesced
+    withoutCoalescing(Pipeline.dedupAndWritePartitioned(quads, out, buckets = 8))
+    val files = filesPerBucket(out)
+    assert(files.nonEmpty && files.values.forall(_ == 1), files)
+    assert(sortedQuads(spark.read.parquet(out)) == expected)
+  }
+
+  test("shuffle partitions > buckets: the subject salt spreads buckets and keeps the exact dedup set") {
+    val quads = duplicatedQuads()
+    val expected = sortedQuads(Pipeline.dedupQuads(quads))
+    val out = Files.createTempDirectory("salted").toString
+    // 2 buckets and 8 shuffle partitions: 16 salt values per bucket
+    withoutCoalescing(Pipeline.dedupAndWritePartitioned(quads, out, buckets = 2))
+    val files = filesPerBucket(out)
+    assert(files.values.sum > files.size, s"no bucket was split over reduce tasks: $files")
+    assert(sortedQuads(spark.read.parquet(out)) == expected)
+  }
+
+  test("the subject salt follows spark.sql.shuffle.partitions, not the cores") {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    def salts(partitions: Int, buckets: Int): Int = {
+      spark.conf.set(key, partitions.toString)
+      Pipeline.subjectSalts(spark, buckets)
+    }
+    try {
+      assert(salts(12, 32) == 1)
+      assert(salts(32, 32) == 1)
+      assert(salts(33, 32) == 16)
+      assert(salts(64, 32) == 16)
+      // local[4] has 4 cores; one shuffle partition still means no salt
+      assert(salts(1, 2) == 1)
+      assert(salts(8, 2) == 16)
+    } finally spark.conf.set(key, prev)
   }
 
   test("incrementalCorpus keeps only new files and content changes") {
