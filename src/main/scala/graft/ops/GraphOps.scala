@@ -177,10 +177,32 @@ object GraphOps {
     * column as `v__dt` (two patterns binding the same object variable
     * join on it too — same term, same datatype, so the extra key never
     * changes the solution set).
+    *
+    * Bucket pruning: over a predicate-bucketed parquet graph marked with
+    * its bucket count (`CorpusIO.markBuckets`), a pattern whose predicate
+    * is a constant or an alternation of constants scans only the
+    * `predBucket` directories of those predicates
+    * (`GraftInternal.predBucketPruner`). Any other frame — a variable or
+    * negated predicate, a cached or in-memory table, a union with path
+    * closure triples, an unmarked graph — is scanned whole. The plan walk
+    * and the marker read happen once per call, and only when some
+    * pattern has a constant predicate.
     */
   private def compilePatterns(quads: DataFrame,
                               patterns: Seq[Seq[(String, Term)]],
                               trackDt: Boolean = false): DataFrame = {
+    // (bucket count, pruning function) of the marked graph `quads` reads
+    lazy val pruner: Option[(Int, Seq[Int] => DataFrame)] =
+      org.apache.spark.sql.GraftInternal.predBucketPruner(quads).flatMap { case (root, prune) =>
+        jsonld.spark.CorpusIO.bucketCount(quads.sparkSession, root).map(_ -> prune)
+      }
+    def scan(terms: Seq[(String, Term)]): DataFrame =
+      terms.collectFirst {
+        case ("pred", Const(v)) => Seq(v)
+        case ("pred", ConstIn(vs)) if vs.nonEmpty => vs
+      }.flatMap(vs => pruner.map { case (n, prune) =>
+        prune(vs.map(jsonld.spark.Pipeline.bucketOf(_, n)).distinct.sorted)
+      }).getOrElse(quads)
     def one(terms: Seq[(String, Term)]): DataFrame = {
       val constFilter = terms.collect {
         case (c, Const(v)) => col(c) === lit(v)
@@ -200,7 +222,7 @@ object GraphOps {
               Seq(col("dt").as(n + DtSuffix))
             else Seq.empty)
         }
-      val base = quads.filter(constFilter && eqFilter)
+      val base = scan(terms).filter(constFilter && eqFilter)
       if (proj.isEmpty) base.select(lit(1).as("__matched")).limit(1)
       else base.select(proj: _*)
     }

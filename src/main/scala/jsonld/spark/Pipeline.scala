@@ -19,7 +19,10 @@ import jsonld.core.Rdf._
   * lineage aggregation) is left to Catalyst: it shuffles only at
   * `dropDuplicates` / the predicate-bucket repartition, which writes one
   * parquet file per bucket whenever `buckets >= spark.sql.shuffle.partitions`
-  * ([[bucketSorted]]).
+  * ([[bucketSorted]]). The written graph records its bucket count in a
+  * hidden marker ([[CorpusIO.BucketsMarker]]), and `GraphOps` prunes each
+  * constant-predicate triple pattern over it to that predicate's bucket
+  * ([[bucketOf]]): the scan opens one `predBucket=` directory, not all.
   *
   * Scale notes (100 TB / 1000 executors):
   * - detection is a narrow map over the scan — predicate + column pruning
@@ -260,7 +263,8 @@ object Pipeline extends Serializable {
 
   /** Predicate-bucketed graph materialization: co-locates quads of one
     * predicate family, sorted for run-length-friendly encoding and
-    * pushdown-able reads at 100 TB (SURVEY.md §2.10).
+    * pushdown-able reads at 100 TB (SURVEY.md §2.10). Marks the graph
+    * with its bucket count ([[CorpusIO.markBuckets]]) after the write.
     */
   def writePartitioned(quadsDf: DataFrame, outDir: String, buckets: Int = 64): Unit = {
     val (bucketed, key) = withBucketKey(quadsDf, buckets)
@@ -270,18 +274,43 @@ object Pipeline extends Serializable {
       .write.mode("overwrite")
       .partitionBy("predBucket")
       .parquet(outDir)
+    CorpusIO.markBuckets(quadsDf.sparkSession, outDir, buckets)
   }
 
-  /** Adds `predBucket` (hash of `pred` mod `buckets`) to `df` and returns
-    * it with the dedup/write exchange key; [[bucketSorted]] states the
-    * salt rule.
+  /** The bucket of a predicate column: `pmod(hash(pred), buckets)`. */
+  private def bucketCol(pred: Column, buckets: Int): Column = pmod(hash(pred), lit(buckets))
+
+  /** The bucket every writer here stores predicate `pred` under:
+    * [[bucketCol]] itself, evaluated on the driver, so a reader pruning a
+    * constant-predicate scan to this bucket cannot drift from the write.
+    */
+  def bucketOf(pred: String, buckets: Int): Int =
+    org.apache.spark.sql.GraftInternal.evalConstant(bucketCol(lit(pred), buckets))
+      .asInstanceOf[Int]
+
+  /** Metadata key of the `predBucket` column holding its bucket count. */
+  private val BucketsKey = "graft.predBuckets"
+
+  /** The bucket count `df`'s `predBucket` column was computed with
+    * ([[withBucketKey]] records it in the column's metadata); `None` for a
+    * column of unknown origin, e.g. one read back from a written graph.
+    */
+  private[spark] def predBuckets(df: DataFrame): Option[Int] =
+    df.schema.find(_.name == "predBucket").map(_.metadata)
+      .filter(_.contains(BucketsKey)).map(_.getLong(BucketsKey).toInt)
+
+  /** Adds `predBucket` ([[bucketCol]]) to `df`, its bucket count in the
+    * column's metadata ([[predBuckets]]), and returns it with the
+    * dedup/write exchange key; [[bucketSorted]] states the salt rule.
     */
   private def withBucketKey(df: DataFrame, buckets: Int): (DataFrame, Seq[Column]) = {
     val salts = subjectSalts(df.sparkSession, buckets)
     val key =
       if (salts == 1) Seq(col("predBucket"))
       else Seq(col("predBucket"), pmod(hash(col("subj")), lit(salts)))
-    (df.withColumn("predBucket", pmod(hash(col("pred")), lit(buckets))), key)
+    val meta = new org.apache.spark.sql.types.MetadataBuilder().putLong(BucketsKey, buckets).build()
+    (df.withColumn("predBucket", bucketCol(col("pred"), buckets))
+      .withMetadata("predBucket", meta), key)
   }
 
   /** Subject salts of the dedup/write exchange key: 1 when

@@ -59,16 +59,6 @@ final case class ErrorRow(
     errorCode: String,
     message: String)
 
-/** Per-partition lineage record emitted by the transform stage. */
-final case class LineageRow(
-    stage: String,
-    partitionId: Int,
-    rowsIn: Long,
-    docsOk: Long,
-    docsFailed: Long,
-    quadsOut: Long,
-    wallMillis: Long)
-
 object Schemas {
   import org.apache.spark.sql.types._
 

@@ -1,7 +1,13 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{DataFrame => ClassicDataFrame, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, DataFrame => ClassicDataFrame,
+  Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.IntegerType
 
 /** Zero-copy escape hatch: run an Iterator[InternalRow] transform over a
   * DataFrame's Tungsten rows WITHOUT the Row-encoder boundary.
@@ -134,4 +140,69 @@ object GraftInternal {
     */
   def waitListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** Evaluate a constant column — literals under built-in functions — on
+    * the driver, without a session or a job. No type coercion runs: the
+    * arguments must already have the types their functions take.
+    */
+  def evalConstant(c: Column): Any =
+    ColumnNodeToExpressionConverter(c.node).transformUp {
+      case f: UnresolvedFunction =>
+        FunctionRegistry.builtin.lookupFunction(FunctionIdentifier(f.nameParts.last), f.arguments)
+    }.eval()
+
+  /** Pruning of constant-predicate scans of `df` to their `predBucket`
+    * partitions, when `df` reads a predicate-bucketed file graph: `df` is
+    * a chain of deterministic Projects and Filters over ONE file relation
+    * with a single root path and an integer `predBucket` partition
+    * column, the `pred` column of `df` is that relation's own attribute
+    * (not a rename or a computed value), and no node of the chain is
+    * cached (pruning below a cached node would bypass the cache).
+    *
+    * Returns the graph's root path and a function giving `df` read from
+    * only the partitions `predBucket IN (buckets)`: the filter goes
+    * directly above the file relation, so the scan lists it as a
+    * partition filter and opens only those directories. `None` for any
+    * other `df`. The plan is walked once, however many patterns prune.
+    */
+  def predBucketPruner(df: DataFrame): Option[(String, Seq[Int] => DataFrame)] = {
+    val classic = df.asInstanceOf[ClassicDataFrame]
+    val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
+    val plan = classic.queryExecution.analyzed
+    def leaf(p: LogicalPlan, chain: List[LogicalPlan]): Option[(LogicalRelation, List[LogicalPlan])] =
+      p match {
+        case Project(_, child) if p.expressions.forall(_.deterministic) => leaf(child, p :: chain)
+        case Filter(_, child) if p.expressions.forall(_.deterministic) => leaf(child, p :: chain)
+        case r: LogicalRelation => Some((r, r :: chain))
+        case _ => None
+      }
+    val resolver = spark.sessionState.conf.resolver
+    def named(attrs: Seq[AttributeReference], name: String) = attrs.filter(a => resolver(a.name, name))
+    leaf(plan, Nil).flatMap { case (rel, chain) =>
+      rel.relation match {
+        case fs: HadoopFsRelation if fs.location.rootPaths.size == 1 =>
+          val pred = named(rel.output, "pred")
+          val bucket = named(rel.output, "predBucket")
+          val dfPred = plan.output.filter(a => resolver(a.name, "pred"))
+          val cached = !spark.sharedState.cacheManager.isEmpty &&
+            chain.exists(n => spark.sharedState.cacheManager.lookupCachedData(spark, n).isDefined)
+          if (pred.size == 1 && bucket.size == 1 && dfPred.size == 1 &&
+              dfPred.head.exprId == pred.head.exprId &&
+              fs.partitionSchema.fieldNames.exists(resolver(_, "predBucket")) &&
+              bucket.head.dataType == IntegerType && !cached) {
+            val prune = (buckets: Seq[Int]) => {
+              val pruned = plan.transformUp {
+                case r: LogicalRelation if r eq rel => Filter(In(bucket.head, buckets.map(Literal(_))), r)
+              }
+              // an analyzed plan with one resolved, well-typed filter added:
+              // the analyzer has nothing to do, so it is told to skip the plan
+              pruned.setAnalyzed()
+              ClassicDataset.ofRows(spark, pruned): DataFrame
+            }
+            Some((fs.location.rootPaths.head.toString, prune))
+          } else None
+        case _ => None
+      }
+    }
+  }
 }

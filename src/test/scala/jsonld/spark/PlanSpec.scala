@@ -168,6 +168,47 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.collect().length == 50, "pruned scan must still return every match")
   }
 
+  test("a constant-predicate query over a marked bucketed graph scans only that predicate's bucket") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import graft.ops.GraphOps
+    val preds = (0 until 6).map(i => s"urn:p:$i")
+    val rows = (0 until 120).map(i =>
+      QuadRow(s"d$i", s"urn:s:${i % 30}", preds(i % 6), s"o$i", 1.toByte, "", "", ""))
+    val q = spark.createDataset(rows)(Encoders.product[QuadRow])
+    val dir = java.nio.file.Files.createTempDirectory("pruned-graph").resolve("g")
+    CorpusIO.writeTriples(Pipeline.dedupForWrite(q, buckets = 8), dir.toString, buckets = 8)
+    // read back as a query client does: the bucket column is not selected
+    val graph = spark.read.parquet(dir.toString)
+      .select(col("subj"), col("pred"), col("obj"), col("objDatatype").as("dt"))
+    def partFiles(d: java.nio.file.Path): Long = {
+      val s = java.nio.file.Files.walk(d)
+      try s.filter(_.getFileName.toString.startsWith("part-")).count() finally s.close()
+    }
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case other => other.children.flatMap(scans)
+    }
+    val constQ = GraphOps.query(graph, "SELECT ?s ?o WHERE { ?s <urn:p:1> ?o }")
+    assert(constQ.collect().length == 20)
+    val cs = scans(constQ.queryExecution.executedPlan)
+    assert(cs.size == 1 && cs.head.partitionFilters.nonEmpty,
+      s"constant predicate not pruned to its bucket:\n${constQ.queryExecution.executedPlan}")
+    val bucketDir = dir.resolve(s"predBucket=${Pipeline.bucketOf("urn:p:1", 8)}")
+    assert(cs.head.metrics("numFiles").value == partFiles(bucketDir),
+      s"scan opened files outside $bucketDir")
+    // a variable predicate can match any bucket: it still reads them all
+    val varQ = GraphOps.query(graph, "SELECT ?p ?o WHERE { <urn:s:1> ?p ?o }")
+    assert(varQ.collect().length == 4)
+    val vs = scans(varQ.queryExecution.executedPlan)
+    assert(vs.size == 1 && vs.head.partitionFilters.isEmpty &&
+      vs.head.metrics("numFiles").value == partFiles(dir),
+      s"variable predicate must scan every bucket:\n${varQ.queryExecution.executedPlan}")
+  }
+
   test("gated graph queries read the cached triple table, not the dimension parquet per leg") {
     // kgTriples is memoized + cached: every BGP leg of kg_bgp_chain must
     // scan the InMemoryRelation — zero parquet scans of nation/customer
