@@ -346,17 +346,15 @@ object SparkEntry {
   /** 4-pattern BGP chain: customers → nation → region named "ASIA", plus
     * the nation's literal name — grouped to customer counts per nation.
     */
-  def kgBgpChain(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
-    bgp(kgTriples(spark, dir), Seq(
-      TriplePattern(Var("cust"), Const("urn:dm:customer#ref-c_nationkey"), Var("nation")),
-      TriplePattern(Var("nation"), Const("urn:dm:nation#ref-n_regionkey"), Var("region")),
-      TriplePattern(Var("region"), Const("urn:dm:region#r_name"), Const("ASIA")),
-      TriplePattern(Var("nation"), Const("urn:dm:nation#n_name"), Var("nation_name"))))
+  def kgBgpChain(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.select(kgTriples(spark, dir),
+      """?cust <urn:dm:customer#ref-c_nationkey> ?nation .
+        |?nation <urn:dm:nation#ref-n_regionkey> ?region .
+        |?region <urn:dm:region#r_name> "ASIA" .
+        |?nation <urn:dm:nation#n_name> ?nation_name""".stripMargin)
       .groupBy(col("nation"), col("nation_name"))
       .agg(count(lit(1)).as("n_customers"))
       .orderBy("nation")
-  }
 
   /** Transitive closure (iterative doubling) over the deterministic
     * binary-tree parent edges doc_id → doc_id div 2: per-document ancestor
@@ -390,11 +388,9 @@ object SparkEntry {
     * counted per source — two patterns sharing the document variable.
     */
   def jsonldBgpSources(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
     val (pipe, _) = runPipeline(spark, Corpus.corpusFlat(spark, dir))
-    bgp(pipelineQuadsDf(pipe), Seq(
-      TriplePattern(Var("doc"), Const(s"${V}lang"), Const("en")),
-      TriplePattern(Var("doc"), Const(s"${V}source"), Var("src"))))
+    GraphOps.select(pipelineQuadsDf(pipe),
+      s"""?doc <${V}lang> "en" . ?doc <${V}source> ?src""")
       .groupBy(col("src"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("src")
@@ -1145,17 +1141,13 @@ object SparkEntry {
   /** OPTIONAL BGP: every nation (required pattern) with its supplier
     * count — nations without suppliers survive the left join with 0.
     */
-  def kgBgpOptional(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
-    bgpOptional(kgTriples(spark, dir),
-      required = Seq(
-        TriplePattern(Var("nation"), Const("urn:dm:nation#ref-n_regionkey"), Var("region"))),
-      optional = Seq(Seq(
-        TriplePattern(Var("supp"), Const("urn:dm:supplier#ref-s_nationkey"), Var("nation")))))
+  def kgBgpOptional(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.select(kgTriples(spark, dir),
+      """?nation <urn:dm:nation#ref-n_regionkey> ?region .
+        |OPTIONAL { ?supp <urn:dm:supplier#ref-s_nationkey> ?nation }""".stripMargin)
       .groupBy(col("nation"))
       .agg(count(col("supp")).as("n_suppliers"))
       .orderBy("nation")
-  }
 
   def sampleStratified(spark: SparkSession, dir: String): DataFrame =
     SampleOps.stratifiedSample(t(spark, dir, "documents"), col("lang"), col("doc_id"),
@@ -1167,15 +1159,13 @@ object SparkEntry {
   /** Star BGP: suppliers and customers sharing a nation — pair counts per
     * nation node.
     */
-  def kgBgpStar(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
-    bgp(kgTriples(spark, dir), Seq(
-      TriplePattern(Var("supp"), Const("urn:dm:supplier#ref-s_nationkey"), Var("nation")),
-      TriplePattern(Var("cust"), Const("urn:dm:customer#ref-c_nationkey"), Var("nation"))))
+  def kgBgpStar(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.select(kgTriples(spark, dir),
+      """?supp <urn:dm:supplier#ref-s_nationkey> ?nation .
+        |?cust <urn:dm:customer#ref-c_nationkey> ?nation""".stripMargin)
       .groupBy(col("nation"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("nation")
-  }
 
   /** Named-graph KG: the Direct-Mapped triples with a `graph` column —
     * nation triples land in a per-region graph (`urn:g:region/<rk>`),
@@ -1205,18 +1195,17 @@ object SparkEntry {
     * that ignored the graph term would return |nations|²).
     */
   def kgGraphPatterns(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
     val quads = kgNamedGraphQuads(spark, dir)
-    val constG = bgpQuads(quads, Seq(
-      (Const("urn:g:meta"), TriplePattern(Var("r"), Const("urn:dm:region#r_name"), Var("name")))))
-      .agg(count(lit(1)).as("n")).select(lit("const_graph").as("part"), col("n"))
-    val defaultG = bgpQuads(quads, Seq(
-      (Const(""), TriplePattern(Var("c"), Const("urn:dm:customer#ref-c_nationkey"), Var("n")))))
-      .agg(count(lit(1)).as("n")).select(lit("default_graph").as("part"), col("n"))
-    val varJoin = bgpQuads(quads, Seq(
-      (Var("g"), TriplePattern(Var("a"), Const("urn:dm:nation#n_name"), Var("an"))),
-      (Var("g"), TriplePattern(Var("b"), Const("urn:dm:nation#ref-n_regionkey"), Var("rg")))))
-      .agg(count(lit(1)).as("n")).select(lit("graph_var_join").as("part"), col("n"))
+    def part(name: String, text: String): DataFrame =
+      GraphOps.select(quads, text)
+        .agg(count(lit(1)).as("n")).select(lit(name).as("part"), col("n"))
+    val constG = part("const_graph",
+      "GRAPH <urn:g:meta> { ?r <urn:dm:region#r_name> ?name }")
+    val defaultG = part("default_graph",
+      """GRAPH "" { ?c <urn:dm:customer#ref-c_nationkey> ?n }""")
+    val varJoin = part("graph_var_join",
+      """GRAPH ?g { ?a <urn:dm:nation#n_name> ?an .
+        |  ?b <urn:dm:nation#ref-n_regionkey> ?rg }""".stripMargin)
     constG.unionByName(defaultG).unionByName(varJoin).orderBy("part")
   }
 
@@ -1266,27 +1255,24 @@ object SparkEntry {
     * region key ≥ 2 (numeric — lexical compare would misplace "10"),
     * minus one by name (string).
     */
-  def kgBgpFilter(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
-    bgpQuery(kgTriples(spark, dir), parseQuery(
+  def kgBgpFilter(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.select(kgTriples(spark, dir),
       """?n <urn:dm:nation#n_regionkey> ?rk . ?n <urn:dm:nation#n_name> ?name .
-        |FILTER(?rk >= 2) . FILTER(?name != "CHINA")""".stripMargin))
+        |FILTER(?rk >= 2) . FILTER(?name != "CHINA")""".stripMargin)
       .select(col("n").as("nation"), col("name"), col("rk"))
       .orderBy("nation")
-  }
 
   /** UNION of pattern groups: suppliers ∪ customers per nation — members
     * counted per nation node across both branches.
     */
-  def kgBgpUnion(spark: SparkSession, dir: String): DataFrame = {
-    import GraphOps._
-    bgpUnion(kgTriples(spark, dir), Seq(
-      Seq(TriplePattern(Var("m"), Const("urn:dm:supplier#ref-s_nationkey"), Var("n"))),
-      Seq(TriplePattern(Var("m"), Const("urn:dm:customer#ref-c_nationkey"), Var("n")))))
+  def kgBgpUnion(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.select(kgTriples(spark, dir),
+      """{ ?m <urn:dm:supplier#ref-s_nationkey> ?n }
+        |UNION
+        |{ ?m <urn:dm:customer#ref-c_nationkey> ?n }""".stripMargin)
       .groupBy(col("n").as("nation"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy("nation")
-  }
 
   /** The composed text-query surface end-to-end: one `select()` string
     * with UNION branches and a FILTER, compiled onto the cached KG —

@@ -17,12 +17,16 @@ import org.apache.spark.sql.types._
   *    struct array: one scan, no shuffle, fully codegen'd. At 100 TB this
   *    is the bulk-ingest path from warehouse tables into the KG.
   *
-  *  - '''Basic graph patterns''' (the SPARQL BGP core): a pattern list
-  *    compiles to filtered projections of the triple table joined on
-  *    shared variables. Constant terms become pushable predicates (they
-  *    reach the parquet scan of a predicate-bucketed triple table), and
-  *    join sizing is left to Catalyst/AQE — selective patterns broadcast,
-  *    large ones shuffle on the shared variable.
+  *  - '''SPARQL''' over the quad table, entered as query text only:
+  *    [[select]], [[query]] (dispatches on the query form),
+  *    [[constructQuery]], [[askQuery]], [[describeQuery]], and the
+  *    functional updates [[updateQuery]] / [[updateQuadsQuery]]. One
+  *    compiler turns each basic graph pattern into filtered projections
+  *    of the triple table joined on shared variables. Constant terms
+  *    become pushable predicates (they reach the parquet scan of a
+  *    predicate-bucketed triple table), and join sizing is left to
+  *    Catalyst/AQE — selective patterns broadcast, large ones shuffle on
+  *    the shared variable.
   *
   *  - '''Graph statistics''': predicate histogram and per-node
   *    in/out-degrees — single hash aggregations (map-side partials), the
@@ -141,26 +145,6 @@ object GraphOps {
         col("po.dt").as("dt"))
       .filter(col("obj").isNotNull)
 
-  /** Compile a basic graph pattern to a join plan over a (subj, pred, obj[,
-    * dt]) triple table. Each pattern becomes a filtered projection (constant
-    * terms → equality predicates, pushable to the scan; repeated variables
-    * within a pattern → self-equality filters); patterns then fold into
-    * inner joins on their shared variables, left to right — order patterns
-    * selective-first, exactly as a SPARQL engine's join-order heuristic
-    * would. Catalyst/AQE picks broadcast vs shuffle per join from actual
-    * sizes. Output: one column per distinct variable.
-    *
-    * Patterns with no shared variable with the accumulated prefix form a
-    * cartesian product (valid SPARQL, rarely intended) — allowed, but the
-    * caller sees it in the plan.
-    */
-  def bgp(quads: DataFrame, patterns: Seq[TriplePattern],
-          trackDt: Boolean = false): DataFrame = {
-    require(patterns.nonEmpty, "empty basic graph pattern")
-    compilePatterns(quads,
-      patterns.map(p => Seq("subj" -> p.s, "pred" -> p.p, "obj" -> p.o)), trackDt)
-  }
-
   /** Companion-column suffix for tracked datatypes: an object-position
     * variable `?v` compiled with `trackDt` carries `v__dt` alongside —
     * the term-introspection filters (DATATYPE / isIRI / isLiteral /
@@ -169,14 +153,26 @@ object GraphOps {
     */
   private val DtSuffix = "__dt"
 
-  /** Shared pattern→join compiler behind [[bgp]] and [[bgpQuads]]: each
-    * pattern is a (column, term) list — constants become equality filters,
-    * repeated variables become self-equality filters, variables project —
-    * and patterns fold into joins on shared variable names. With
-    * `trackDt`, object-position variables also project their quad's `dt`
-    * column as `v__dt` (two patterns binding the same object variable
-    * join on it too — same term, same datatype, so the extra key never
-    * changes the solution set).
+  /** The one basic-graph-pattern compiler, to a join plan over a (subj,
+    * pred, obj, dt[, graph]) quad table. Each pattern becomes a filtered
+    * projection of the table (constant terms → equality predicates,
+    * pushable to the scan; repeated variables within a pattern →
+    * self-equality filters; variables project); patterns then fold into
+    * inner joins on their shared variables, left to right — the query's
+    * textual order is the join order. Catalyst/AQE picks broadcast vs
+    * shuffle per join from actual sizes. Output: one column per distinct
+    * variable. A pattern with no shared variable with the accumulated
+    * prefix forms a cartesian product (valid SPARQL, rarely intended) —
+    * allowed, but visible in the plan.
+    *
+    * A `Some(term)` graph constrains its pattern's `graph` column — a
+    * constant selects one graph (`""` is the default graph, this
+    * engine's pipeline convention), a variable binds per quad and joins
+    * like any other; `None` matches quads in any graph. With `trackDt`,
+    * object-position variables also project their quad's `dt` column as
+    * `v__dt` (two patterns binding the same object variable join on it
+    * too — same term, same datatype, so the extra key never changes the
+    * solution set).
     *
     * Bucket pruning: over a predicate-bucketed parquet graph marked with
     * its bucket count (`CorpusIO.markBuckets`), a pattern whose predicate
@@ -189,8 +185,9 @@ object GraphOps {
     * pattern has a constant predicate.
     */
   private def compilePatterns(quads: DataFrame,
-                              patterns: Seq[Seq[(String, Term)]],
-                              trackDt: Boolean = false): DataFrame = {
+                              patterns: Seq[(Option[Term], TriplePattern)],
+                              trackDt: Boolean): DataFrame = {
+    require(patterns.nonEmpty, "empty basic graph pattern")
     // (bucket count, pruning function) of the marked graph `quads` reads
     lazy val pruner: Option[(Int, Seq[Int] => DataFrame)] =
       org.apache.spark.sql.GraftInternal.predBucketPruner(quads).flatMap { case (root, prune) =>
@@ -226,10 +223,24 @@ object GraphOps {
       if (proj.isEmpty) base.select(lit(1).as("__matched")).limit(1)
       else base.select(proj: _*)
     }
-    patterns.map(one).reduce { (acc, next) =>
-      val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq.sorted
-      if (shared.isEmpty) acc.crossJoin(next) else acc.join(next, shared)
-    }
+    patterns.map { case (g, p) =>
+      one(Seq("subj" -> p.s, "pred" -> p.p, "obj" -> p.o) ++ g.map("graph" -> _))
+    }.reduce(joinOnShared(_, _))
+  }
+
+  /** Join `right` onto `left` on their shared variables with join type
+    * `how` — the one shared-variable join of the compiler (patterns,
+    * sub-selects, OPTIONAL / MINUS / EXISTS / NOT EXISTS groups). With no
+    * shared variable, an empty `anchored` allows a cartesian product
+    * (plain patterns); otherwise the group it names must share one and
+    * the call raises (an unanchored OPTIONAL or MINUS is almost
+    * certainly a bug, rejected rather than guessed).
+    */
+  private def joinOnShared(left: DataFrame, right: DataFrame, how: String = "inner",
+                           anchored: String = ""): DataFrame = {
+    val shared = left.columns.toSet.intersect(right.columns.toSet).toSeq.sorted
+    require(shared.nonEmpty || anchored.isEmpty, s"$anchored shares no variable with its branch")
+    if (shared.isEmpty) left.crossJoin(right) else left.join(right, shared, how)
   }
 
   /** Parse a terse SPARQL-style basic-graph-pattern block into
@@ -240,15 +251,14 @@ object GraphOps {
     * literal like `"one . two"` never splits a pattern).
     *
     * Predicate position additionally accepts SPARQL property-path terse
-    * forms: `<p>+` / `<p>*` (compiled against the virtual closure
-    * triples of [[withPathClosure]]/[[withPathStarClosure]] — [[select]]
-    * bridges them automatically) and sequences `<a>/<b>` (each segment
-    * optionally `+`/`*`-suffixed), which expand to a chain of patterns
-    * through fresh internal variables (dropped from [[select]] output).
-    * Deliberately tiny — the compile target is
-    * [[bgp]]/[[bgpOptional]]/[[construct]], not a full SPARQL grammar.
+    * forms: `<p>+` / `<p>*` / `<p>?` (compiled against the virtual
+    * closure triples [[bridgePaths]] adds) and sequences `<a>/<b>` (each
+    * segment optionally `+`/`*`-suffixed), which expand to a chain of
+    * patterns through fresh internal variables (dropped from [[select]]
+    * output). Deliberately tiny — the compile target is the pattern
+    * compiler and CONSTRUCT templates, not a full SPARQL grammar.
     */
-  def parsePatterns(block: String): Seq[TriplePattern] = {
+  private[ops] def parsePatterns(block: String): Seq[TriplePattern] = {
     val termRe = """"[^"]*"|\S+""".r
     val toks = termRe.findAllIn(block).toSeq
     // split the token stream on standalone "." separators (a quoted " . "
@@ -299,8 +309,7 @@ object GraphOps {
 
   /** One path segment (after any `^` strip): `<iri>` / `?var` / quoted
     * literal, the closure forms `<iri>+` / `<iri>*` / `<iri>?` (virtual
-    * closure predicates — the naming contract of [[withPathClosure]] /
-    * [[withPathStarClosure]] / [[withPathOptClosure]]), or an
+    * closure predicates — the naming contract of [[bridgePaths]]), or an
     * alternation `<a>|<b>` of PLAIN IRIs (closure suffixes inside an
     * alternation are rejected, not guessed).
     */
@@ -338,7 +347,7 @@ object GraphOps {
   }
 
   /** One term: `?var`, `<iri>`, or a double-quoted literal. */
-  def parseTerm(t: String): Term =
+  private[ops] def parseTerm(t: String): Term =
     if (t.startsWith("?") && t.length > 1) Var(t.drop(1))
     else if (t.startsWith("<") && t.endsWith(">") && t.length > 2)
       Const(t.drop(1).dropRight(1))
@@ -992,7 +1001,7 @@ object GraphOps {
   /** Parse one FILTER/HAVING expression body (the text between the
     * outer parens) into a [[Constraint]]; raises on trailing tokens.
     */
-  def parseFilterExpr(body: String): Constraint = {
+  private[ops] def parseFilterExpr(body: String): Constraint = {
     val p = new ExprParser(tokenizeExpr(body))
     val c = p.parseConstraint()
     require(p.atEnd, s"trailing tokens after FILTER expression: '${p.leftover}'")
@@ -1000,7 +1009,7 @@ object GraphOps {
   }
 
   /** Parse one BIND value expression (the text left of ` AS `). */
-  def parseValueExpr(body: String): ValueExpr = {
+  private[ops] def parseValueExpr(body: String): ValueExpr = {
     val p = new ExprParser(tokenizeExpr(body))
     val e = p.parseValue()
     require(p.atEnd, s"trailing tokens after BIND expression: '${p.leftover}'")
@@ -1072,10 +1081,10 @@ object GraphOps {
     * `FILTER(?v op const)` clauses anywhere in the block (numeric or
     * quoted-string operand). Literal-safe: quoted literals are masked
     * first, so an object literal containing `FILTER(...)` stays data.
-    * Returns the patterns and the parsed filters; compile with
-    * [[bgpFiltered]].
+    * Returns the patterns and the parsed filters — the shape of an
+    * OPTIONAL / MINUS / EXISTS group in [[compileGroup]].
     */
-  def parseQuery(block: String): ParsedQuery = {
+  private[ops] def parseQuery(block: String): ParsedQuery = {
     // mask literals AND IRIs before clause extraction: an IRI like
     // <urn:x/FILTER(y)> must never feed the FILTER scanner
     val (litMasked, lits) = maskLiterals(block)
@@ -1085,42 +1094,14 @@ object GraphOps {
     ParsedQuery(parsePatterns(um(rest)), filters)
   }
 
-  /** [[bgp]] with post-join FILTER constraints: each filter is one
-    * `Column` predicate over the solution bindings. Catalyst pushes a
+  /** Apply FILTER constraints to a solution-bindings frame: each filter
+    * is one `Column` predicate over the bindings. Catalyst pushes a
     * filter that touches a single pattern's variable back below the join
-    * on its own — declaring it post-join keeps SPARQL's semantics (filters
+    * on its own — applying it post-join keeps SPARQL's semantics (filters
     * see the whole solution row) without giving up pushdown.
     */
-  def bgpFiltered(quads: DataFrame, patterns: Seq[TriplePattern],
-                  filters: Seq[Constraint]): DataFrame =
-    applyFilters(bgp(quads, patterns), filters)
-
-  /** Apply FILTER constraints to ANY solution-bindings frame — composes
-    * with [[bgpQuads]]/[[bgpOptional]]/[[bgpUnion]] output just as with
-    * [[bgp]]'s.
-    */
-  def applyFilters(bindings: DataFrame, filters: Seq[Constraint]): DataFrame =
+  private def applyFilters(bindings: DataFrame, filters: Seq[Constraint]): DataFrame =
     filters.foldLeft(bindings)((acc, f) => acc.filter(f.column))
-
-  /** Run a parsed query (patterns + filters) — the one-call form of
-    * `bgpFiltered(quads, q.patterns, q.filters)`.
-    */
-  def bgpQuery(quads: DataFrame, q: ParsedQuery): DataFrame =
-    bgpFiltered(quads, q.patterns, q.filters)
-
-  /** BGP over a quad table with a MIX of graph-constrained and
-    * graph-agnostic patterns: a `Some(term)` graph constrains that
-    * pattern's quads (constant or variable, as in [[bgpQuads]]); `None`
-    * matches quads in ANY graph — SPARQL's default-scope pattern inside
-    * a query that also uses GRAPH blocks.
-    */
-  def bgpMixed(quads: DataFrame, patterns: Seq[(Option[Term], TriplePattern)],
-               trackDt: Boolean = false): DataFrame = {
-    require(patterns.nonEmpty, "empty pattern list")
-    compilePatterns(quads, patterns.map { case (g, p) =>
-      Seq("subj" -> p.s, "pred" -> p.p, "obj" -> p.o) ++ g.map("graph" -> _)
-    }, trackDt)
-  }
 
   private val OptionalRe = """(?i)OPTIONAL\s*\{([^{}]*)\}""".r
   private val MinusRe = """(?i)MINUS\s*\{([^{}]*)\}""".r
@@ -1141,7 +1122,7 @@ object GraphOps {
     * be bound by the pattern block (a free VALUES var would be a
     * cartesian — rejected).
     */
-  def bgpValues(bindings: DataFrame, variable: String, values: Seq[String]): DataFrame = {
+  private def bgpValues(bindings: DataFrame, variable: String, values: Seq[String]): DataFrame = {
     require(bindings.columns.contains(variable),
       s"VALUES variable ?$variable is not bound by the pattern block")
     require(values.nonEmpty, s"empty VALUES list for ?$variable")
@@ -1157,8 +1138,8 @@ object GraphOps {
     * the pattern block; every row must carry the full arity (UNDEF is
     * not supported — rejected loudly, not silently null-joined).
     */
-  def bgpValuesMulti(bindings: DataFrame, vars: Seq[String],
-                     rows: Seq[Seq[String]]): DataFrame = {
+  private def bgpValuesMulti(bindings: DataFrame, vars: Seq[String],
+                             rows: Seq[Seq[String]]): DataFrame = {
     require(vars.nonEmpty, "VALUES needs at least one variable")
     vars.foreach(v => require(bindings.columns.contains(v),
       s"VALUES variable ?$v is not bound by the pattern block"))
@@ -1309,9 +1290,11 @@ object GraphOps {
   }
 
   /** `ASK { body }` through the text grammar: one row, one boolean
-    * column `matched`; the body accepts the full pattern surface. Lazy
-    * like [[ask]] (short-circuits at the first solution) — unless the
-    * body uses `+`/`*` paths, whose bridging is eager.
+    * column `matched`; the body accepts the full pattern surface. A
+    * LAZY plan like every other query form — a global aggregate over the
+    * body with a `limit 1` in between, so the scan short-circuits at the
+    * first solution and no job runs until the caller acts on the result
+    * — unless the body uses `+`/`*` paths, whose bridging is eager.
     */
   def askQuery(quads: DataFrame, text0: String): DataFrame = {
     val text = expandPrefixes(text0)
@@ -1329,7 +1312,8 @@ object GraphOps {
   }
 
   /** `DESCRIBE <iri>` through the text grammar — the symmetric concise
-    * bounded description of [[describe]].
+    * bounded description of [[describe]]; `DESCRIBE ?v WHERE { … }`
+    * describes every node the body binds to `?v`.
     */
   def describeQuery(quads: DataFrame, text0: String): DataFrame =
     expandPrefixes(text0).trim match {
@@ -1390,7 +1374,7 @@ object GraphOps {
   private val BaseDeclRe = """(?is)^\s*BASE\s+<([^<>\s]*)>""".r
   private val AbsoluteIriRe = """^[A-Za-z][A-Za-z0-9+.\-]*:""".r
 
-  def expandPrefixes(text: String): String = {
+  private[ops] def expandPrefixes(text: String): String = {
     // prologue: BASE and PREFIX declarations in any interleaving (a
     // PREFIX expansion is NOT base-resolved — per SPARQL, prefix IRIs
     // resolve against the base at declaration; callers here always
@@ -1461,12 +1445,33 @@ object GraphOps {
       c.startsWith(SeqVarPrefix) || (!keepDt && c.endsWith(DtSuffix))).toSeq: _*)
   }
 
-  /** Augment `quads` with the virtual closure triples for every `<p>+` /
-    * `<p>*` path predicate the body mentions (literal-masked scan, so a
-    * literal containing a path lookalike stays data). EAGER: each
-    * closure materializes when this runs — at 100× scale these are
-    * stored, incrementally maintained closure tables and this bridge
-    * compiles against them instead.
+  /** Augment `quads` with the virtual closure triples `(s, "<p>+", o,
+    * "")` / `"<p>*"` / `"<p>?"` for every path predicate the body
+    * mentions (literal-masked scan, so a literal containing a path
+    * lookalike stays data), so a path pattern joins like any other:
+    *
+    *  - `p+` (one-or-more): the [[transitiveClosure]] of the predicate's
+    *    IRI-object edges (literals don't form edges);
+    *  - `p*` (zero-or-more): `p+` plus the identity pair for every node
+    *    incident to a `p` edge — SPARQL's zero-length path over the
+    *    predicate's domain∪range;
+    *  - `p?` (zero-or-one): the edges plus that identity pair — no
+    *    closure iteration, so the plan stays lazy and `p?` is safe on
+    *    any predicate.
+    *
+    * `+` and `*` are EAGER: each closure materializes when this runs,
+    * and, like [[transitiveClosure]], they are meant for hierarchy-shaped
+    * predicates (rdfs:subClassOf, skos:broader, parent trees). At 100×
+    * scale these are stored, incrementally maintained closure tables
+    * ([[updateClosure]]) and this bridge compiles against them instead.
+    *
+    * The closure triples are added by column name whatever columns the
+    * frame has; every column beyond (subj, pred, obj, dt) is null on
+    * them. The closure runs over the edges of every graph at once, and
+    * its triples belong to no graph: a path outside GRAPH blocks matches
+    * them like any other triple, a path inside `GRAPH <g>` or `GRAPH ""`
+    * matches none of them, and one inside `GRAPH ?g` leaves `?g`
+    * unbound (null).
     */
   private def bridgePaths(quads: DataFrame, body: String): DataFrame = {
     val (masked, _) = maskLiterals(body)
@@ -1474,10 +1479,21 @@ object GraphOps {
     // alternation '|' / end) — '<p>?x' is a malformed term, not a path
     val found = "<([^<>\\s]*)>([+*?])(?=[\\s/|]|$)".r.findAllMatchIn(masked)
       .map(m => (m.group(1), m.group(2))).toSeq.distinct
-    found.foldLeft(quads) {
-      case (q, (p, "+")) => withPathClosure(q, p)
-      case (q, (p, "*")) => withPathStarClosure(q, p)
-      case (q, (p, _)) => withPathOptClosure(q, p)
+    found.foldLeft(quads) { case (q, (p, suffix)) =>
+      val edges = q.filter(col("pred") === lit(p) && col("dt") === "")
+        .select(col("subj").as("src"), col("obj").as("dst"))
+      def withIdentity(pairs: DataFrame): DataFrame = {
+        val nodes = edges.select(col("src").as("n"))
+          .union(edges.select(col("dst").as("n"))).distinct()
+        pairs.unionByName(nodes.select(col("n").as("src"), col("n").as("dst"))).distinct()
+      }
+      val pairs = suffix match {
+        case "+" => transitiveClosure(edges)
+        case "*" => withIdentity(transitiveClosure(edges))
+        case _ => withIdentity(edges)
+      }
+      q.unionByName(pairs.select(col("src").as("subj"), lit(p + suffix).as("pred"),
+        col("dst").as("obj"), lit("").as("dt")), allowMissingColumns = true)
     }
   }
 
@@ -1975,11 +1991,6 @@ object GraphOps {
     }
     val mixed = plainPatterns ++ graphPatterns
     val subFrames = subqueries.map(sq => select(rawQuads, um(sq)))
-    def joinShared(acc: DataFrame, next: DataFrame, what: String): DataFrame = {
-      val shared = acc.columns.toSet.intersect(next.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty, s"$what shares no variable with its branch")
-      acc.join(next, shared)
-    }
     require(mixed.nonEmpty || subFrames.nonEmpty,
       s"UNION branch has no patterns: '$group'")
     // without a dataset clause, plain and GRAPH patterns compile over
@@ -1988,53 +1999,31 @@ object GraphOps {
     // shared variables
     val patternBase: Option[DataFrame] =
       if (mixed.isEmpty) None
-      else if (dataset.isEmpty) Some(bgpMixed(quads, mixed, trackDt))
-      else {
-        val parts =
-          (if (plainPatterns.nonEmpty) Seq(bgpMixed(quads, plainPatterns, trackDt)) else Nil) ++
-            (if (graphPatterns.nonEmpty) Seq(bgpMixed(namedBase, graphPatterns, trackDt)) else Nil)
-        Some(parts.reduce { (a, b) =>
-          val shared = a.columns.toSet.intersect(b.columns.toSet).toSeq.sorted
-          if (shared.isEmpty) a.crossJoin(b) else a.join(b, shared)
-        })
-      }
+      else if (dataset.isEmpty) Some(compilePatterns(quads, mixed, trackDt))
+      else Some(Seq(quads -> plainPatterns, namedBase -> graphPatterns)
+        .collect { case (q, ps) if ps.nonEmpty => compilePatterns(q, ps, trackDt) }
+        .reduce(joinOnShared(_, _)))
+    def joinSub(acc: DataFrame, sub: DataFrame) = joinOnShared(acc, sub, anchored = "sub-select")
     val base = patternBase match {
-      case Some(pb) => subFrames.foldLeft(pb)(joinShared(_, _, "sub-select"))
-      case None => subFrames.reduce(joinShared(_, _, "sub-select"))
+      case Some(pb) => subFrames.foldLeft(pb)(joinSub)
+      case None => subFrames.reduce(joinSub)
     }
-    val withOptionals = optionals.foldLeft(base) { (acc, ob) =>
-      val q = parseQuery(ob)
-      val opt = applyFilters(bgp(quads, q.patterns, trackDt), q.filters)
-      val shared = acc.columns.toSet.intersect(opt.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty,
-        s"OPTIONAL group '$ob' shares no variable with its branch")
-      acc.join(opt, shared, "left_outer")
+    // OPTIONAL / MINUS / EXISTS / NOT EXISTS groups: patterns plus their
+    // own FILTERs, joined onto the branch on shared variables
+    val withGroups = Seq(
+      ("OPTIONAL", optionals, "left_outer"),
+      ("MINUS", minusGroups, "left_anti"),
+      ("FILTER EXISTS", existsGroups, "left_semi"),
+      ("FILTER NOT EXISTS", notExistsGroups, "left_anti")
+    ).foldLeft(base) { case (acc0, (keyword, blocks, how)) =>
+      blocks.foldLeft(acc0) { (acc, block) =>
+        val q = parseQuery(block)
+        joinOnShared(acc,
+          applyFilters(compilePatterns(quads, q.patterns.map(None -> _), trackDt), q.filters),
+          how, anchored = s"$keyword group '$block'")
+      }
     }
-    val withMinus = minusGroups.foldLeft(withOptionals) { (acc, mb) =>
-      val q = parseQuery(mb)
-      val m = applyFilters(bgp(quads, q.patterns, trackDt), q.filters)
-      val shared = acc.columns.toSet.intersect(m.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty,
-        s"MINUS group '$mb' shares no variable with its branch")
-      acc.join(m, shared, "left_anti")
-    }
-    val withExists = existsGroups.foldLeft(withMinus) { (acc, eb) =>
-      val q = parseQuery(eb)
-      val e = applyFilters(bgp(quads, q.patterns, trackDt), q.filters)
-      val shared = acc.columns.toSet.intersect(e.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty,
-        s"FILTER EXISTS group '$eb' shares no variable with its branch")
-      acc.join(e, shared, "left_semi")
-    }
-    val withNotExists = notExistsGroups.foldLeft(withExists) { (acc, nb) =>
-      val q = parseQuery(nb)
-      val n = applyFilters(bgp(quads, q.patterns, trackDt), q.filters)
-      val shared = acc.columns.toSet.intersect(n.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty,
-        s"FILTER NOT EXISTS group '$nb' shares no variable with its branch")
-      acc.join(n, shared, "left_anti")
-    }
-    val withValues1 = valuesBlocks.foldLeft(withNotExists) { case (acc, (v, vals)) =>
+    val withValues1 = valuesBlocks.foldLeft(withGroups) { case (acc, (v, vals)) =>
       bgpValues(acc, v, vals)
     }
     val withValues = valuesMultiBlocks.foldLeft(withValues1) { case (acc, (vs, rows)) =>
@@ -2057,27 +2046,14 @@ object GraphOps {
     applyFilters(withBinds, filters)
   }
 
-  /** SPARQL UNION over pattern groups: each group compiles independently
-    * via [[bgp]] and the solution sets union by variable NAME — a variable
-    * bound in one branch but not another is null (unbound) in the rows
-    * from the branch that lacks it, exactly UNION's disjoint-binding
-    * semantics. Bag semantics (no dedup), as in SPARQL; wrap in
-    * `.distinct()` for DISTINCT.
-    */
-  def bgpUnion(quads: DataFrame, groups: Seq[Seq[TriplePattern]]): DataFrame = {
-    require(groups.nonEmpty, "empty UNION")
-    groups.map(g => bgp(quads, g))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-  }
-
   /** SPARQL CONSTRUCT core: instantiate each `template` pattern once per
-    * solution row of `bindings` (a [[bgp]] result) and union into one RDF
-    * graph with set semantics (`distinct` — constructed graphs never hold
-    * duplicate triples). Variables take the binding's value, constants
-    * pass through. Output columns (subj, pred, obj); datatype bookkeeping
-    * is the caller's concern when templates construct literals.
+    * solution row of `bindings` and union into one RDF graph with set
+    * semantics (`distinct` — constructed graphs never hold duplicate
+    * triples). Variables take the binding's value, constants pass
+    * through. Output columns (subj, pred, obj); datatype bookkeeping is
+    * the caller's concern when templates construct literals.
     */
-  def construct(bindings: DataFrame, template: Seq[TriplePattern]): DataFrame = {
+  private def construct(bindings: DataFrame, template: Seq[TriplePattern]): DataFrame = {
     require(template.nonEmpty, "empty CONSTRUCT template")
     def c(t: Term): Column = t match {
       case Var(n) => col(n)
@@ -2091,76 +2067,14 @@ object GraphOps {
       .distinct()
   }
 
-  /** [[bgp]] over a QUAD table (subj, pred, obj, graph): each pattern
-    * carries a graph term — SPARQL's `GRAPH ?g { … }` / `GRAPH <iri> { … }`.
-    * A `Const("")` graph term selects the default graph (this engine's
-    * pipeline convention); a graph VARIABLE binds per-quad and joins like
-    * any other variable. Compilation is identical to [[bgp]] with a
-    * fourth term column.
-    */
-  def bgpQuads(quads: DataFrame, patterns: Seq[(Term, TriplePattern)]): DataFrame = {
-    require(patterns.nonEmpty, "empty quad pattern")
-    compilePatterns(quads, patterns.map { case (g, p) =>
-      Seq("subj" -> p.s, "pred" -> p.p, "obj" -> p.o, "graph" -> g)
-    })
-  }
-
-  /** SPARQL ASK: does the pattern match at all? One row, one boolean
-    * column `matched`. A LAZY plan like every other operator here — a
-    * global aggregate over the BGP with a `limit 1` in between, so the
-    * scan short-circuits at the first solution and no job runs until the
-    * caller acts on the result (round-3 version counted eagerly at
-    * construction — surprising for a DataFrame-returning API).
-    */
-  def ask(quads: DataFrame, patterns: Seq[TriplePattern]): DataFrame =
-    bgp(quads, patterns).limit(1)
-      .select(lit(1).as("one"))
-      .agg((count(col("one")) > 0).as("matched"))
-
   /** SPARQL DESCRIBE (concise bounded description, symmetric flavor):
     * every triple where the node is the subject, plus every triple
     * pointing AT the node (IRI objects only). Two pushable equality
     * filters unioned — no join.
     */
-  def describe(quads: DataFrame, node: String): DataFrame =
+  private def describe(quads: DataFrame, node: String): DataFrame =
     quads.filter(col("subj") === lit(node))
       .unionByName(quads.filter(col("obj") === lit(node) && col("dt") === ""))
-
-  /** [[bgp]] plus SPARQL OPTIONAL semantics: each `optional` pattern
-    * group left-outer-joins onto the required bindings on their shared
-    * variables — required rows survive unmatched with nulls in the
-    * optional-only columns, exactly OPTIONAL's preserve-left contract.
-    * Each group must share ≥ 1 variable with the required block (an
-    * unanchored OPTIONAL would be a cartesian — rejected, not guessed).
-    */
-  def bgpOptional(quads: DataFrame, required: Seq[TriplePattern],
-                  optional: Seq[Seq[TriplePattern]]): DataFrame =
-    optional.foldLeft(bgp(quads, required)) { (acc, group) =>
-      val opt = bgp(quads, group)
-      val shared = acc.columns.toSet.intersect(opt.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty,
-        s"OPTIONAL group ${group.mkString(", ")} shares no variable with the required pattern")
-      acc.join(opt, shared, "left_outer")
-    }
-
-  /** SPARQL MINUS / FILTER NOT EXISTS: remove solutions that have a
-    * compatible solution in a minus group — compiled as a LEFT ANTI join
-    * on the shared variables (hash anti-join: no row explosion, map-side
-    * broadcastable when the minus side is small). The two SPARQL
-    * constructs differ only on empty-shared-domain corner cases; this
-    * implementation requires ≥ 1 shared variable per group (an
-    * unanchored MINUS removes nothing in SPARQL — rejected here as
-    * almost certainly a bug, same policy as [[bgpOptional]]).
-    */
-  def bgpMinus(quads: DataFrame, required: Seq[TriplePattern],
-               minus: Seq[Seq[TriplePattern]]): DataFrame =
-    minus.foldLeft(bgp(quads, required)) { (acc, group) =>
-      val m = bgp(quads, group)
-      val shared = acc.columns.toSet.intersect(m.columns.toSet).toSeq.sorted
-      require(shared.nonEmpty,
-        s"MINUS group ${group.mkString(", ")} shares no variable with the required pattern")
-      acc.join(m, shared, "left_anti")
-    }
 
   /** PageRank over a directed edge list (`src`, `dst`) — node importance
     * for a constructed KG (which entities matter most in the graph). A
@@ -2955,7 +2869,7 @@ object GraphOps {
     * compute the closure of the union WITHOUT re-closing the old edge
     * set — [[closureDelta]] (all the join work, sized by the delta)
     * plus a disjoint append. This is the maintenance operation behind
-    * the closure-table shape [[withPathClosure]] documents for 100×
+    * the closure-table shape [[bridgePaths]] documents for 100×
     * scale: the nightly ingest appends edges, this folds them in.
     *
     * Output: the UPDATED closure (old ∪ new paths), same (src, dst)
@@ -3038,80 +2952,6 @@ object GraphOps {
     // only genuinely new paths: a new edge may connect a pair the old
     // edges already connected
     delta.join(c, Seq("src", "dst"), "left_anti")
-  }
-
-  /** SPARQL property path `p+` (one-or-more): the [[transitiveClosure]]
-    * of the constant-predicate edge set — every (subj, obj) pair
-    * connected by ≥ 1 hop of `pred` (IRI objects only: literals don't
-    * form edges). Output columns (src, dst).
-    *
-    * NOTE: iterative — materializes the closure when CALLED (the closure
-    * loop runs Spark jobs), unlike the lazy single-plan operators here.
-    * Same caveat as [[transitiveClosure]]: intended for hierarchy-shaped
-    * predicates (rdfs:subClassOf, skos:broader, parent trees), where the
-    * closure stays near-linear.
-    */
-  def pathPlus(quads: DataFrame, pred: String, maxIterations: Int = 20): DataFrame =
-    transitiveClosure(
-      quads.filter(col("pred") === lit(pred) && col("dt") === "")
-        .select(col("subj").as("src"), col("obj").as("dst")),
-      maxIterations)
-
-  /** `p*` (zero-or-more): [[pathPlus]] plus the identity pair for every
-    * node incident to a `pred` edge — SPARQL's zero-length path over the
-    * predicate's domain∪range.
-    */
-  def pathStar(quads: DataFrame, pred: String, maxIterations: Int = 20): DataFrame = {
-    val edges = quads.filter(col("pred") === lit(pred) && col("dt") === "")
-      .select(col("subj").as("src"), col("obj").as("dst"))
-    val nodes = edges.select(col("src").as("n"))
-      .union(edges.select(col("dst").as("n"))).distinct()
-    pathPlus(quads, pred, maxIterations)
-      .unionByName(nodes.select(col("n").as("src"), col("n").as("dst")))
-      .distinct()
-  }
-
-  /** Bridge a property path into the BGP compiler: augments the triple
-    * table with VIRTUAL triples `(s, "<pred>+", o, "")` for the closure
-    * of `pred`, so a pattern can say
-    * `TriplePattern(Var("x"), Const(pred + "+"), Var("anc"))` and join
-    * like any other pattern. At 100× scale the closure of a stored
-    * hierarchy predicate would itself be a materialized (incrementally
-    * maintained) table — this constructs exactly that shape.
-    */
-  def withPathClosure(quads: DataFrame, pred: String, maxIterations: Int = 20): DataFrame =
-    quads.unionByName(
-      pathPlus(quads, pred, maxIterations).select(
-        col("src").as("subj"), lit(pred + "+").as("pred"),
-        col("dst").as("obj"), lit("").as("dt")))
-
-  /** [[withPathClosure]] for `p*`: virtual triples `(s, "<pred>*", o, "")`
-    * from [[pathStar]] (closure plus the identity pair over the
-    * predicate's domain∪range), so a pattern can say
-    * `TriplePattern(Var("x"), Const(pred + "*"), Var("anc"))`.
-    */
-  def withPathStarClosure(quads: DataFrame, pred: String, maxIterations: Int = 20): DataFrame =
-    quads.unionByName(
-      pathStar(quads, pred, maxIterations).select(
-        col("src").as("subj"), lit(pred + "*").as("pred"),
-        col("dst").as("obj"), lit("").as("dt")))
-
-  /** Zero-or-one path `p?`: virtual triples `(s, "<pred>?", o, "")` =
-    * the predicate's edges plus the identity pair over its domain∪range.
-    * Unlike `+`/`*` this needs NO closure iteration — the plan stays
-    * lazy (one union + distinct), so `p?` is safe on any predicate, not
-    * just hierarchy-shaped ones.
-    */
-  def withPathOptClosure(quads: DataFrame, pred: String): DataFrame = {
-    val edges = quads.filter(col("pred") === lit(pred) && col("dt") === "")
-      .select(col("subj").as("src"), col("obj").as("dst"))
-    val nodes = edges.select(col("src").as("n"))
-      .union(edges.select(col("dst").as("n"))).distinct()
-    quads.unionByName(
-      edges.unionByName(nodes.select(col("n").as("src"), col("n").as("dst")))
-        .distinct()
-        .select(col("src").as("subj"), lit(pred + "?").as("pred"),
-          col("dst").as("obj"), lit("").as("dt")))
   }
 
   /** Triple count per predicate — the first profiling query over any

@@ -62,10 +62,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("c1", "p:in", "n1", ""), ("c2", "p:in", "n1", ""), ("c3", "p:in", "n2", ""),
       ("n1", "p:of", "r1", ""), ("n2", "p:of", "r2", ""),
       ("r1", "p:name", "ASIA", XsdString), ("r2", "p:name", "EUROPE", XsdString))
-    val got = bgp(kg, Seq(
-      TriplePattern(Var("c"), Const("p:in"), Var("n")),
-      TriplePattern(Var("n"), Const("p:of"), Var("r")),
-      TriplePattern(Var("r"), Const("p:name"), Const("ASIA"))))
+    val got = select(kg, """?c <p:in> ?n . ?n <p:of> ?r . ?r <p:name> "ASIA" """)
       .select("c", "n", "r").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got == Set(("c1", "n1", "r1"), ("c2", "n1", "r1")))
@@ -73,14 +70,14 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bgp: repeated variable inside one pattern compiles to a self-equality filter") {
     val kg = quads(("a", "p:knows", "a", ""), ("a", "p:knows", "b", ""))
-    val got = bgp(kg, Seq(TriplePattern(Var("x"), Const("p:knows"), Var("x"))))
+    val got = select(kg, "?x <p:knows> ?x")
       .collect().map(_.getString(0)).toSeq
     assert(got == Seq("a"))
   }
 
   test("bgp: variable predicate is projected like any other binding") {
     val kg = quads(("s", "p:a", "o1", ""), ("s", "p:b", "o2", ""))
-    val got = bgp(kg, Seq(TriplePattern(Const("s"), Var("p"), Var("o"))))
+    val got = select(kg, "<s> ?p ?o")
       .select("p", "o").orderBy("p").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
     assert(got == Seq(("p:a", "o1"), ("p:b", "o2")))
@@ -89,10 +86,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bgp: shared-variable joins never plan a cartesian product") {
     val kg = quads(
       ("c1", "p:in", "n1", ""), ("n1", "p:of", "r1", ""), ("r1", "p:name", "ASIA", XsdString))
-    val plan = bgp(kg, Seq(
-      TriplePattern(Var("c"), Const("p:in"), Var("n")),
-      TriplePattern(Var("n"), Const("p:of"), Var("r")),
-      TriplePattern(Var("r"), Const("p:name"), Const("ASIA"))))
+    val plan = select(kg, """?c <p:in> ?n . ?n <p:of> ?r . ?r <p:name> "ASIA" """)
       .queryExecution.executedPlan
     def hasCartesian(p: SparkPlan): Boolean =
       p.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec] ||
@@ -129,19 +123,15 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("d1", "p:a", "o9", "", "")) // default graph
       .toDF("subj", "pred", "obj", "dt", "graph")
     // GRAPH <g1> { ?s p:a ?o }
-    val inG1 = bgpQuads(quadTable,
-      Seq((Const("g1"), TriplePattern(Var("s"), Const("p:a"), Var("o")))))
+    val inG1 = select(quadTable, "GRAPH <g1> { ?s <p:a> ?o }")
       .select("s", "o").collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(inG1 == Set(("s1", "o1")))
     // GRAPH "" — the default graph
-    val inDefault = bgpQuads(quadTable,
-      Seq((Const(""), TriplePattern(Var("s"), Const("p:a"), Var("o")))))
+    val inDefault = select(quadTable, """GRAPH "" { ?s <p:a> ?o }""")
       .select("s").collect().map(_.getString(0)).toSet
     assert(inDefault == Set("d1"))
     // GRAPH ?g { ?s p:a ?o . ?s2 p:b ?o } — graph variable joins both patterns
-    val sameGraph = bgpQuads(quadTable, Seq(
-      (Var("g"), TriplePattern(Var("s"), Const("p:a"), Var("o"))),
-      (Var("g"), TriplePattern(Var("s2"), Const("p:b"), Var("o")))))
+    val sameGraph = select(quadTable, "GRAPH ?g { ?s <p:a> ?o . ?s2 <p:b> ?o }")
       .select("g", "s", "s2").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(sameGraph == Set(("g1", "s1", "s2")),
@@ -154,13 +144,13 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("n1", "p:of", "r1", ""),
       ("c1", "p:in", "n1", ""),
       ("x", "p:lit", "n1", XsdString)) // literal that LOOKS like the node — not an edge
-    val hit = GraphOps.ask(kg, Seq(TriplePattern(Var("c"), Const("p:in"), Const("n1"))))
+    val hit = askQuery(kg, "ASK { ?c <p:in> <n1> }")
       .collect()
     assert(hit.length == 1 && hit(0).getBoolean(0))
-    val miss = GraphOps.ask(kg, Seq(TriplePattern(Var("c"), Const("p:in"), Const("n9"))))
+    val miss = askQuery(kg, "ASK { ?c <p:in> <n9> }")
       .collect()
     assert(miss.length == 1 && !miss(0).getBoolean(0))
-    val desc = GraphOps.describe(kg, "n1").collect()
+    val desc = describeQuery(kg, "DESCRIBE <n1>").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(desc == Set(("n1", "p:name"), ("n1", "p:of"), ("c1", "p:in")),
       "describe must include subject triples + IRI in-edges, not literal lookalikes")
@@ -168,13 +158,9 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bgp: constant-only pattern acts as an existence gate") {
     val kg = quads(("s", "p:flag", "on", ""), ("a", "p:x", "b", ""))
-    val withFlag = bgp(kg, Seq(
-      TriplePattern(Const("s"), Const("p:flag"), Const("on")),
-      TriplePattern(Var("x"), Const("p:x"), Var("y"))))
+    val withFlag = select(kg, "<s> <p:flag> <on> . ?x <p:x> ?y")
     assert(withFlag.count() == 1, "existing constant triple must pass bindings through")
-    val withoutFlag = bgp(kg, Seq(
-      TriplePattern(Const("s"), Const("p:flag"), Const("off")),
-      TriplePattern(Var("x"), Const("p:x"), Var("y"))))
+    val withoutFlag = select(kg, "<s> <p:flag> <off> . ?x <p:x> ?y")
     assert(withoutFlag.count() == 0, "absent constant triple must gate out all bindings")
   }
 
@@ -194,10 +180,11 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("construct: template instantiation per binding, set semantics") {
-    val sp = spark; import sp.implicits._
-    val bindings = Seq(("c1", "r1"), ("c2", "r1"), ("c2", "r1")).toDF("cust", "reg")
-    val got = GraphOps.construct(bindings, GraphOps.parsePatterns(
-      "?cust <urn:locatedIn> ?reg . ?reg <urn:hasMember> ?cust"))
+    // the duplicated quad yields the (c2, r1) solution twice
+    val kg = quads(("c1", "p:in", "r1", ""), ("c2", "p:in", "r1", ""), ("c2", "p:in", "r1", ""))
+    val got = constructQuery(kg,
+      """CONSTRUCT { ?cust <urn:locatedIn> ?reg . ?reg <urn:hasMember> ?cust }
+        |WHERE { ?cust <p:in> ?reg }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got == Set(
       ("c1", "urn:locatedIn", "r1"), ("c2", "urn:locatedIn", "r1"),
@@ -208,16 +195,12 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kg = quads(
       ("n1", "p:of", "r1", ""), ("n2", "p:of", "r2", ""),
       ("s1", "p:supp", "n1", ""))
-    val got = bgpOptional(kg,
-      required = Seq(TriplePattern(Var("n"), Const("p:of"), Var("r"))),
-      optional = Seq(Seq(TriplePattern(Var("s"), Const("p:supp"), Var("n")))))
+    val got = select(kg, "?n <p:of> ?r . OPTIONAL { ?s <p:supp> ?n }")
       .select("n", "r", "s").collect()
       .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSet
     assert(got == Set(("n1", "r1", Some("s1")), ("n2", "r2", None)))
     assertThrows[IllegalArgumentException] {
-      bgpOptional(kg,
-        required = Seq(TriplePattern(Var("n"), Const("p:of"), Var("r"))),
-        optional = Seq(Seq(TriplePattern(Var("x"), Const("p:supp"), Var("y")))))
+      select(kg, "?n <p:of> ?r . OPTIONAL { ?x <p:supp> ?y }")
     }
   }
 
@@ -249,7 +232,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val plan = GraphOps.ask(kg, Seq(TriplePattern(Var("s"), Const("p:x"), Var("o"))))
+      val plan = askQuery(kg, "ASK { ?s <p:x> ?o }")
       // deterministic sync: drain the async listener bus instead of
       // sleeping (fixed sleeps made both asserts timing-dependent)
       org.apache.spark.GraftTestAccess.waitListenerBus(spark.sparkContext)
@@ -285,8 +268,8 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("n3", "p:rk", "10", XsdInteger),
       ("n1", "p:name", "ALGERIA", XsdString), ("n2", "p:name", "BRAZIL", XsdString),
       ("n3", "p:name", "CANADA", XsdString))
-    val got = bgpQuery(kg, GraphOps.parseQuery(
-      """?n <p:rk> ?rk . ?n <p:name> ?name . FILTER(?rk >= 2) . FILTER(?name != "CANADA")"""))
+    val got = select(kg,
+      """?n <p:rk> ?rk . ?n <p:name> ?name . FILTER(?rk >= 2) . FILTER(?name != "CANADA")""")
       .select("n").collect().map(_.getString(0)).toSet
     // numeric: "10" ≥ 2 holds (lexical compare would put "10" < "2")
     assert(got == Set("n2"), "n3 is dropped by the string filter, n1 by the numeric one")
@@ -295,10 +278,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("bgpUnion: branch solutions union by name; vars missing in a branch are null") {
     val kg = quads(
       ("s1", "p:supp", "n1", ""), ("c1", "p:cust", "n1", ""), ("c2", "p:cust", "n2", ""))
-    val got = bgpUnion(kg, Seq(
-      Seq(TriplePattern(Var("m"), Const("p:supp"), Var("n"))),
-      Seq(TriplePattern(Var("m"), Const("p:cust"), Var("n")),
-        TriplePattern(Var("m"), Const("p:cust"), Var("n2")))))
+    val got = select(kg, "{ ?m <p:supp> ?n } UNION { ?m <p:cust> ?n . ?m <p:cust> ?n2 }")
       .select("m", "n", "n2").collect()
       .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).toSet
     assert(got == Set(
@@ -311,19 +291,40 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("a", "p:broader", "b", ""), ("b", "p:broader", "c", ""),
       ("b", "p:label", "mid", XsdString), // literal — not an edge
       ("x", "p:other", "y", ""))
-    val plus = GraphOps.pathPlus(kg, "p:broader").collect()
+    def pairs(text: String) = select(kg, text).select("x", "y").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
+    val plus = pairs("?x <p:broader>+ ?y")
     assert(plus == Set(("a", "b"), ("a", "c"), ("b", "c")))
-    val star = GraphOps.pathStar(kg, "p:broader").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
+    val star = pairs("?x <p:broader>* ?y")
     assert(star == plus ++ Set(("a", "a"), ("b", "b"), ("c", "c")))
-    // bridge: ?d <p:broader+> ?anc joins into a BGP like any pattern
-    val got = bgp(GraphOps.withPathClosure(kg, "p:broader"), Seq(
-      TriplePattern(Var("d"), Const("p:broader+"), Var("anc")),
-      TriplePattern(Var("d"), Const("p:label"), Var("lbl"))))
+    // bridge: ?d <p:broader>+ ?anc joins into a BGP like any pattern
+    val got = select(kg, "?d <p:broader>+ ?anc . ?d <p:label> ?lbl")
       .select("d", "anc", "lbl").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(got == Set(("b", "c", "mid")))
+  }
+
+  test("select: '+' / '*' / '?' paths over a frame with a graph column match its 4-column projection") {
+    val sp = spark; import sp.implicits._
+    val quadTable = Seq(
+      ("a", "p:broader", "b", "", "g1"),
+      ("b", "p:broader", "c", "", "g2"),
+      ("b", "p:label", "mid", XsdString, "g1"),
+      ("x", "p:other", "y", "", ""))
+      .toDF("subj", "pred", "obj", "dt", "graph")
+    val triples = quadTable.select("subj", "pred", "obj", "dt")
+    def pairs(df: org.apache.spark.sql.DataFrame, op: String) =
+      query(df, s"SELECT ?x ?y WHERE { ?x <p:broader>$op ?y }").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+    val edges = Set(("a", "b"), ("b", "c"))
+    val identity = Set(("a", "a"), ("b", "b"), ("c", "c"))
+    val expected = Map(
+      "+" -> (edges + (("a", "c"))), "*" -> (edges + (("a", "c")) ++ identity),
+      "?" -> (edges ++ identity))
+    for ((op, want) <- expected) {
+      assert(pairs(triples, op) == want, s"<p:broader>$op over (subj, pred, obj, dt)")
+      assert(pairs(quadTable, op) == want, s"<p:broader>$op over (subj, pred, obj, dt, graph)")
+    }
   }
 
   test("select: composed text query — UNION branches with FILTER and OPTIONAL") {
@@ -370,18 +371,17 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kg = quads(
       ("c1", "p:in", "n1", ""), ("c2", "p:in", "n2", ""), ("c3", "p:in", "n2", ""),
       ("n1", "p:of", "rA", ""))
-    val direct = bgpMinus(kg,
-      required = Seq(TriplePattern(Var("c"), Const("p:in"), Var("n"))),
-      minus = Seq(Seq(TriplePattern(Var("n"), Const("p:of"), Const("rA")))))
-      .select("c").collect().map(_.getString(0)).toSet
-    assert(direct == Set("c2", "c3"), "n1's customers must be anti-joined away")
-    val viaText = select(kg,
+    val minus = select(kg,
       """?c <p:in> ?n . MINUS { ?n <p:of> <rA> }""")
       .select("c").collect().map(_.getString(0)).toSet
-    assert(viaText == direct)
+    assert(minus == Set("c2", "c3"), "n1's customers must be anti-joined away")
+    // with a shared variable, FILTER NOT EXISTS compiles to the same anti-join
+    val notExists = select(kg,
+      """?c <p:in> ?n . FILTER NOT EXISTS { ?n <p:of> <rA> }""")
+      .select("c").collect().map(_.getString(0)).toSet
+    assert(notExists == minus)
     assertThrows[IllegalArgumentException] {
-      bgpMinus(kg, Seq(TriplePattern(Var("c"), Const("p:in"), Var("n"))),
-        Seq(Seq(TriplePattern(Var("x"), Const("p:of"), Var("y")))))
+      select(kg, "?c <p:in> ?n . MINUS { ?x <p:of> ?y }")
     }
   }
 
@@ -459,9 +459,10 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kg = quads(("a", "p:x", "b", ""), ("b", "p:x", "c", ""))
     val viaSelect = select(kg, "?s <p:x> ?o").select("s", "o").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
-    val viaBgp = bgp(kg, Seq(TriplePattern(Var("s"), Const("p:x"), Var("o"))))
-      .select("s", "o").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(viaSelect == viaBgp)
+    assert(viaSelect == Set(("a", "b"), ("b", "c")))
+    val viaHead = select(kg, "SELECT ?s ?o WHERE { ?s <p:x> ?o }").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    assert(viaHead == viaSelect)
     assertThrows[IllegalArgumentException](select(kg, "{ } UNION { ?a <p:x> ?b }"))
   }
 

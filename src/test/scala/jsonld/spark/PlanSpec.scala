@@ -143,7 +143,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BGP over the bucketed triple table prunes partitions and pushes the pred filter") {
-    import graft.ops.GraphOps, GraphOps._
+    import graft.ops.GraphOps
     // materialize a triple table the way the pipeline does: partitioned
     // by predBucket — a constant-predicate BGP pattern must then read
     // only that predicate's bucket (PartitionFilters) and push the pred
@@ -160,7 +160,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("wantBucket", pmod(xxhash64(lit("urn:p1")), lit(8)))
       .filter(col("predBucket") === col("wantBucket"))
       .drop("wantBucket", "predBucket")
-    val df = bgp(table, Seq(TriplePattern(Var("s"), Const("urn:p1"), Var("o"))))
+    val df = GraphOps.select(table, "?s <urn:p1> ?o")
     val p = plan(df)
     assert(p.contains("PartitionFilters") && !p.contains("PartitionFilters: []"),
       s"no partition pruning on the bucketed triple table:\n$p")
