@@ -397,7 +397,7 @@ object SparkEntry {
   }
 
   /** CONSTRUCT through the text grammar (round 5 — previously assembled
-    * via parsePatterns + construct by hand): derive `?cust
+    * from parsed patterns + construct by hand): derive `?cust
     * <urn:dm:locatedIn> ?region` triples for customers in ASIA from ONE
     * query string, same oracle.
     */

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types._
   *  - '''SPARQL''' over the quad table, entered as query text only:
   *    [[select]], [[query]] (dispatches on the query form),
   *    [[constructQuery]], [[askQuery]], [[describeQuery]], and the
-  *    functional updates [[updateQuery]] / [[updateQuadsQuery]]. One
+  *    functional updates [[updateQuery]] / [[updateQuadsQuery]]. The
+  *    text is parsed once into a small algebra ([[Sparql]]); one
   *    compiler turns each basic graph pattern into filtered projections
   *    of the triple table joined on shared variables. Constant terms
   *    become pushable predicates (they reach the parquet scan of a
@@ -243,117 +244,12 @@ object GraphOps {
     if (shared.isEmpty) left.crossJoin(right) else left.join(right, shared, how)
   }
 
-  /** Parse a terse SPARQL-style basic-graph-pattern block into
-    * [[TriplePattern]]s. Patterns are separated by whitespace-surrounded
-    * dots (`?a <p> ?b . ?b <q> "x"`); terms are `?var`, `<iri>`, or a
-    * double-quoted literal (spaces — and standalone dots — allowed inside
-    * quotes: the block is TOKENIZED first, then split on `.` tokens, so a
-    * literal like `"one . two"` never splits a pattern).
-    *
-    * Predicate position additionally accepts SPARQL property-path terse
-    * forms: `<p>+` / `<p>*` / `<p>?` (compiled against the virtual
-    * closure triples [[bridgePaths]] adds) and sequences `<a>/<b>` (each
-    * segment optionally `+`/`*`-suffixed), which expand to a chain of
-    * patterns through fresh internal variables (dropped from [[select]]
-    * output). Deliberately tiny — the compile target is the pattern
-    * compiler and CONSTRUCT templates, not a full SPARQL grammar.
-    */
-  private[ops] def parsePatterns(block: String): Seq[TriplePattern] = {
-    val termRe = """"[^"]*"|\S+""".r
-    val toks = termRe.findAllIn(block).toSeq
-    // split the token stream on standalone "." separators (a quoted " . "
-    // is already one literal token and can't match here)
-    val groups = toks.foldLeft(List(List.empty[String])) { (acc, t) =>
-      if (t == ".") List.empty[String] :: acc else (t :: acc.head) :: acc.tail
-    }.map(_.reverse).reverse.filter(_.nonEmpty)
-    groups.flatMap { p =>
-      require(p.length == 3, s"pattern needs exactly 3 terms: '${p.mkString(" ")}'")
-      expandPredicate(parseTerm(p(0)), p(1), parseTerm(p(2)))
-    }
-  }
-
   /** Internal-variable namespace for path-sequence expansion; [[select]]
-    * drops these columns from its output. Globally unique (atomic
-    * counter): two sequence patterns in DIFFERENT sub-blocks of one
-    * query must never join on an accidentally shared internal name.
+    * drops these columns from its output. The parser numbers them per
+    * parse, so two sequence patterns in different blocks of one query
+    * never join on a shared internal name.
     */
-  private val SeqVarPrefix = "__seq"
-  private val seqCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Expand one parsed (subject, predicate-token, object) into pattern(s):
-    * a sequence token `<a>/<b>+/<c>` becomes a chain through fresh
-    * internal variables; a `^`-prefixed segment (inverse path) swaps that
-    * hop's subject and object; an alternation segment `<a>|<b>` compiles
-    * to a [[ConstIn]] predicate (pushable IN filter). The sequence split
-    * fires only on `/` BETWEEN IRI tokens (after `>`/`>+`/`>*`/`>?`,
-    * before `<` or `^<`) — a `/` inside an IRI like `<urn:dm:nation/1>`
-    * never splits.
-    */
-  private def expandPredicate(s: Term, predToken0: String, o: Term): Seq[TriplePattern] = {
-    // SPARQL's `a` keyword — rdf:type, predicate position only
-    val predToken = if (predToken0 == "a") "<" + RdfTypeIri + ">" else predToken0
-    val segs = predToken.split("(?<=>[+*?]?)/(?=\\^?<)").toSeq
-    def hop(sub: Term, seg: String, obj: Term): TriplePattern =
-      if (seg.startsWith("^")) TriplePattern(obj, parsePathSegment(seg.drop(1)), sub)
-      else TriplePattern(sub, parsePathSegment(seg), obj)
-    if (segs.length == 1) Seq(hop(s, predToken, o))
-    else {
-      val hops = segs.indices.map(i =>
-        if (i == segs.length - 1) o
-        else Var(SeqVarPrefix + seqCounter.getAndIncrement()))
-      segs.zipWithIndex.map { case (seg, i) =>
-        hop(if (i == 0) s else hops(i - 1), seg, hops(i))
-      }
-    }
-  }
-
-  /** One path segment (after any `^` strip): `<iri>` / `?var` / quoted
-    * literal, the closure forms `<iri>+` / `<iri>*` / `<iri>?` (virtual
-    * closure predicates — the naming contract of [[bridgePaths]]), or an
-    * alternation `<a>|<b>` of PLAIN IRIs (closure suffixes inside an
-    * alternation are rejected, not guessed).
-    */
-  private def parsePathSegment(t: String): Term = {
-    // negated property set: `!<p>` or `!(<a>|<b>)` — plain IRIs only
-    if (t.startsWith("!")) {
-      var inner = t.drop(1)
-      if (inner.startsWith("(") && inner.endsWith(")")) inner = inner.drop(1).dropRight(1)
-      val values = inner.split("\\|").toSeq.map { a =>
-        parseTerm(a) match {
-          case Const(v) => v
-          case other => throw new IllegalArgumentException(
-            s"a negated property set needs plain IRIs, got '$a' in '$t'")
-        }
-      }
-      return ConstNotIn(values)
-    }
-    // the lookbehind admits closure suffixes so '<a>+|<b>' SPLITS and the
-    // '<a>+' alternative is then loudly rejected below (without the wider
-    // lookbehind the whole token silently parsed as one bizarre IRI)
-    val alts = t.split("(?<=>[+*?]?)\\|(?=\\^?<)").toSeq
-    if (alts.length > 1) {
-      val values = alts.map { a =>
-        parseTerm(a) match {
-          case Const(v) => v
-          case _ => throw new IllegalArgumentException(
-            s"alternation segments must be plain IRIs, got '$a' in '$t'")
-        }
-      }
-      ConstIn(values)
-    } else if (t.length > 3 && t.startsWith("<") &&
-        (t.endsWith(">+") || t.endsWith(">*") || t.endsWith(">?")))
-      Const(t.substring(1, t.length - 2) + t.last)
-    else parseTerm(t)
-  }
-
-  /** One term: `?var`, `<iri>`, or a double-quoted literal. */
-  private[ops] def parseTerm(t: String): Term =
-    if (t.startsWith("?") && t.length > 1) Var(t.drop(1))
-    else if (t.startsWith("<") && t.endsWith(">") && t.length > 2)
-      Const(t.drop(1).dropRight(1))
-    else if (t.startsWith("\"") && t.endsWith("\"") && t.length >= 2)
-      Const(t.drop(1).dropRight(1))
-    else throw new IllegalArgumentException(s"unrecognized term '$t'")
+  private[ops] val SeqVarPrefix = "__seq"
 
   /** A parsed FILTER constraint — one `Column` predicate over the
     * solution bindings.
@@ -714,385 +610,8 @@ object GraphOps {
     def column: Column = cmp(op, col(a).cast("double"), col(b).cast("double"))
   }
 
-  final case class ParsedQuery(patterns: Seq[TriplePattern], filters: Seq[Constraint])
-
-  // ---------------------------------------- FILTER / BIND expressions
-
-  /** Tokenize a FILTER/BIND expression body: quoted strings and `<iri>`
-    * tokens are atomic; two-char operators (`&& || != <= >=`) bind
-    * before their one-char prefixes; `<` with a matching `>` before any
-    * whitespace is an IRI, otherwise the less-than operator.
-    */
-  private def tokenizeExpr(s: String): IndexedSeq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (c.isWhitespace) i += 1
-      else if (c == '"') {
-        val j = s.indexOf('"', i + 1)
-        require(j >= 0, s"unterminated string literal in '$s'")
-        out += s.substring(i, j + 1); i = j + 1
-      } else if (c == '&' || c == '|') {
-        require(i + 1 < s.length && s(i + 1) == c,
-          s"single '$c' is not an operator — use '$c$c' in '$s'")
-        out += s.substring(i, i + 2); i += 2
-      } else if (c == '!' || c == '>' || c == '=') {
-        if (c != '=' && i + 1 < s.length && s(i + 1) == '=') {
-          out += s.substring(i, i + 2); i += 2
-        } else { out += c.toString; i += 1 }
-      } else if (c == '<') {
-        // IRI iff a '>' closes the token before any whitespace
-        var j = i + 1
-        while (j < s.length && !s(j).isWhitespace && s(j) != '>') j += 1
-        if (j < s.length && s(j) == '>') { out += s.substring(i, j + 1); i = j + 1 }
-        else if (i + 1 < s.length && s(i + 1) == '=') { out += "<="; i += 2 }
-        else { out += "<"; i += 1 }
-      } else if ("()+-*/,".indexOf(c.toInt) >= 0) { out += c.toString; i += 1 }
-      else if (c == '?') {
-        var j = i + 1
-        while (j < s.length && (s(j).isLetterOrDigit || s(j) == '_')) j += 1
-        require(j > i + 1, s"bare '?' in '$s'")
-        out += s.substring(i, j); i = j
-      } else if (c.isDigit) {
-        var j = i
-        while (j < s.length && (s(j).isDigit || s(j) == '.')) j += 1
-        out += s.substring(i, j); i = j
-      } else if (c.isLetter || c == '_') {
-        var j = i
-        while (j < s.length && (s(j).isLetterOrDigit || s(j) == '_')) j += 1
-        out += s.substring(i, j); i = j
-      } else throw new IllegalArgumentException(s"unexpected character '$c' in '$s'")
-    }
-    out.toIndexedSeq
-  }
-
-  /** Recursive-descent parser over [[tokenizeExpr]] output. Constraint
-    * grammar: `||` over `&&` over `!`/parens/atoms; atoms are
-    * comparisons (`expr op expr`), `BOUND(?v)`, or the string tests.
-    * Value grammar: `+ -` over `* /` over unary minus / parens /
-    * variables / numbers / strings / IRIs / `STRLEN` / `STR` / `CONCAT`.
-    */
-  private final class ExprParser(toks: IndexedSeq[String]) {
-    private var pos = 0
-    private def peek: String = if (pos < toks.length) toks(pos) else ""
-    private def next(): String = { val t = peek; pos += 1; t }
-    private def expect(t: String): Unit = {
-      val got = next()
-      require(got == t, s"expected '$t', got '${if (got.isEmpty) "<end>" else got}'")
-    }
-    def atEnd: Boolean = pos >= toks.length
-    def leftover: String = toks.drop(pos).mkString(" ")
-
-    def parseConstraint(): Constraint = {
-      var l = parseAndChain()
-      while (peek == "||") { next(); l = OrC(l, parseAndChain()) }
-      l
-    }
-    private def parseAndChain(): Constraint = {
-      var l = parseUnary()
-      while (peek == "&&") { next(); l = AndC(l, parseUnary()) }
-      l
-    }
-    private def parseUnary(): Constraint =
-      if (peek == "!") { next(); NotC(parseUnary()) }
-      else parseAtom()
-
-    private def parseAtom(): Constraint = {
-      if (peek == "(") {
-        // ambiguous: boolean group '(?a>1 || ?b<2)' vs arithmetic group
-        // '(?a+1) > ?b' — try boolean first, backtrack to a comparison
-        val save = pos
-        try {
-          expect("("); val c = parseConstraint(); expect(")")
-          return c
-        } catch { case _: IllegalArgumentException => pos = save }
-      }
-      peek.toUpperCase match {
-        case "BOUND" =>
-          next(); expect("(")
-          val v = next()
-          require(v.startsWith("?"), s"BOUND needs a ?variable, got '$v'")
-          expect(")")
-          BoundC(v.drop(1))
-        case f @ ("ISIRI" | "ISBLANK" | "ISLITERAL" | "ISNUMERIC") =>
-          next(); expect("(")
-          val v = next()
-          require(v.startsWith("?"), s"$f needs a ?variable, got '$v'")
-          expect(")")
-          TermTest(f, v.drop(1))
-        case "SAMETERM" =>
-          next(); expect("(")
-          val l = parseValue(); expect(",")
-          val r = parseValue(); expect(")")
-          SameTermC(l, r)
-        case "LANGMATCHES" =>
-          next(); expect("(")
-          val tag = parseValue(); expect(",")
-          val range = parseValue(); expect(")")
-          LangMatchesC(tag, range)
-        case f @ ("REGEX" | "STRSTARTS" | "STRENDS" | "CONTAINS") =>
-          next(); expect("(")
-          val target = parseValue(); expect(",")
-          val arg = parseValue()
-          var ignoreCase = false
-          if (peek == ",") { // REGEX flags — only "i" is supported
-            next()
-            val flags = next()
-            require(f == "REGEX" && flags == "\"i\"",
-              s"only the REGEX \"i\" flag is supported, got '$flags' for $f")
-            ignoreCase = true
-          }
-          expect(")")
-          StrTest(f, target, arg, ignoreCase)
-        case _ =>
-          val l = parseValue()
-          val t = peek.toUpperCase
-          if (t == "IN" || t == "NOT") {
-            // SPARQL IN / NOT IN: sugar for an =-chain disjunction, so
-            // each member keeps [[mkCmp]]'s numeric-vs-lexical semantics
-            val negated = t == "NOT"
-            next()
-            if (negated) {
-              val k = next()
-              require(k.equalsIgnoreCase("IN"), s"expected IN after NOT, got '$k'")
-            }
-            expect("(")
-            val vals = scala.collection.mutable.ArrayBuffer(parseValue())
-            while (peek == ",") { next(); vals += parseValue() }
-            expect(")")
-            val anyEq = vals.map(v => mkCmp(l, "=", v): Constraint).reduce(OrC(_, _))
-            if (negated) NotC(anyEq) else anyEq
-          } else {
-            val op = next()
-            require(Set("=", "!=", "<", "<=", ">", ">=").contains(op),
-              s"expected a comparison operator, got '${if (op.isEmpty) "<end>" else op}'")
-            val r = parseValue()
-            mkCmp(l, op, r)
-          }
-      }
-    }
-
-    def parseValue(): ValueExpr = {
-      var l = parseMul()
-      while (peek == "+" || peek == "-") {
-        val op = next().head
-        l = VEArith(op, l, parseMul())
-      }
-      l
-    }
-    private def parseMul(): ValueExpr = {
-      var l = parseFactor()
-      while (peek == "*" || peek == "/") {
-        val op = next().head
-        l = VEArith(op, l, parseFactor())
-      }
-      l
-    }
-    private def parseFactor(): ValueExpr = {
-      val t = peek
-      if (t == "-") { next(); VENeg(parseFactor()) }
-      else if (t == "(") { next(); val e = parseValue(); expect(")"); e }
-      else if (t.startsWith("?")) { next(); VEVar(t.drop(1)) }
-      else if (t.startsWith("\"") && t.endsWith("\"") && t.length >= 2) {
-        next(); VEStr(t.drop(1).dropRight(1))
-      } else if (t.startsWith("<") && t.endsWith(">")) {
-        next(); VEStr(t.drop(1).dropRight(1)) // IRIs compare lexically
-      } else if (t.nonEmpty && t.head.isDigit) {
-        next(); VENum(t.toDouble)
-      } else t.toUpperCase match {
-        case "DATATYPE" =>
-          next(); expect("(")
-          val v = next()
-          require(v.startsWith("?"), s"DATATYPE needs a ?variable, got '$v'")
-          expect(")")
-          VEDatatype(v.drop(1))
-        case "LANG" =>
-          next(); expect("(")
-          val v = next()
-          require(v.startsWith("?"), s"LANG needs a ?variable, got '$v'")
-          expect(")")
-          VELang(v.drop(1))
-        case "STRLEN" => next(); expect("("); val e = parseValue(); expect(")"); VEStrLen(e)
-        case f @ ("ABS" | "ROUND" | "CEIL" | "FLOOR") =>
-          next(); expect("("); val e = parseValue(); expect(")"); VENumFn(f, e)
-        case f @ ("YEAR" | "MONTH" | "DAY" | "HOURS" | "MINUTES" | "SECONDS" | "TZ") =>
-          next(); expect("("); val e = parseValue(); expect(")"); VEDateFn(f, e)
-        case "ENCODE_FOR_URI" =>
-          next(); expect("("); val e = parseValue(); expect(")"); VEEncodeUri(e)
-        case "STRDT" =>
-          next(); expect("(")
-          val e = parseValue(); expect(",")
-          val d = next()
-          require(d.startsWith("<") && d.endsWith(">"),
-            s"STRDT needs an <iri> datatype, got '$d'")
-          expect(")")
-          VEStrDt(e, d.drop(1).dropRight(1))
-        case "STRLANG" =>
-          next(); expect("(")
-          val e = parseValue(); expect(",")
-          val tg = next()
-          require(tg.startsWith("\"") && tg.endsWith("\"") && tg.length > 2,
-            s"STRLANG needs a quoted language tag, got '$tg'")
-          expect(")")
-          VEStrLang(e, tg.drop(1).dropRight(1))
-        case f @ ("MD5" | "SHA256") =>
-          next(); expect("("); val e = parseValue(); expect(")"); VEHash(f, e)
-        case "IRI" | "URI" =>
-          next(); expect("("); val e = parseValue(); expect(")"); VEIri(e)
-        case f @ ("UCASE" | "LCASE") =>
-          next(); expect("("); val e = parseValue(); expect(")"); VECase(f, e)
-        case "SUBSTR" =>
-          next(); expect("(")
-          val e = parseValue(); expect(",")
-          val start = parseValue()
-          val len = if (peek == ",") { next(); Some(parseValue()) } else None
-          expect(")")
-          VESubstr(e, start, len)
-        case "REPLACE" =>
-          next(); expect("(")
-          val e = parseValue(); expect(",")
-          val pat = parseValue(); expect(",")
-          val rep = parseValue(); expect(")")
-          VEReplace(e, pat, rep)
-        case f @ ("STRBEFORE" | "STRAFTER") =>
-          next(); expect("(")
-          val e = parseValue(); expect(",")
-          val d = next()
-          require(d.startsWith("\"") && d.endsWith("\"") && d.length >= 2,
-            s"$f needs a quoted literal delimiter, got '$d'")
-          expect(")")
-          VEStrSplit(f, e, d.drop(1).dropRight(1))
-        case "STR" => next(); expect("("); val e = parseValue(); expect(")"); VEStrCast(e)
-        case "CONCAT" =>
-          next(); expect("(")
-          val args = scala.collection.mutable.ArrayBuffer(parseValue())
-          while (peek == ",") { next(); args += parseValue() }
-          expect(")")
-          VEConcat(args.toSeq)
-        case "IF" =>
-          next(); expect("(")
-          val cond = parseConstraint(); expect(",")
-          val t = parseValue(); expect(",")
-          val f = parseValue(); expect(")")
-          VEIf(cond, t, f)
-        case "COALESCE" =>
-          next(); expect("(")
-          val args = scala.collection.mutable.ArrayBuffer(parseValue())
-          while (peek == ",") { next(); args += parseValue() }
-          expect(")")
-          VECoalesce(args.toSeq)
-        case _ => throw new IllegalArgumentException(
-          s"unrecognized expression token '${if (t.isEmpty) "<end>" else t}'")
-      }
-    }
-  }
-
-  /** Comparison constructor: the simple shapes keep their dedicated
-    * (public, pattern-matchable) classes; everything else generalizes.
-    */
-  private def mkCmp(l: ValueExpr, op: String, r: ValueExpr): Constraint = (l, r) match {
-    case (VEVar(a), VEVar(b)) => VarCompare(a, op, b)
-    case (VEVar(a), VENum(d)) => VarFilter(a, op, Left(d))
-    case (VEVar(a), VEStr(s)) => VarFilter(a, op, Right(s))
-    case _ => ExprCmp(l, op, r)
-  }
-
-  /** Parse one FILTER/HAVING expression body (the text between the
-    * outer parens) into a [[Constraint]]; raises on trailing tokens.
-    */
-  private[ops] def parseFilterExpr(body: String): Constraint = {
-    val p = new ExprParser(tokenizeExpr(body))
-    val c = p.parseConstraint()
-    require(p.atEnd, s"trailing tokens after FILTER expression: '${p.leftover}'")
-    c
-  }
-
-  /** Parse one BIND value expression (the text left of ` AS `). */
-  private[ops] def parseValueExpr(body: String): ValueExpr = {
-    val p = new ExprParser(tokenizeExpr(body))
-    val e = p.parseValue()
-    require(p.atEnd, s"trailing tokens after BIND expression: '${p.leftover}'")
-    e
-  }
-
-  /** Find every `KEYWORD ( … )` clause (balanced parens) in `s`, parse
-    * each body with `parse`, and blank the consumed spans. A `KEYWORD`
-    * not followed by `(` is left in place (e.g. `FILTER EXISTS { … }`,
-    * which [[compileGroup]] extracts separately). Runs on literal-MASKED
-    * text; `um` restores literals before the body parse.
-    */
-  private def extractParenClauses[A](s: String, keyword: String,
-                                     um: String => String,
-                                     parse: String => A): (Seq[A], String) = {
-    val out = scala.collection.mutable.ArrayBuffer[A]()
-    val sb = new StringBuilder(s)
-    val kwRe = s"(?i)\\b$keyword\\b".r
-    for (m <- kwRe.findAllMatchIn(s)) {
-      var i = m.end
-      while (i < s.length && s(i).isWhitespace) i += 1
-      if (i < s.length && s(i) == '(') {
-        var depth = 0
-        var j = i
-        var endIdx = -1
-        while (j < s.length && endIdx < 0) {
-          if (s(j) == '(') depth += 1
-          else if (s(j) == ')') { depth -= 1; if (depth == 0) endIdx = j }
-          j += 1
-        }
-        require(endIdx >= 0, s"unbalanced parens after $keyword in '$s'")
-        out += parse(um(s.substring(i + 1, endIdx)))
-        for (k <- m.start to endIdx) sb.setCharAt(k, ' ')
-      }
-    }
-    (out.toSeq, sb.toString)
-  }
-
-  /** Pull every `FILTER( … )` clause out of `s` — which may be
-    * literal-MASKED text (see `maskLiterals`); `um` restores masked
-    * literals before the expression parse. Returns (filters, remaining
-    * text with the clauses blanked). `FILTER EXISTS`/`FILTER NOT
-    * EXISTS` brace forms are NOT consumed here.
-    */
-  private def extractFilters(s: String,
-                             um: String => String = identity): (Seq[Constraint], String) =
-    extractParenClauses(s, "FILTER", um, parseFilterExpr)
-
   /** A parsed `BIND(expr AS ?alias)` clause. */
   final case class Binding(alias: String, expr: ValueExpr)
-
-  private val AsAliasRe = """(?is)^(.*)\bAS\s+\?(\w+)\s*$""".r
-  private val AsAliasParenRe = """(?is)^\((.*)\bAS\s+\?(\w+)\s*\)$""".r
-
-  /** Pull every `BIND(expr AS ?v)` clause out of masked text. The
-    * ` AS ?alias` split runs on the still-MASKED body (a literal
-    * containing ` AS ?x` can't hijack it); only the expression part is
-    * unmasked, for the tokenizer.
-    */
-  private def extractBinds(s: String,
-                           um: String => String = identity): (Seq[Binding], String) =
-    extractParenClauses(s, "BIND", identity, body => body match {
-      case AsAliasRe(expr, alias) => Binding(alias, parseValueExpr(um(expr)))
-      case _ => throw new IllegalArgumentException(
-        s"BIND needs the form 'BIND(expr AS ?var)', got 'BIND(${um(body)})'")
-    })
-
-  /** [[parsePatterns]] plus SPARQL's most common constraint form:
-    * `FILTER(?v op const)` clauses anywhere in the block (numeric or
-    * quoted-string operand). Literal-safe: quoted literals are masked
-    * first, so an object literal containing `FILTER(...)` stays data.
-    * Returns the patterns and the parsed filters — the shape of an
-    * OPTIONAL / MINUS / EXISTS group in [[compileGroup]].
-    */
-  private[ops] def parseQuery(block: String): ParsedQuery = {
-    // mask literals AND IRIs before clause extraction: an IRI like
-    // <urn:x/FILTER(y)> must never feed the FILTER scanner
-    val (litMasked, lits) = maskLiterals(block)
-    val (masked, iris) = maskIris(litMasked)
-    def um(x: String): String = unmask(unmaskIris(x, iris), lits)
-    val (filters, rest) = extractFilters(masked, um)
-    ParsedQuery(parsePatterns(um(rest)), filters)
-  }
 
   /** Apply FILTER constraints to a solution-bindings frame: each filter
     * is one `Column` predicate over the bindings. Catalyst pushes a
@@ -1103,43 +622,18 @@ object GraphOps {
   private def applyFilters(bindings: DataFrame, filters: Seq[Constraint]): DataFrame =
     filters.foldLeft(bindings)((acc, f) => acc.filter(f.column))
 
-  private val OptionalRe = """(?i)OPTIONAL\s*\{([^{}]*)\}""".r
-  private val MinusRe = """(?i)MINUS\s*\{([^{}]*)\}""".r
-  /** The graph term alternatives include a masked-IRI placeholder —
-    * [[compileGroup]] scans text whose `<…>` IRIs are already opaque
-    * `␂idx␂` tokens.
+  /** SPARQL VALUES: `VALUES ?v { <x> "1" }` or the row form `VALUES
+    * (?a ?b) { (<x> "1") (<y> "2") }` — an inline solution RELATION
+    * inner-joined onto the bindings across all its variables (broadcast:
+    * inline data is driver-literal by construction; for a handful of
+    * values the optimizer folds it to an IN-filter-shaped plan). Every
+    * variable must be bound by the pattern block (a free VALUES variable
+    * would be a cartesian — rejected); every row must carry the full
+    * arity (UNDEF is not supported — rejected loudly, not silently
+    * null-joined).
     */
-  private val GraphBlockRe =
-    ("""(?i)GRAPH\s+(\?\w+|<[^>]+>|"[^"]*"|""" + 2.toChar + """\d+""" + 2.toChar +
-      """)\s*\{([^{}]*)\}""").r
-  private val ValuesRe = """(?i)VALUES\s+\?(\w+)\s*\{([^{}]*)\}""".r
-  private val ValuesMultiRe = """(?i)VALUES\s*\(((?:\s*\?\w+)+)\s*\)\s*\{([^{}]*)\}""".r
-
-  /** SPARQL VALUES (single-variable form): restrict a variable to an
-    * inline constant list — compiled as an inner join against a local
-    * relation (Catalyst broadcasts it; for a handful of values the
-    * optimizer folds it to an IN-filter-shaped plan). The variable must
-    * be bound by the pattern block (a free VALUES var would be a
-    * cartesian — rejected).
-    */
-  private def bgpValues(bindings: DataFrame, variable: String, values: Seq[String]): DataFrame = {
-    require(bindings.columns.contains(variable),
-      s"VALUES variable ?$variable is not bound by the pattern block")
-    require(values.nonEmpty, s"empty VALUES list for ?$variable")
-    val spark = bindings.sparkSession
-    import spark.implicits._
-    bindings.join(broadcast(values.toDF(variable).distinct()), Seq(variable))
-  }
-
-  /** SPARQL VALUES (multi-variable form): `VALUES (?a ?b) { (<x> "1")
-    * (<y> "2") }` — an inline solution RELATION inner-joined onto the
-    * bindings across all its variables (broadcast: inline data is
-    * driver-literal by construction). Every variable must be bound by
-    * the pattern block; every row must carry the full arity (UNDEF is
-    * not supported — rejected loudly, not silently null-joined).
-    */
-  private def bgpValuesMulti(bindings: DataFrame, vars: Seq[String],
-                             rows: Seq[Seq[String]]): DataFrame = {
+  private def bgpValues(bindings: DataFrame, vars: Seq[String],
+                        rows: Seq[Seq[String]]): DataFrame = {
     require(vars.nonEmpty, "VALUES needs at least one variable")
     vars.foreach(v => require(bindings.columns.contains(v),
       s"VALUES variable ?$v is not bound by the pattern block"))
@@ -1186,10 +680,12 @@ object GraphOps {
     * inner join); `GRAPH ?g|<iri>|"" { patterns }`
     * (requires a `graph` column); `UNION` between top-level groups
     * (brace the groups) — solutions union by name, branch-unbound
-    * variables null; property paths `<p>+` / `<p>*` and sequences
-    * `<a>/<b>` in predicate position (see [[parsePatterns]] — closure
-    * predicates are bridged automatically, which makes a path-bearing
-    * query EAGER at call time: the closure loop runs Spark jobs).
+    * variables null; property paths in predicate position: `<p>+` /
+    * `<p>*` / `<p>?` closures (bridged automatically by [[bridgePaths]],
+    * which makes a `+`/`*` query EAGER at call time: the closure loop
+    * runs Spark jobs), sequences `<a>/<b>` (chained through internal
+    * variables dropped from the output), inverse hops `^<p>`,
+    * alternations `<a>|<b>` and negated sets `!<p>` / `!(<a>|<b>)`.
     *
     * Solution modifiers (the `SELECT … WHERE { … }` form; a bare
     * pattern block without the head returns all bindings as before):
@@ -1203,90 +699,41 @@ object GraphOps {
     * solutions), `HAVING(?alias op const)`,
     * `ORDER BY [ASC|DESC](?v) …`, `LIMIT n`, `OFFSET n` (OFFSET skips
     * before LIMIT caps, SPARQL's slice order). Unparseable trailing
-    * text raises — never silently ignored. (One deliberate limitation:
-    * a variable literally named `?where` is not usable in the headed
-    * form.) UNION/brace splitting is quote- and IRI-aware (a literal
-    * containing `UNION` or `{`, or an IRI containing `union`, is safe).
+    * text raises — never silently ignored. The text is lexed and parsed
+    * once ([[Sparql]]): literals, IRIs and variables are tokens, so a
+    * keyword lookalike inside a literal or an IRI (`"UNION { }"`,
+    * `<urn:rel/union/x>`) is data, and any variable name works.
     * The sibling query forms: [[constructQuery]], [[askQuery]],
     * [[describeQuery]], or the keyword-dispatching [[query]].
     */
-  def select(quads: DataFrame, text0: String): DataFrame = {
-    val text = expandPrefixes(text0)
-    val (masked, lits) = maskLiterals(text)
-    masked match {
-      case SelectHeadRe(head, rest) =>
-        val (dataset, headSansFrom) = extractDataset(head)
-        val (distinct, projs) = parseProjections(headSansFrom, unmask(_, lits))
-        val (bodyMasked, tailMasked) = extractBraceBlock(rest)
-        // a head projecting DATATYPE/LANG needs the dt companions the
-        // body would otherwise drop — force tracking into every branch
-        // and keep the companions through to the head projection
-        val headDt = DtFuncRe.findFirstIn(headSansFrom).isDefined
-        applyModifiers(
-          compileBody(quads, unmask(bodyMasked, lits), dataset, keepDt = headDt),
-          distinct, projs, tailMasked, unmask(_, lits))
-      case _ => compileBody(quads, text)
-    }
+  def select(quads: DataFrame, text0: String): DataFrame = Sparql.parse(text0) match {
+    case s: Sparql.Select => compileSelect(quads, s)
+    case Sparql.BareQuery(where) => compileBody(quads, where)
+    case _ => throw new IllegalArgumentException(
+      s"select expects a SELECT query or a pattern block, got '${text0.trim.take(80)}'")
   }
-
-  private val FromNamedRe = """(?i)\bFROM\s+NAMED\s+<([^<>\s]*)>""".r
-  private val FromRe = """(?i)\bFROM\s+<([^<>\s]*)>""".r
 
   /** The RDF dataset a SELECT runs against: `FROM <g>` graphs form the
     * default graph (patterns outside GRAPH blocks match only them);
     * `FROM NAMED <g>` graphs are the ones GRAPH blocks may select.
-    * `None` = no dataset clause, the full quad table on both sides.
-    */
-  final case class Dataset(defaults: Seq[String], named: Seq[String])
-
-  /** Strip `FROM` / `FROM NAMED` clauses out of the SELECT head. Per
+    * `None` = no dataset clause, the full quad table on both sides. Per
     * SPARQL, ANY dataset clause fully specifies the dataset: with only
     * `FROM NAMED`, the default graph is empty (and vice versa).
     */
-  private def extractDataset(head: String): (Option[Dataset], String) = {
-    val named = FromNamedRe.findAllMatchIn(head).map(_.group(1)).toSeq
-    val h1 = FromNamedRe.replaceAllIn(head, " ")
-    val defaults = FromRe.findAllMatchIn(h1).map(_.group(1)).toSeq
-    val h2 = FromRe.replaceAllIn(h1, " ")
-    if (named.isEmpty && defaults.isEmpty) (None, head)
-    else (Some(Dataset(defaults, named)), h2)
-  }
+  final case class Dataset(defaults: Seq[String], named: Seq[String])
 
   /** `CONSTRUCT { template } WHERE { body }` through the text grammar —
     * the body accepts everything [[select]]'s pattern surface does
     * (UNION/FILTER/OPTIONAL/MINUS/GRAPH/VALUES/paths), the template is a
-    * plain pattern block instantiated per solution via [[construct]]
-    * (set semantics: output triples are distinct).
+    * plain triple block instantiated per solution via [[construct]]
+    * (set semantics: output triples are distinct). `CONSTRUCT WHERE
+    * { plain patterns }` is SPARQL's short form: the block doubles as
+    * the template, so it must be plain triples.
     */
-  def constructQuery(quads: DataFrame, text0: String): DataFrame = {
-    val text = expandPrefixes(text0)
-    val (masked, lits) = maskLiterals(text)
-    val afterKeyword = masked match {
-      case ConstructHeadRe(rest) => rest
-      case _ => throw new IllegalArgumentException(
-        s"constructQuery expects 'CONSTRUCT { … } WHERE { … }', got '$text'")
-    }
-    afterKeyword match {
-      // CONSTRUCT WHERE { plain patterns }: SPARQL's short form — the
-      // pattern block doubles as the template (parsePatterns rejects
-      // FILTER/OPTIONAL/… in it loudly, as the spec requires a plain BGP)
-      case WhereTailRe(rest) =>
-        val (bodyMasked, tail) = extractBraceBlock(rest)
-        require(tail.trim.isEmpty, s"unrecognized text after WHERE block: '${tail.trim}'")
-        val body = unmask(bodyMasked, lits)
-        construct(compileBody(quads, body), parsePatterns(body))
-      case _ =>
-        val (tmplMasked, afterTemplate) = extractBraceBlock(afterKeyword)
-        val afterWhere = afterTemplate match {
-          case WhereTailRe(rest) => rest
-          case _ => throw new IllegalArgumentException(
-            s"expected WHERE after the CONSTRUCT template in '$text'")
-        }
-        val (bodyMasked, tail) = extractBraceBlock(afterWhere)
-        require(tail.trim.isEmpty, s"unrecognized text after WHERE block: '${tail.trim}'")
-        construct(compileBody(quads, unmask(bodyMasked, lits)),
-          parsePatterns(unmask(tmplMasked, lits)))
-    }
+  def constructQuery(quads: DataFrame, text0: String): DataFrame = Sparql.parse(text0) match {
+    case q: Sparql.ConstructQuery => run(quads, q)
+    case _ => throw new IllegalArgumentException(
+      s"constructQuery expects 'CONSTRUCT { … } WHERE { … }', got '$text0'")
   }
 
   /** `ASK { body }` through the text grammar: one row, one boolean
@@ -1296,148 +743,88 @@ object GraphOps {
     * first solution and no job runs until the caller acts on the result
     * — unless the body uses `+`/`*` paths, whose bridging is eager.
     */
-  def askQuery(quads: DataFrame, text0: String): DataFrame = {
-    val text = expandPrefixes(text0)
-    val (masked, lits) = maskLiterals(text)
-    val rest = masked match {
-      case AskHeadRe(r) => r
-      case _ => throw new IllegalArgumentException(
-        s"askQuery expects 'ASK { … }', got '$text'")
-    }
-    val (bodyMasked, tail) = extractBraceBlock(rest)
-    require(tail.trim.isEmpty, s"unrecognized text after ASK block: '${tail.trim}'")
-    compileBody(quads, unmask(bodyMasked, lits)).limit(1)
-      .select(lit(1).as("one"))
-      .agg((count(col("one")) > 0).as("matched"))
+  def askQuery(quads: DataFrame, text0: String): DataFrame = Sparql.parse(text0) match {
+    case q: Sparql.AskQuery => run(quads, q)
+    case _ => throw new IllegalArgumentException(s"askQuery expects 'ASK { … }', got '$text0'")
   }
 
   /** `DESCRIBE <iri>` through the text grammar — the symmetric concise
     * bounded description of [[describe]]; `DESCRIBE ?v WHERE { … }`
     * describes every node the body binds to `?v`.
     */
-  def describeQuery(quads: DataFrame, text0: String): DataFrame =
-    expandPrefixes(text0).trim match {
-      case DescribeHeadRe(iri) => describe(quads, iri)
-      case DescribeVarHeadRe(v, body) =>
-        // DESCRIBE ?v WHERE { … }: the body runs through the full
-        // select() surface; every distinct binding of ?v is described.
-        // Both description legs are semi-joins keyed on the node IRI —
-        // the matched-node set is usually tiny relative to the graph,
-        // so Catalyst broadcasts it and the graph is never shuffled.
-        val nodes = select(quads, s"SELECT ?$v WHERE { $body }").distinct()
-        quads.join(nodes.select(col(v).as("subj")), Seq("subj"), "left_semi")
-          .unionByName(
-            quads.filter(col("dt") === "")
-              .join(nodes.select(col(v).as("obj")), Seq("obj"), "left_semi")
-              .select(quads.columns.map(col).toSeq: _*))
-          .distinct()
-      case _ => throw new IllegalArgumentException(
-        s"describeQuery expects 'DESCRIBE <iri>' or 'DESCRIBE ?v WHERE { … }', got '$text0'")
-    }
-
-  /** One entry point for every query form — dispatches on the leading
-    * keyword: `SELECT …` / bare pattern block → [[select]],
-    * `CONSTRUCT …` → [[constructQuery]], `ASK …` → [[askQuery]],
-    * `DESCRIBE <iri>` → [[describeQuery]].
-    */
-  def query(quads: DataFrame, text0: String): DataFrame = {
-    // expand here too (not just in the dispatched form): the dispatch
-    // regexes must see the query FORM keyword, not a PREFIX header
-    val text = expandPrefixes(text0)
-    val (masked, _) = maskLiterals(text)
-    if (ConstructHeadRe.pattern.matcher(masked).matches()) constructQuery(quads, text)
-    else if (AskHeadRe.pattern.matcher(masked).matches()) askQuery(quads, text)
-    else if (DescribeHeadRe.pattern.matcher(text.trim).matches() ||
-             DescribeVarHeadRe.pattern.matcher(text.trim).matches()) describeQuery(quads, text)
-    else if (UpdateFormRe.findFirstIn(masked).isDefined)
-      // update forms return the UPDATED table: the 5-column named-graph
-      // surface when the input carries a graph column, else the plain one
-      if (quads.columns.contains("graph")) updateQuadsQuery(quads, text)
-      else updateQuery(quads, text)
-    else select(quads, text)
+  def describeQuery(quads: DataFrame, text0: String): DataFrame = Sparql.parse(text0) match {
+    case q @ (_: Sparql.DescribeIri | _: Sparql.DescribeVar) => run(quads, q)
+    case _ => throw new IllegalArgumentException(
+      s"describeQuery expects 'DESCRIBE <iri>' or 'DESCRIBE ?v WHERE { … }', got '$text0'")
   }
 
-  private val UpdateFormRe =
-    """(?is)^\s*(?:INSERT|DELETE|CLEAR|DROP|CREATE|ADD|COPY|MOVE|WITH)\b""".r
-
-  private val PrefixDeclRe = """(?is)^\s*PREFIX\s+(\w+):\s*<([^<>\s]*)>""".r
-
-  /** Strip leading `PREFIX name: <iri>` declarations and expand every
-    * `name:local` CURIE in the remaining text to `<irilocal>`. Literal-
-    * and IRI-masked before the rewrite, so a literal `"dm:x"` or an IRI
-    * containing a declared prefix stays data. Local names follow the
-    * word/`#`/`.`/`-` shape (no `/`, so a path sequence `dm:a/dm:b`
-    * splits into two CURIEs, exactly as SPARQL's PN_LOCAL would); a
-    * closure suffix after the CURIE (`dm:parent+`) survives because the
-    * local-name class excludes `+*?`.
+  /** One entry point for every query form — dispatches on the parsed
+    * form: `SELECT …` / bare pattern block → [[select]], `CONSTRUCT …` →
+    * [[constructQuery]], `ASK …` → [[askQuery]], `DESCRIBE …` →
+    * [[describeQuery]], and the update forms → [[updateQuadsQuery]] when
+    * the input carries a graph column, else [[updateQuery]] (an update
+    * returns the UPDATED table).
     */
-  private val BaseDeclRe = """(?is)^\s*BASE\s+<([^<>\s]*)>""".r
-  private val AbsoluteIriRe = """^[A-Za-z][A-Za-z0-9+.\-]*:""".r
+  def query(quads: DataFrame, text0: String): DataFrame = run(quads, Sparql.parse(text0))
 
-  private[ops] def expandPrefixes(text: String): String = {
-    // prologue: BASE and PREFIX declarations in any interleaving (a
-    // PREFIX expansion is NOT base-resolved — per SPARQL, prefix IRIs
-    // resolve against the base at declaration; callers here always
-    // declare absolute prefix IRIs)
-    val decls = scala.collection.mutable.LinkedHashMap[String, String]()
-    var base: Option[String] = None
-    var rest = text
-    var progressing = true
-    while (progressing) {
-      (PrefixDeclRe.findFirstMatchIn(rest), BaseDeclRe.findFirstMatchIn(rest)) match {
-        case (Some(m), _) =>
-          decls += m.group(1) -> m.group(2)
-          rest = rest.substring(m.end)
-        case (None, Some(b)) =>
-          base = Some(b.group(1))
-          rest = rest.substring(b.end)
-        case _ => progressing = false
-      }
-    }
-    if (decls.isEmpty && base.isEmpty) return text
-    val (litMasked, lits) = maskLiterals(rest)
-    val (masked, iris0) = maskIris(litMasked)
-    // BASE: resolve every RELATIVE <iri> token against it (RFC 3986 via
-    // the core resolver the W3C suites gate); absolute IRIs untouched
-    val iris = base match {
-      case Some(b) => iris0.map { tok =>
-        val v = tok.stripPrefix("<").stripSuffix(">")
-        if (AbsoluteIriRe.findFirstIn(v).isDefined) tok
-        else "<" + jsonld.core.Uri.resolve(b, v) + ">"
-      }
-      case None => iris0
-    }
-    val expanded =
-      if (decls.isEmpty) masked
-      else {
-        val curieRe = ("""(?<![\w:<])(""" +
-          decls.keys.map(java.util.regex.Pattern.quote).mkString("|") +
-          """):([\w#.\-]*[\w#\-])""").r
-        curieRe.replaceAllIn(masked, mm =>
-          java.util.regex.Matcher.quoteReplacement("<" + decls(mm.group(1)) + mm.group(2) + ">"))
-      }
-    unmask(unmaskIris(expanded, iris), lits)
+  private def run(quads: DataFrame, q: Sparql.Query): DataFrame = q match {
+    case s: Sparql.Select => compileSelect(quads, s)
+    case Sparql.BareQuery(where) => compileBody(quads, where)
+    case Sparql.ConstructQuery(template, where) => construct(compileBody(quads, where), template)
+    case Sparql.AskQuery(where) =>
+      compileBody(quads, where).limit(1)
+        .select(lit(1).as("one"))
+        .agg((count(col("one")) > 0).as("matched"))
+    case Sparql.DescribeIri(iri) => describe(quads, iri)
+    case Sparql.DescribeVar(v, where) =>
+      // every distinct binding of ?v is described. Both description legs
+      // are semi-joins keyed on the node IRI — the matched-node set is
+      // usually tiny relative to the graph, so Catalyst broadcasts it and
+      // the graph is never shuffled.
+      val nodes = compileSelect(quads,
+        Sparql.Select(distinct = false, Seq(Sparql.ProjVar(v)), None, where)).distinct()
+      quads.join(nodes.select(col(v).as("subj")), Seq("subj"), "left_semi")
+        .unionByName(
+          quads.filter(col("dt") === "")
+            .join(nodes.select(col(v).as("obj")), Seq("obj"), "left_semi")
+            .select(quads.columns.map(col).toSeq: _*))
+        .distinct()
+    case u: Sparql.Update =>
+      if (quads.columns.contains("graph")) updateQuads(quads, u) else update(quads, u)
   }
 
-  private val SelectHeadRe = """(?is)^\s*SELECT\b(.*?)\bWHERE\b(.*)$""".r
-  private val ConstructHeadRe = """(?is)^\s*CONSTRUCT\b(.*)$""".r
-  private val WhereTailRe = """(?is)^\s*WHERE\b(.*)$""".r
-  private val AskHeadRe = """(?is)^\s*ASK\b(.*)$""".r
-  private val DescribeHeadRe = """(?is)^\s*DESCRIBE\s+<([^<>\s]*)>\s*$""".r
-  private val DescribeVarHeadRe = """(?is)^\s*DESCRIBE\s+\?(\w+)\s+WHERE\s*\{(.*)\}\s*$""".r
+  private def compileSelect(quads: DataFrame, s: Sparql.Select): DataFrame = {
+    // a head projecting DATATYPE/LANG needs the dt companions the body
+    // would otherwise drop — force tracking into every branch and keep
+    // the companions through to the head projection
+    val headDt = introspects(s.projs)
+    applyModifiers(compileBody(quads, s.where, s.dataset, keepDt = headDt), s)
+  }
+
+  /** True when an expression tree reads a term's datatype or kind
+    * (DATATYPE / LANG / LANGMATCHES / isIRI / isLiteral / isBlank /
+    * isNumeric) — the nodes that need object variables' `__dt`
+    * companions.
+    */
+  private def introspects(node: Any): Boolean = node match {
+    case _: VEDatatype | _: VELang | _: LangMatchesC | _: TermTest => true
+    case xs: Iterable[_] => xs.exists(introspects)
+    case p: Product => p.productIterator.exists(introspects)
+    case _ => false
+  }
 
   /** The pattern surface below the optional SELECT head: compile the
-    * UNION branches (each branch bridges its own `<p>+`/`<p>*` closure
-    * predicates and compiles its sub-select blocks against the RAW
-    * quads — a subquery re-enters [[select]] and does its own
+    * UNION branches (each group bridges its own path closures; a
+    * sub-select compiles against the RAW quads and does its own
     * bridging), drop the internal sequence-hop columns.
     */
-  private def compileBody(quads: DataFrame, body: String,
+  private def compileBody(quads: DataFrame, where: Seq[Sparql.Branch],
                           dataset: Option[Dataset] = None,
                           keepDt: Boolean = false): DataFrame = {
-    val df = splitTopLevelUnion(body)
-      .map(compileGroup(quads, _, dataset, forceTrackDt = keepDt))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val df = where.map {
+      case g: Sparql.Group => compileGroup(quads, g, dataset, forceTrackDt = keepDt)
+      case s: Sparql.Select => compileSelect(quads, s)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
     // drop internal columns: sequence-hop variables and tracked-datatype
     // companions (`?x__dt` is reserved alongside `?__seqN`) — unless the
     // caller's SELECT head still needs the companions
@@ -1445,10 +832,18 @@ object GraphOps {
       c.startsWith(SeqVarPrefix) || (!keepDt && c.endsWith(DtSuffix))).toSeq: _*)
   }
 
-  /** Augment `quads` with the virtual closure triples `(s, "<p>+", o,
-    * "")` / `"<p>*"` / `"<p>?"` for every path predicate the body
-    * mentions (literal-masked scan, so a literal containing a path
-    * lookalike stays data), so a path pattern joins like any other:
+  /** The virtual predicate a closure term compiles to: `<p>+` matches
+    * the triples `(s, "p+", o)` [[bridgePaths]] adds. Inside a GRAPH
+    * block the closure runs per graph and its triples carry their graph
+    * under a name no IRI can spell (IRIs hold no space), so a pattern
+    * outside GRAPH never matches them as well.
+    */
+  private[ops] def closurePred(iri: String, suffix: String, inGraph: Boolean): String =
+    iri + suffix + (if (inGraph) " in GRAPH" else "")
+
+  /** Augment `quads` with the virtual closure triples of every path term
+    * a group mentions ([[closurePred]] names them), so a path pattern
+    * joins like any other:
     *
     *  - `p+` (one-or-more): the [[transitiveClosure]] of the predicate's
     *    IRI-object edges (literals don't form edges);
@@ -1465,23 +860,20 @@ object GraphOps {
     * scale these are stored, incrementally maintained closure tables
     * ([[updateClosure]]) and this bridge compiles against them instead.
     *
-    * The closure triples are added by column name whatever columns the
-    * frame has; every column beyond (subj, pred, obj, dt) is null on
-    * them. The closure runs over the edges of every graph at once, and
-    * its triples belong to no graph: a path outside GRAPH blocks matches
-    * them like any other triple, a path inside `GRAPH <g>` or `GRAPH ""`
-    * matches none of them, and one inside `GRAPH ?g` leaves `?g`
-    * unbound (null).
+    * A path outside GRAPH blocks closes over the edges of every graph
+    * at once; its triples belong to no graph (every column beyond
+    * (subj, pred, obj, dt) is null on them). A path inside a GRAPH block
+    * closes over (graph, node) pairs — a hop never crosses graphs — and
+    * its triples carry their `graph`, so `GRAPH <g>` selects g's pairs
+    * and `GRAPH ?g` binds `?g`. Under FROM NAMED the caller passes the
+    * named side, so those closures see only the named graphs.
     */
-  private def bridgePaths(quads: DataFrame, body: String): DataFrame = {
-    val (masked, _) = maskLiterals(body)
-    // suffix must END the token (lookahead: whitespace / sequence '/' /
-    // alternation '|' / end) — '<p>?x' is a malformed term, not a path
-    val found = "<([^<>\\s]*)>([+*?])(?=[\\s/|]|$)".r.findAllMatchIn(masked)
-      .map(m => (m.group(1), m.group(2))).toSeq.distinct
-    found.foldLeft(quads) { case (q, (p, suffix)) =>
+  private def bridgePaths(quads: DataFrame, paths: Seq[Sparql.PathRef]): DataFrame =
+    paths.foldLeft(quads) { case (q, Sparql.PathRef(p, suffix, inGraph)) =>
+      def node(c: String): Column =
+        if (inGraph) struct(col("graph").as("g"), col(c).as("n")) else col(c)
       val edges = q.filter(col("pred") === lit(p) && col("dt") === "")
-        .select(col("subj").as("src"), col("obj").as("dst"))
+        .select(node("subj").as("src"), node("obj").as("dst"))
       def withIdentity(pairs: DataFrame): DataFrame = {
         val nodes = edges.select(col("src").as("n"))
           .union(edges.select(col("dst").as("n"))).distinct()
@@ -1492,120 +884,18 @@ object GraphOps {
         case "*" => withIdentity(transitiveClosure(edges))
         case _ => withIdentity(edges)
       }
-      q.unionByName(pairs.select(col("src").as("subj"), lit(p + suffix).as("pred"),
-        col("dst").as("obj"), lit("").as("dt")), allowMissingColumns = true)
+      val pred = lit(closurePred(p, suffix, inGraph)).as("pred")
+      val triples =
+        if (inGraph) pairs.select(col("src.n").as("subj"), pred, col("dst.n").as("obj"),
+          lit("").as("dt"), col("src.g").as("graph"))
+        else pairs.select(col("src").as("subj"), pred, col("dst").as("obj"), lit("").as("dt"))
+      q.unionByName(triples, allowMissingColumns = true)
     }
-  }
 
   // ---------------------------------------------- solution modifiers
 
-  /** One SELECT-head projection: a plain variable, an aggregate, or a
-    * value-expression alias.
-    */
-  sealed private trait Proj
-  private final case class ProjVar(name: String) extends Proj
-  /** `(expr AS ?alias)` — non-aggregate expression projection. */
-  private final case class ProjExpr(expr: ValueExpr, alias: String) extends Proj
-  /** `arg = None` is `COUNT(*)`; `distinctArg` is `COUNT(DISTINCT ?v)`;
-    * `sep` is GROUP_CONCAT's SEPARATOR.
-    */
-  private final case class ProjAgg(func: String, arg: Option[String],
-                                   alias: String,
-                                   distinctArg: Boolean = false,
-                                   sep: Option[String] = None,
-                                   exprArg: Option[ValueExpr] = None) extends Proj
-
-  private val AggProjRe =
-    """(?i)^\(\s*(COUNT|SUM|MIN|MAX|AVG|SAMPLE)\s*\(\s*(DISTINCT\s+)?(\*|\?\w+)\s*\)\s+AS\s+\?(\w+)\s*\)$""".r
-  // aggregate over a full value EXPRESSION — `(SUM(?price * ?qty) AS ?rev)`;
-  // tried after the simple-variable form, before plain expression projs
-  private val AggExprProjRe =
-    """(?i)^\(\s*(SUM|MIN|MAX|AVG)\s*\(\s*(.+)\s*\)\s+AS\s+\?(\w+)\s*\)$""".r
-  private val GroupConcatRe =
-    """(?i)^\(\s*GROUP_CONCAT\s*\(\s*\?(\w+)\s*(?:;\s*SEPARATOR\s*=\s*("[^"]*")\s*)?\)\s+AS\s+\?(\w+)\s*\)$""".r
-  private val GroupByRe = """(?i)\bGROUP\s+BY((?:\s+\?\w+)+)""".r
-  private val OrderByRe =
-    """(?i)\bORDER\s+BY((?:\s+(?:(?:ASC|DESC)\s*\(\s*\?\w+\s*\)|\?\w+))+)""".r
-  private val OrderKeyRe = """(?i)(ASC|DESC)\s*\(\s*\?(\w+)\s*\)|\?(\w+)""".r
-  private val LimitRe = """(?i)\bLIMIT\s+(\d+)""".r
-  private val OffsetRe = """(?i)\bOFFSET\s+(\d+)""".r
-  private val VarRe = """\?(\w+)""".r
-
-  /** Parse the text between SELECT and WHERE: optional DISTINCT, then
-    * `*` (or nothing) for all-bindings, else `?var` and
-    * `(AGG(…) AS ?alias)` projections in output order.
-    */
-  private def parseProjections(head: String,
-                               um: String => String = identity): (Boolean, Seq[Proj]) = {
-    var h = head.trim
-    // REDUCED permits (but does not require) duplicate elimination —
-    // eliminating is always a conforming implementation, so it compiles
-    // exactly like DISTINCT
-    val reduced = h.toUpperCase.startsWith("REDUCED")
-    if (reduced) h = h.substring("REDUCED".length).trim
-    val distinct = reduced || h.toUpperCase.startsWith("DISTINCT")
-    if (!reduced && distinct) h = h.substring("DISTINCT".length).trim
-    if (h.isEmpty || h == "*") (distinct, Seq.empty)
-    else {
-      val projs = headTokens(h).map {
-        case GroupConcatRe(arg, sep, alias) =>
-          ProjAgg("GROUP_CONCAT", Some(arg), alias,
-            sep = Option(sep).map(s => um(s).drop(1).dropRight(1)))
-        case AggProjRe(func, dist, arg, alias) =>
-          val f = func.toUpperCase
-          if (dist != null) require(f != "SAMPLE",
-            "SAMPLE(DISTINCT) is meaningless — SAMPLE already picks one value")
-          require(!(f == "SAMPLE" && arg == "*"), "SAMPLE needs a ?variable")
-          ProjAgg(f, if (arg == "*") None else Some(arg.drop(1)), alias,
-            distinctArg = dist != null)
-        case t if VarRe.pattern.matcher(t).matches() => ProjVar(t.drop(1))
-        case AggExprProjRe(func, inner, alias) =>
-          ProjAgg(func.toUpperCase, None, alias,
-            exprArg = Some(parseValueExpr(um(inner))))
-        case t @ AsAliasParenRe(expr, alias) =>
-          // non-aggregate expression projection: `(?a * 2 AS ?x)`
-          ProjExpr(parseValueExpr(um(expr)), alias)
-        case t => throw new IllegalArgumentException(
-          s"unrecognized SELECT projection '$t'")
-      }.toSeq
-      (distinct, projs)
-    }
-  }
-
-  /** Split a SELECT head into projection tokens: whitespace-separated
-    * bare terms plus `(...)` groups kept whole at ARBITRARY paren depth
-    * (a regex can't nest unboundedly — `(ENCODE_FOR_URI(CONCAT(?a,
-    * "x")) AS ?e)` is already three deep). The head text is literal-
-    * masked by the caller, so parens inside literals can't unbalance
-    * the scan.
-    */
-  private def headTokens(h: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < h.length) {
-      if (h(i).isWhitespace) i += 1
-      else if (h(i) == '(') {
-        val start = i
-        var depth = 0
-        var done = false
-        while (i < h.length && !done) {
-          if (h(i) == '(') depth += 1
-          else if (h(i) == ')') { depth -= 1; if (depth == 0) done = true }
-          i += 1
-        }
-        require(done, s"unbalanced parens in SELECT head: '$h'")
-        out += h.substring(start, i)
-      } else {
-        val start = i
-        while (i < h.length && !h(i).isWhitespace) i += 1
-        out += h.substring(start, i)
-      }
-    }
-    out.toSeq
-  }
-
   /** The simple-argument (`*` / `?var`) aggregate column of a ProjAgg. */
-  private def simpleAggColumn(a: ProjAgg): Column = a.func match {
+  private def simpleAggColumn(a: Sparql.ProjAgg): Column = a.func match {
     case "COUNT" if a.distinctArg =>
       countDistinct(col(a.arg.getOrElse(
         throw new IllegalArgumentException("COUNT(DISTINCT) needs a ?variable"))))
@@ -1638,32 +928,14 @@ object GraphOps {
   }
 
   /** Compile the tail modifiers onto the solution bindings: aggregate /
-    * group, project, DISTINCT, ORDER BY, LIMIT — in SPARQL's evaluation
-    * order. Raises on unrecognized trailing text.
+    * group, project, HAVING, DISTINCT, ORDER BY, OFFSET, LIMIT — in
+    * SPARQL's evaluation order.
     */
-  private def applyModifiers(bindings: DataFrame, distinct: Boolean,
-                             projs: Seq[Proj], tail: String,
-                             um: String => String = identity): DataFrame = {
-    val groupVars = GroupByRe.findFirstMatchIn(tail)
-      .map(m => VarRe.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq)
-      .getOrElse(Seq.empty)
-    val orderKeys = OrderByRe.findFirstMatchIn(tail)
-      .map(m => OrderKeyRe.findAllMatchIn(m.group(1)).map { k =>
-        if (k.group(3) != null) (k.group(3), false)
-        else (k.group(2), k.group(1).equalsIgnoreCase("DESC"))
-      }.toSeq)
-      .getOrElse(Seq.empty)
-    val limit = LimitRe.findFirstMatchIn(tail).map(_.group(1).toInt)
-    val offset = OffsetRe.findFirstMatchIn(tail).map(_.group(1).toInt)
-    // HAVING( expr ): the FULL filter expression grammar over the
-    // projected aggregate aliases — boolean composition, arithmetic,
-    // string predicates, all of it
-    val (having, tailSansHaving) = extractParenClauses(tail, "HAVING", um, parseFilterExpr)
-    val leftover =
-      OffsetRe.replaceAllIn(LimitRe.replaceAllIn(
-        OrderByRe.replaceAllIn(GroupByRe.replaceAllIn(tailSansHaving, " "), " "), " "), " ").trim
-    require(leftover.isEmpty, s"unrecognized text after WHERE block: '$leftover'")
-
+  private def applyModifiers(bindings: DataFrame, s: Sparql.Select): DataFrame = {
+    import Sparql.{ProjAgg, ProjExpr, ProjVar}
+    val projs = s.projs
+    val groupVars = s.groupBy
+    val having = s.having
     val aggs = projs.collect { case a: ProjAgg => a }
     val plainVars = projs.collect { case ProjVar(n) => n }
     val exprProjs = projs.collect { case e: ProjExpr => e }
@@ -1712,214 +984,29 @@ object GraphOps {
     require(having.isEmpty || aggs.nonEmpty,
       "HAVING requires an aggregate projection in SELECT")
     val filtered = applyFilters(projected, having)
-    val dd = if (distinct) filtered.distinct() else filtered
+    val dd = if (s.distinct) filtered.distinct() else filtered
     val ordered =
-      if (orderKeys.isEmpty) dd
-      else dd.orderBy(orderKeys.map { case (v, desc) =>
+      if (s.orderBy.isEmpty) dd
+      else dd.orderBy(s.orderBy.map { case (v, desc) =>
         if (desc) col(v).desc else col(v).asc
       }: _*)
     // SPARQL slice order: OFFSET skips first, LIMIT caps what remains
-    val sliced = offset.map(ordered.offset).getOrElse(ordered)
-    limit.map(sliced.limit).getOrElse(sliced)
+    val sliced = s.offset.map(ordered.offset).getOrElse(ordered)
+    s.limit.map(sliced.limit).getOrElse(sliced)
   }
 
-  /** Content of the first brace-balanced `{ … }` block in masked text,
-    * plus everything after it. Text before the `{` must be blank.
+  /** One group: compile base join → inner-join sub-selects → left-join
+    * OPTIONAL blocks → anti-join MINUS blocks → semi-join EXISTS →
+    * anti-join NOT EXISTS → single- then multi-variable VALUES → BIND
+    * columns → FILTERs. (BIND applies after the group's joins and before
+    * its FILTERs — a filter can reference a bound alias; a BIND
+    * referencing a variable from a LATER pattern in the same group works
+    * too, a deliberate simplification of SPARQL's position-sensitive
+    * BIND scope.)
     */
-  private def extractBraceBlock(s: String): (String, String) = {
-    val start = s.indexOf('{')
-    require(start >= 0, s"expected a '{' block in '${s.trim}'")
-    require(s.substring(0, start).trim.isEmpty,
-      s"unexpected text before '{': '${s.substring(0, start).trim}'")
-    var depth = 0
-    var i = start
-    while (i < s.length) {
-      val c = s(i)
-      if (c == '{') depth += 1
-      else if (c == '}') {
-        depth -= 1
-        if (depth == 0) return (s.substring(start + 1, i), s.substring(i + 1))
-      }
-      i += 1
-    }
-    throw new IllegalArgumentException(s"unbalanced braces in '${s.trim}'")
-  }
-
-  /** Split on top-level `UNION` keywords — outside braces, quotes, and
-    * `<…>` IRIs. The scanner runs over MASKED text (literals first, then
-    * IRI tokens), so a literal containing `UNION`/braces, an IRI like
-    * `<urn:rel/union/x>`, or a FILTER comparison `?x < 5` (a bare `<`
-    * with no closing `>` in the same token is an operator, never an
-    * IRI opener — the round-4 scanner mis-lexed it and swallowed
-    * everything to the next `>`) can't confuse it. A keyword only
-    * splits at a whitespace/brace boundary on both sides, so a
-    * variable `?my_union` stays a variable. Strips each group's outer
-    * braces.
-    */
-  private def splitTopLevelUnion(text: String): Seq[String] = {
-    val (litMasked, lits) = maskLiterals(text)
-    val (masked, iris) = maskIris(litMasked)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val cur = new StringBuilder
-    var depth = 0
-    var i = 0
-    def boundary(c: Char): Boolean = c.isWhitespace || c == '{' || c == '}'
-    while (i < masked.length) {
-      val c = masked(i)
-      if (depth == 0 && (c == 'U' || c == 'u') &&
-          masked.regionMatches(true, i, "UNION", 0, 5) &&
-          (i == 0 || boundary(masked(i - 1))) &&
-          (i + 5 >= masked.length || boundary(masked(i + 5)))) {
-        out += cur.toString; cur.clear(); i += 5
-      } else {
-        if (c == '{') depth += 1
-        else if (c == '}') depth -= 1
-        cur += c; i += 1
-      }
-    }
-    out += cur.toString
-    // strip braces while still masked (every brace in masked text is
-    // structural), THEN restore IRIs and literals. NOTE `strip()`, not
-    // `trim`: trim removes every char ≤ U+0020 — including the U+0002
-    // mask delimiter of a group-edge IRI token — where strip() removes
-    // Unicode whitespace only
-    out.toSeq.map(g => unmask(unmaskIris(stripOuterBraces(g.strip()), iris), lits))
-  }
-
-  private val MaskChar: Char = 1.toChar // U+0001, cannot appear in query text
-  private val MaskRe = ("\"" + MaskChar + "(\\d+)" + MaskChar + "\"").r
-
-  /** Replace every quoted literal with an opaque `"␁idx␁"` token so the
-    * block-extraction regexes can't fire on keyword lookalikes INSIDE a
-    * literal (`"MINUS { x }"` as an object must stay data, not become an
-    * anti-join).
-    */
-  private def maskLiterals(s: String): (String, IndexedSeq[String]) = {
-    val lits = scala.collection.mutable.ArrayBuffer[String]()
-    val masked = "\"[^\"]*\"".r.replaceAllIn(s, m => {
-      lits += m.matched
-      java.util.regex.Matcher.quoteReplacement("\"" + MaskChar + (lits.size - 1) + MaskChar + "\"")
-    })
-    (masked, lits.toIndexedSeq)
-  }
-
-  private def unmask(s: String, lits: IndexedSeq[String]): String =
-    MaskRe.replaceAllIn(s, m =>
-      java.util.regex.Matcher.quoteReplacement(lits(m.group(1).toInt)))
-
-  private val IriMaskChar: Char = 2.toChar // U+0002, cannot appear in query text
-  private val IriMaskRe = (IriMaskChar + "(\\d+)" + IriMaskChar).r
-
-  /** Replace every `<…>` IRI token with an opaque `␂idx␂` placeholder.
-    * Only a `<` with a matching `>` in the SAME whitespace-free token is
-    * an IRI — a FILTER operator `<`/`<=` never matches, so it survives
-    * as an operator. Run on literal-masked text (a literal may contain
-    * `<…>` lookalikes that must stay data).
-    */
-  private def maskIris(s: String): (String, IndexedSeq[String]) = {
-    val iris = scala.collection.mutable.ArrayBuffer[String]()
-    val masked = "<[^<>\\s]*>".r.replaceAllIn(s, m => {
-      iris += m.matched
-      java.util.regex.Matcher.quoteReplacement(IriMaskChar.toString + (iris.size - 1) + IriMaskChar)
-    })
-    (masked, iris.toIndexedSeq)
-  }
-
-  private def unmaskIris(s: String, iris: IndexedSeq[String]): String =
-    IriMaskRe.replaceAllIn(s, m =>
-      java.util.regex.Matcher.quoteReplacement(iris(m.group(1).toInt)))
-
-  /** Strip `{ … }` when the opening brace closes at the final char. */
-  private def stripOuterBraces(s: String): String = {
-    if (!(s.startsWith("{") && s.endsWith("}"))) return s
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    while (i < s.length - 1) {
-      val c = s(i)
-      if (c == '"') inQuote = !inQuote
-      else if (!inQuote && c == '{') depth += 1
-      else if (!inQuote && c == '}') { depth -= 1; if (depth == 0) return s }
-      i += 1
-    }
-    s.drop(1).dropRight(1)
-  }
-
-  private val NotExistsRe = """(?i)FILTER\s+NOT\s+EXISTS\s*\{([^{}]*)\}""".r
-  private val ExistsRe = """(?i)FILTER\s+EXISTS\s*\{([^{}]*)\}""".r
-  private val DtFuncRe =
-    """(?i)\b(?:DATATYPE|LANGMATCHES|LANG|isIRI|isLiteral|isBlank|isNumeric)\s*\(""".r
-
-  /** Extract top-level `{ SELECT … }` sub-select blocks from masked
-    * text: each is compiled by a recursive [[select]] call and joined
-    * into the branch on its shared variables — SPARQL 1.1 subqueries.
-    * A sub-select directly inside OPTIONAL/MINUS/GRAPH/VALUES/EXISTS is
-    * rejected loudly (not silently mis-scoped).
-    */
-  private def extractSubqueries(s: String): (Seq[String], String) = {
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    val sb = new StringBuilder(s)
-    var i = 0
-    while (i < s.length) {
-      if (s(i) == '{') {
-        var depth = 0
-        var j = i
-        var endIdx = -1
-        while (j < s.length && endIdx < 0) {
-          if (s(j) == '{') depth += 1
-          else if (s(j) == '}') { depth -= 1; if (depth == 0) endIdx = j }
-          j += 1
-        }
-        require(endIdx >= 0, s"unbalanced braces in '$s'")
-        val inner = s.substring(i + 1, endIdx)
-        if (inner.trim.toUpperCase.startsWith("SELECT")) {
-          val before = s.substring(0, i).trim
-          val words = before.split("\\s+").filter(_.nonEmpty)
-          val last = words.lastOption.getOrElse("").toUpperCase
-          val secondLast = if (words.length >= 2) words(words.length - 2).toUpperCase else ""
-          require(!Set("OPTIONAL", "MINUS", "EXISTS", "VALUES", "GRAPH").contains(last)
-              && secondLast != "GRAPH",
-            s"a sub-select inside $last { … } is not supported — join it at the group level")
-          out += inner
-          for (k <- i to endIdx) sb.setCharAt(k, ' ')
-        }
-        i = endIdx + 1
-      } else i += 1
-    }
-    (out.toSeq, sb.toString)
-  }
-
-  /** One UNION branch: sub-selects and EXISTS / NOT EXISTS blocks out
-    * first, then OPTIONAL and MINUS blocks (so their FILTERs stay
-    * inside), then GRAPH blocks, then BINDs and group-level FILTERs,
-    * then the remaining required patterns; compile base join →
-    * inner-join subqueries → left-join optionals → anti-join minus
-    * groups → semi-join EXISTS → anti-join NOT EXISTS → VALUES →
-    * BIND columns → apply filters. (BIND applies after the group's
-    * joins and before its FILTERs — a filter can reference a bound
-    * alias; a BIND referencing a variable from a LATER pattern in the
-    * same group works too, a deliberate simplification of SPARQL's
-    * position-sensitive BIND scope.)
-    */
-  private def compileGroup(rawQuads: DataFrame, group: String,
+  private def compileGroup(rawQuads: DataFrame, g: Sparql.Group,
                            dataset: Option[Dataset] = None,
                            forceTrackDt: Boolean = false): DataFrame = {
-    // a branch that IS a bare sub-select (its braces were stripped by
-    // the UNION splitter) re-enters select() whole — patterns can never
-    // start with the SELECT keyword, so the dispatch is unambiguous.
-    // The full-head match (not just the keyword) keeps a malformed
-    // 'SELECT' without WHERE out of an infinite select() recursion.
-    if (SelectHeadRe.pattern.matcher(maskLiterals(group)._1).matches())
-      return select(rawQuads, group)
-    // literal AND IRI masking: the block-extraction regexes must never
-    // fire on keyword lookalikes INSIDE a quoted literal ("MINUS { x }"
-    // as an object is data) or inside an IRI (<urn:x/FILTER(y)> is a
-    // term, not a clause); every extracted sub-block is unmasked before
-    // its own parse
-    val (litMasked, lits) = maskLiterals(group)
-    val (maskedGroup, iris) = maskIris(litMasked)
-    def um(x: String): String = unmask(unmaskIris(x, iris), lits)
-    val (subqueries, gsub) = extractSubqueries(maskedGroup)
     // dataset scoping (FROM / FROM NAMED): the default-graph side feeds
     // every non-GRAPH pattern and sub-block; the named side feeds GRAPH
     // blocks. Per SPARQL, a dataset clause is a complete specification —
@@ -1935,64 +1022,23 @@ object GraphOps {
       case Some(d) => rawQuads.filter(col("graph").isin(d.named: _*))
       case None => rawQuads
     }
-    // bridge path closures for THIS branch only (sub-selects re-enter
-    // select() against the raw quads and bridge their own paths —
-    // bridging the raw table once per scope keeps the virtual closure
-    // triples single-counted)
-    val quads = bridgePaths(defaultBase, um(gsub))
-    // datatype tracking is opt-in per branch: only when a filter in this
-    // branch (incl. its OPTIONAL/MINUS/EXISTS blocks) introspects terms
-    // do object variables carry their v__dt companion columns
-    val trackDt = forceTrackDt || DtFuncRe.findFirstIn(gsub).isDefined
-    val notExistsGroups = NotExistsRe.findAllMatchIn(gsub).map(m => um(m.group(1))).toSeq
-    val gne = NotExistsRe.replaceAllIn(gsub, " ")
-    val existsGroups = ExistsRe.findAllMatchIn(gne).map(m => um(m.group(1))).toSeq
-    val gex = ExistsRe.replaceAllIn(gne, " ")
-    val optionals = OptionalRe.findAllMatchIn(gex).map(m => um(m.group(1))).toSeq
-    val gv = OptionalRe.replaceAllIn(gex, " ")
-    def valuesConst(t: String): String =
-      if (t.startsWith("<") || t.startsWith("\""))
-        parseTerm(t) match {
-          case Const(v) => v
-          case other => throw new IllegalArgumentException(
-            s"VALUES entries must be constants, got $other")
-        }
-      else throw new IllegalArgumentException(s"unrecognized VALUES entry '$t'")
-    // multi-variable form first: its `VALUES (?a ?b) { … }` head would
-    // otherwise never match the single-var regex, but extract-and-blank
-    // ordering keeps the two scans independent either way
-    val valuesMultiBlocks = ValuesMultiRe.findAllMatchIn(gv).map { m =>
-      val vars = """\?(\w+)""".r.findAllMatchIn(m.group(1)).map(_.group(1)).toSeq
-      val rows = """\(([^()]*)\)""".r.findAllMatchIn(um(m.group(2))).map { rm =>
-        """"[^"]*"|\S+""".r.findAllIn(rm.group(1)).toSeq.map(valuesConst)
-      }.toSeq
-      (vars, rows)
-    }.toSeq
-    val gvm = ValuesMultiRe.replaceAllIn(gv, " ")
-    val valuesBlocks = ValuesRe.findAllMatchIn(gvm).map { m =>
-      val vals = """"[^"]*"|\S+""".r.findAllIn(um(m.group(2))).toSeq.map(valuesConst)
-      (m.group(1), vals)
-    }.toSeq
-    val g0 = ValuesRe.replaceAllIn(gvm, " ")
-    val minusGroups = MinusRe.findAllMatchIn(g0).map(m => um(m.group(1))).toSeq
-    val g1 = MinusRe.replaceAllIn(g0, " ")
-    val graphBlocks = GraphBlockRe.findAllMatchIn(g1)
-      .map(m => (parseTerm(um(m.group(1))), um(m.group(2)))).toSeq
-    val g2 = GraphBlockRe.replaceAllIn(g1, " ")
-    val (binds, g2b) = extractBinds(g2, um)
-    val (filters, g3) = extractFilters(g2b, um)
-    val required = um(g3).trim match {
-      case "" => Seq.empty[TriplePattern]
-      case rest => parsePatterns(rest)
-    }
-    val plainPatterns = required.map(p => (Option.empty[Term], p))
-    val graphPatterns = graphBlocks.flatMap { case (gt, block) =>
-      parsePatterns(block).map(p => (Some(gt): Option[Term], p))
-    }
+    // bridge path closures for THIS group only (sub-selects compile
+    // against the raw quads and bridge their own paths — bridging the raw
+    // table once per scope keeps the virtual closure triples single-
+    // counted). Without a dataset plain and GRAPH patterns share one
+    // frame, so it carries both kinds of closure triples.
+    val (graphPaths, plainPaths) = g.paths.partition(_.inGraph)
+    val quads = bridgePaths(defaultBase, if (dataset.isEmpty) plainPaths ++ graphPaths else plainPaths)
+    val namedQuads = if (dataset.isEmpty) quads else bridgePaths(namedBase, graphPaths)
+    // datatype tracking is opt-in per group: only when an expression in
+    // this group (incl. its OPTIONAL/MINUS/EXISTS blocks) introspects
+    // terms do object variables carry their v__dt companion columns
+    val trackDt = forceTrackDt || introspects(Seq(g.filters, g.binds, g.blocks))
+    val plainPatterns = g.triples.map(p => (Option.empty[Term], p))
+    val graphPatterns = g.graphs.flatMap { case (gt, ps) => ps.map(p => (Some(gt): Option[Term], p)) }
     val mixed = plainPatterns ++ graphPatterns
-    val subFrames = subqueries.map(sq => select(rawQuads, um(sq)))
-    require(mixed.nonEmpty || subFrames.nonEmpty,
-      s"UNION branch has no patterns: '$group'")
+    val subFrames = g.subSelects.map(compileSelect(rawQuads, _))
+    require(mixed.nonEmpty || subFrames.nonEmpty, s"UNION branch has no patterns: '${g.src}'")
     // without a dataset clause, plain and GRAPH patterns compile over
     // ONE frame (a plain pattern matches quads in any graph); with one,
     // the two groups compile over their dataset sides and join on
@@ -2000,7 +1046,7 @@ object GraphOps {
     val patternBase: Option[DataFrame] =
       if (mixed.isEmpty) None
       else if (dataset.isEmpty) Some(compilePatterns(quads, mixed, trackDt))
-      else Some(Seq(quads -> plainPatterns, namedBase -> graphPatterns)
+      else Some(Seq(quads -> plainPatterns, namedQuads -> graphPatterns)
         .collect { case (q, ps) if ps.nonEmpty => compilePatterns(q, ps, trackDt) }
         .reduce(joinOnShared(_, _)))
     def joinSub(acc: DataFrame, sub: DataFrame) = joinOnShared(acc, sub, anchored = "sub-select")
@@ -2008,28 +1054,21 @@ object GraphOps {
       case Some(pb) => subFrames.foldLeft(pb)(joinSub)
       case None => subFrames.reduce(joinSub)
     }
-    // OPTIONAL / MINUS / EXISTS / NOT EXISTS groups: patterns plus their
-    // own FILTERs, joined onto the branch on shared variables
-    val withGroups = Seq(
-      ("OPTIONAL", optionals, "left_outer"),
-      ("MINUS", minusGroups, "left_anti"),
-      ("FILTER EXISTS", existsGroups, "left_semi"),
-      ("FILTER NOT EXISTS", notExistsGroups, "left_anti")
-    ).foldLeft(base) { case (acc0, (keyword, blocks, how)) =>
-      blocks.foldLeft(acc0) { (acc, block) =>
-        val q = parseQuery(block)
-        joinOnShared(acc,
-          applyFilters(compilePatterns(quads, q.patterns.map(None -> _), trackDt), q.filters),
-          how, anchored = s"$keyword group '$block'")
+    // OPTIONAL / MINUS / EXISTS / NOT EXISTS blocks: patterns plus their
+    // own FILTERs, joined onto the group on shared variables
+    val withBlocks = Seq("OPTIONAL" -> "left_outer", "MINUS" -> "left_anti",
+        "FILTER EXISTS" -> "left_semi", "FILTER NOT EXISTS" -> "left_anti")
+      .foldLeft(base) { case (acc0, (kind, how)) =>
+        g.blocks.filter(_.kind == kind).foldLeft(acc0) { (acc, b) =>
+          joinOnShared(acc,
+            applyFilters(compilePatterns(quads, b.triples.map(None -> _), trackDt), b.filters),
+            how, anchored = s"$kind group '${b.src}'")
+        }
       }
-    }
-    val withValues1 = valuesBlocks.foldLeft(withGroups) { case (acc, (v, vals)) =>
-      bgpValues(acc, v, vals)
-    }
-    val withValues = valuesMultiBlocks.foldLeft(withValues1) { case (acc, (vs, rows)) =>
-      bgpValuesMulti(acc, vs, rows)
-    }
-    val withBinds = binds.foldLeft(withValues) { (acc, b) =>
+    // one-column VALUES first, then the row form
+    val withValues = (g.values.filterNot(_.rowForm) ++ g.values.filter(_.rowForm))
+      .foldLeft(withBlocks)((acc, v) => bgpValues(acc, v.vars, v.rows))
+    val withBinds = g.binds.foldLeft(withValues) { (acc, b) =>
       require(!acc.columns.contains(b.alias),
         s"BIND alias ?${b.alias} is already bound in this branch")
       val bound = acc.withColumn(b.alias, b.expr.column)
@@ -2043,7 +1082,7 @@ object GraphOps {
         case _ => bound
       }
     }
-    applyFilters(withBinds, filters)
+    applyFilters(withBinds, g.filters)
   }
 
   /** SPARQL CONSTRUCT core: instantiate each `template` pattern once per
@@ -2053,7 +1092,7 @@ object GraphOps {
     * through. Output columns (subj, pred, obj); datatype bookkeeping is
     * the caller's concern when templates construct literals.
     */
-  private def construct(bindings: DataFrame, template: Seq[TriplePattern]): DataFrame = {
+  private def construct(bindings: DataFrame, template: Seq[Sparql.TripleTmpl]): DataFrame = {
     require(template.nonEmpty, "empty CONSTRUCT template")
     def c(t: Term): Column = t match {
       case Var(n) => col(n)
@@ -2980,69 +2019,16 @@ object GraphOps {
 
   // ------------------------------------------------------ SPARQL Update
 
-  /** One parsed triple template slot: the three terms plus the datatype
-    * the INSTANTIATED triple carries. Template parsing (unlike
-    * [[parseTerm]], which collapses IRIs and literals to the same
-    * `Const`) keeps the distinction, because an inserted quad needs its
-    * `dt` column: quoted literal → xsd:string (or the explicit
-    * `"lex"^^<dt>` type), IRI constant → `""`. A VARIABLE in object
-    * position instantiates with `dt = ""` — template variables are
-    * assumed IRI-valued (the common rewiring case); reinserting a
-    * LITERAL value needs the constant form, and the scaladoc of
-    * [[updateQuery]] says so out loud.
-    */
-  private final case class TripleTmpl(s: Term, p: Term, o: Term, dt: String)
-
-  /** Tokenize + parse a data/template block: triples separated by
-    * standalone `.`, each `subj pred obj` with `<iri>`/`?var` subjects,
-    * `<iri>`/`a`/`?var` predicates (no path syntax — a closure suffix
-    * or sequence in a template is meaningless and rejected loudly), and
-    * `<iri>`/`?var`/`"lit"`/`"lex"^^<dt>` objects. The typed-literal
-    * token is matched as ONE token (quote + optional `^^<iri>` tail).
-    */
-  private def parseTemplateBlock(block: String): Seq[TripleTmpl] = {
-    val termRe = """"[^"]*"(?:\^\^<[^<>\s]*>|@[A-Za-z][A-Za-z0-9-]*)?|\S+""".r
-    val toks = termRe.findAllIn(block).toSeq
-    val groups = toks.foldLeft(List(List.empty[String])) { (acc, t) =>
-      if (t == ".") List.empty[String] :: acc else (t :: acc.head) :: acc.tail
-    }.map(_.reverse).reverse.filter(_.nonEmpty)
-    require(groups.nonEmpty, "empty data/template block")
-    groups.map { p =>
-      require(p.length == 3, s"a data/template triple needs exactly 3 terms: '${p.mkString(" ")}'")
-      val s = parseTerm(p(0))
-      require(!p(0).startsWith("\""), s"a triple subject cannot be a literal: '${p(0)}'")
-      val predTok = if (p(1) == "a") "<" + RdfTypeIri + ">" else p(1)
-      require(predTok.startsWith("<") && predTok.endsWith(">") || predTok.startsWith("?"),
-        s"a data/template predicate must be <iri>, 'a', or ?var (no paths): '${p(1)}'")
-      val pr = parseTerm(predTok)
-      val oTok = p(2)
-      val LangLit = """(?s)^"(.*)"@([A-Za-z][A-Za-z0-9-]*)$""".r
-      val (o, dt) =
-        if (oTok.startsWith("\"")) {
-          val hat = oTok.indexOf("\"^^<")
-          oTok match {
-            case _ if hat >= 0 =>
-              (Const(oTok.substring(1, hat)), oTok.substring(hat + 4, oTok.length - 1))
-            // language-tagged literal: the tag rides the dt slot as
-            // "@tag" (mutually exclusive with a datatype per RDF 1.1)
-            case LangLit(lex, tag) => (Const(lex), "@" + tag)
-            case _ => (parseTerm(oTok), XsdString)
-          }
-        } else (parseTerm(oTok), "")
-      TripleTmpl(s, pr, o, dt)
-    }
-  }
-
-  /** Constant-only data block (INSERT DATA / DELETE DATA) as a local
+  /** Constant-only data triples (INSERT DATA / DELETE DATA) as a local
     * quad DataFrame — a handful of driver-side rows, broadcast-sized by
     * construction.
     */
-  private def dataQuads(spark: SparkSession, block: String): DataFrame = {
-    val rows = parseTemplateBlock(block).map { t =>
+  private def dataQuads(spark: SparkSession, block: Seq[Sparql.TripleTmpl]): DataFrame = {
+    val rows = block.map { t =>
       (t.s, t.p, t.o) match {
         case (Const(s), Const(p), Const(o)) => (s, p, o, t.dt)
         case _ => throw new IllegalArgumentException(
-          s"a DATA block must be variable-free: '$block'")
+          s"a DATA block must be variable-free: '${t.s} ${t.p} ${t.o}'")
       }
     }
     spark.createDataFrame(rows).toDF("subj", "pred", "obj", "dt")
@@ -3053,7 +2039,7 @@ object GraphOps {
     * body (checked loudly; an unbound template variable is a query bug,
     * not a null triple).
     */
-  private def instantiateQuads(bindings: DataFrame, tmpl: Seq[TripleTmpl]): DataFrame = {
+  private def instantiateQuads(bindings: DataFrame, tmpl: Seq[Sparql.TripleTmpl]): DataFrame = {
     val bound = bindings.columns.toSet
     def c(t: Term): Column = t match {
       case Var(n) =>
@@ -3089,12 +2075,6 @@ object GraphOps {
       ins.distinct().join(quads.select("subj", "pred", "obj"),
         Seq("subj", "pred", "obj"), "left_anti"))
 
-  private val InsertDataRe = """(?is)^\s*INSERT\s+DATA\b(.*)$""".r
-  private val DeleteDataRe = """(?is)^\s*DELETE\s+DATA\b(.*)$""".r
-  private val DeleteWhereRe = """(?is)^\s*DELETE\s+WHERE\b(.*)$""".r
-  private val DeleteHeadRe = """(?is)^\s*DELETE\b(.*)$""".r
-  private val InsertHeadRe = """(?is)^\s*INSERT\b(.*)$""".r
-
   /** SPARQL 1.1 Update over the (subj, pred, obj, dt) quad table —
     * FUNCTIONAL, Spark-style: returns the updated table as a new lazy
     * DataFrame (the input is never mutated; a caller owning a stored
@@ -3102,7 +2082,8 @@ object GraphOps {
     * inserted edges in with [[updateClosure]]). Forms:
     *
     *  - `INSERT DATA { triples }` / `DELETE DATA { triples }` —
-    *    variable-free blocks; typed literals `"lex"^^<dt>` supported.
+    *    variable-free blocks; typed literals `"lex"^^<dt>` and
+    *    language-tagged ones `"lex"@tag` supported.
     *  - `DELETE WHERE { patterns }` — the pattern block doubles as the
     *    delete template (spec short form).
     *  - `DELETE { tmpl } INSERT { tmpl } WHERE { body }` — either
@@ -3118,66 +2099,31 @@ object GraphOps {
     * insert literal values through constants. PREFIX declarations
     * expand as in [[select]].
     */
-  def updateQuery(quads: DataFrame, text0: String): DataFrame = {
-    val text = expandPrefixes(text0)
-    val (masked, lits) = maskLiterals(text)
-    def block(rest: String): (String, String) = {
-      val (b, tail) = extractBraceBlock(rest)
-      (unmask(b, lits), tail)
-    }
-    def requireDone(tail: String): Unit =
-      require(tail.trim.isEmpty, s"unrecognized text after update: '${tail.trim}'")
-    masked match {
-      case InsertDataRe(rest) =>
-        val (b, tail) = block(rest); requireDone(tail)
-        insertQuads(quads, dataQuads(quads.sparkSession, b))
-      case DeleteDataRe(rest) =>
-        val (b, tail) = block(rest); requireDone(tail)
-        deleteQuads(quads, dataQuads(quads.sparkSession, b))
-      case DeleteWhereRe(rest) =>
-        val (b, tail) = block(rest); requireDone(tail)
-        deleteQuads(quads, instantiateQuads(compileBody(quads, b), parseTemplateBlock(b)))
-      case DeleteHeadRe(rest) =>
-        val (delB, afterDel) = block(rest)
-        val (insB, afterTmpl) = afterDel match {
-          case InsertHeadRe(r2) =>
-            val (b, t) = block(r2); (Some(b), t)
-          case other => (None, other)
-        }
-        val whereB = afterTmpl match {
-          case WhereTailRe(r3) =>
-            val (b, tail) = block(r3); requireDone(tail); b
-          case other => throw new IllegalArgumentException(
-            s"expected WHERE after the update template(s): '${other.trim}'")
-        }
-        val bindings = compileBody(quads, whereB)
-        val afterDelete = deleteQuads(quads, instantiateQuads(bindings, parseTemplateBlock(delB)))
-        insB.fold(afterDelete)(b =>
-          insertQuads(afterDelete, instantiateQuads(bindings, parseTemplateBlock(b))))
-      case InsertHeadRe(rest) =>
-        val (insB, afterIns) = block(rest)
-        val whereB = afterIns match {
-          case WhereTailRe(r2) =>
-            val (b, tail) = block(r2); requireDone(tail); b
-          case other => throw new IllegalArgumentException(
-            s"expected WHERE after the INSERT template: '${other.trim}'")
-        }
-        insertQuads(quads, instantiateQuads(compileBody(quads, whereB), parseTemplateBlock(insB)))
-      case _ => throw new IllegalArgumentException(
-        s"updateQuery expects INSERT DATA / DELETE DATA / DELETE WHERE / " +
-          s"DELETE/INSERT … WHERE, got '${text.trim.take(80)}'")
-    }
+  def updateQuery(quads: DataFrame, text0: String): DataFrame = Sparql.parse(text0) match {
+    case u: Sparql.Update => update(quads, u)
+    case _ => throw new IllegalArgumentException(updateForms(text0))
   }
 
-  private val MgmtCreateRe =
-    """(?is)^\s*CREATE\s+(?:SILENT\s+)?GRAPH\s+<([^>]*)>\s*$""".r
-  private val MgmtClearRe =
-    """(?is)^\s*(?:CLEAR|DROP)\s+(?:SILENT\s+)?(?:GRAPH\s+<([^>]*)>|(DEFAULT)|(NAMED)|(ALL))\s*$""".r
-  private val MgmtCopyRe =
-    ("""(?is)^\s*(ADD|COPY|MOVE)\s+(?:SILENT\s+)?(?:(?:GRAPH\s+)?<([^>]*)>|(DEFAULT))""" +
-      """\s+TO\s+(?:(?:GRAPH\s+)?<([^>]*)>|(DEFAULT))\s*$""").r
-  private val WithHeadRe = """(?is)^\s*WITH\s+<([^>]*)>\s*(.*)$""".r
-  private val GraphKwRe = """(?i)\bGRAPH\b""".r
+  private def updateForms(text: String): String =
+    s"updateQuery expects INSERT DATA / DELETE DATA / DELETE WHERE / " +
+      s"DELETE/INSERT … WHERE, got '${text.trim.take(80)}'"
+
+  private def update(quads: DataFrame, u: Sparql.Update): DataFrame = u match {
+    case Sparql.DataUpdate(insert, segments) =>
+      require(segments.forall(_._1.isEmpty),
+        "GRAPH blocks in a DATA update need a graph column — use updateQuadsQuery")
+      require(segments.nonEmpty, "empty data/template block")
+      val dq = dataQuads(quads.sparkSession, segments.flatMap(_._2))
+      if (insert) insertQuads(quads, dq) else deleteQuads(quads, dq)
+    case Sparql.DeleteWhere(template, where) =>
+      deleteQuads(quads, instantiateQuads(compileBody(quads, where), template))
+    case Sparql.Modify(del, ins, where) =>
+      val bindings = compileBody(quads, where)
+      val afterDelete = del.fold(quads)(t => deleteQuads(quads, instantiateQuads(bindings, t)))
+      ins.fold(afterDelete)(t => insertQuads(afterDelete, instantiateQuads(bindings, t)))
+    case other => throw new IllegalArgumentException(
+      s"${other.productPrefix} needs a named-graph table — use updateQuadsQuery")
+  }
 
   /** Rewrite one named graph through `f` (which sees a plain 4-column
     * triple table), leaving every other graph's rows untouched — the
@@ -3190,51 +2136,6 @@ object GraphOps {
     quads.filter(col("graph") =!= lit(g)).unionByName(
       f(quads.filter(col("graph") === lit(g)).select("subj", "pred", "obj", "dt"))
         .withColumn("graph", lit(g)))
-
-  /** Split a DATA block body into (graph, tripleText) segments:
-    * top-level triples target the default graph (`""`), `GRAPH <g> { … }`
-    * blocks target g. Scans literal- AND IRI-masked text, so a literal
-    * or IRI containing the word "graph" never derails the split.
-    */
-  private def splitDataGraphSegments(body: String): Seq[(String, String)] = {
-    val (litMasked, lits) = maskLiterals(body)
-    val (masked, iris) = maskIris(litMasked)
-    def um(x: String): String = unmask(unmaskIris(x, iris), lits)
-    val GraphIriHead = ("""(?s)^\s*""" + IriMaskChar + """(\d+)""" + IriMaskChar + """\s*(.*)$""").r
-    val segs = scala.collection.mutable.Buffer[(String, String)]()
-    var rest = masked
-    var done = false
-    while (!done) {
-      GraphKwRe.findFirstMatchIn(rest) match {
-        case None =>
-          if (rest.trim.nonEmpty) segs += ("" -> um(rest))
-          done = true
-        case Some(m) =>
-          val before = rest.substring(0, m.start)
-          if (before.trim.nonEmpty) segs += ("" -> um(before))
-          rest.substring(m.end) match {
-            case GraphIriHead(idx, r2) =>
-              val g = iris(idx.toInt).stripPrefix("<").stripSuffix(">")
-              val (b, tail) = extractBraceBlock(r2)
-              segs += (g -> um(b))
-              rest = tail
-            case other => throw new IllegalArgumentException(
-              s"expected GRAPH <iri> { … } in DATA block at: '${um(other).trim.take(60)}'")
-          }
-      }
-    }
-    segs.toSeq
-  }
-
-  private def applyDataSegments(quads: DataFrame, body: String,
-                                insert: Boolean): DataFrame =
-    splitDataGraphSegments(body).groupBy(_._1).toSeq.sortBy(_._1)
-      .foldLeft(quads) { case (acc, (g, parts)) =>
-        val dq = parts.map(p => dataQuads(quads.sparkSession, p._2))
-          .reduce(_.unionByName(_))
-        mapGraphSlice(acc, g)(t =>
-          if (insert) insertQuads(t, dq) else deleteQuads(t, dq))
-      }
 
   /** SPARQL 1.1 Update over a NAMED-GRAPH quad table (subj, pred, obj,
     * dt, graph) — the default graph is `graph = ""` (this engine's
@@ -3259,47 +2160,36 @@ object GraphOps {
     * untargeted graphs' rows flow through untouched, so a
     * graph-partitioned stored table updates one partition's files.
     */
-  def updateQuadsQuery(quads: DataFrame, text0: String): DataFrame = {
-    val text = expandPrefixes(text0)
-    val (masked, lits) = maskLiterals(text)
-    def block(rest: String): (String, String) = {
-      val (b, tail) = extractBraceBlock(rest)
-      (unmask(b, lits), tail)
-    }
-    masked match {
-      case MgmtCreateRe(_) => quads
-      case MgmtClearRe(g, dflt, named, all) =>
-        if (all != null) quads.limit(0)
-        else if (named != null) quads.filter(col("graph") === lit(""))
-        else quads.filter(col("graph") =!= lit(if (dflt != null) "" else g))
-      case MgmtCopyRe(op, srcIri, srcDef, dstIri, dstDef) =>
-        val src = if (srcDef != null) "" else srcIri
-        val dst = if (dstDef != null) "" else dstIri
-        if (src == dst) quads
-        else {
-          val srcRows = quads.filter(col("graph") === lit(src))
-            .select("subj", "pred", "obj", "dt")
-          op.toUpperCase match {
-            case "ADD" => mapGraphSlice(quads, dst)(t => insertQuads(t, srcRows))
-            case "COPY" => quads.filter(col("graph") =!= lit(dst))
-              .unionByName(srcRows.withColumn("graph", lit(dst)))
-            case "MOVE" => quads
-              .filter(col("graph") =!= lit(dst) && col("graph") =!= lit(src))
-              .unionByName(srcRows.withColumn("graph", lit(dst)))
-          }
+  def updateQuadsQuery(quads: DataFrame, text0: String): DataFrame = Sparql.parse(text0) match {
+    case u: Sparql.Update => updateQuads(quads, u)
+    case _ => throw new IllegalArgumentException(updateForms(text0))
+  }
+
+  private def updateQuads(quads: DataFrame, u: Sparql.Update): DataFrame = u match {
+    case Sparql.CreateGraph(_) => quads
+    case Sparql.ClearAll => quads.limit(0)
+    case Sparql.ClearNamed => quads.filter(col("graph") === lit(""))
+    case Sparql.ClearGraph(g) => quads.filter(col("graph") =!= lit(g))
+    case Sparql.Transfer(op, src, dst) =>
+      if (src == dst) quads
+      else {
+        val srcRows = quads.filter(col("graph") === lit(src))
+          .select("subj", "pred", "obj", "dt")
+        op match {
+          case "ADD" => mapGraphSlice(quads, dst)(t => insertQuads(t, srcRows))
+          case "COPY" => quads.filter(col("graph") =!= lit(dst))
+            .unionByName(srcRows.withColumn("graph", lit(dst)))
+          case "MOVE" => quads
+            .filter(col("graph") =!= lit(dst) && col("graph") =!= lit(src))
+            .unionByName(srcRows.withColumn("graph", lit(dst)))
         }
-      case WithHeadRe(g, rest) =>
-        mapGraphSlice(quads, g)(slice => updateQuery(slice, unmask(rest, lits)))
-      case InsertDataRe(rest) =>
-        val (b, tail) = block(rest)
-        require(tail.trim.isEmpty, s"unrecognized text after update: '${tail.trim}'")
-        applyDataSegments(quads, b, insert = true)
-      case DeleteDataRe(rest) =>
-        val (b, tail) = block(rest)
-        require(tail.trim.isEmpty, s"unrecognized text after update: '${tail.trim}'")
-        applyDataSegments(quads, b, insert = false)
-      case _ =>
-        mapGraphSlice(quads, "")(slice => updateQuery(slice, text))
-    }
+      }
+    case Sparql.WithGraph(g, inner) => mapGraphSlice(quads, g)(slice => update(slice, inner))
+    case Sparql.DataUpdate(insert, segments) =>
+      segments.groupBy(_._1).toSeq.sortBy(_._1).foldLeft(quads) { case (acc, (g, parts)) =>
+        val dq = parts.map(p => dataQuads(quads.sparkSession, p._2)).reduce(_.unionByName(_))
+        mapGraphSlice(acc, g)(t => if (insert) insertQuads(t, dq) else deleteQuads(t, dq))
+      }
+    case _ => mapGraphSlice(quads, "")(slice => update(slice, u))
   }
 }

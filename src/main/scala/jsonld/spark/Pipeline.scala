@@ -373,60 +373,15 @@ object Pipeline extends Serializable {
   }
 
   def dedupForWrite(q: Dataset[QuadRow], buckets: Int = 64): DataFrame =
-    adjacentDedupUnsafe(bucketSorted(q, buckets), qhIdx = 8).drop("qh")
+    adjacentDedupUnsafe(bucketSorted(q, buckets)).drop("qh")
 
-  /** [[bucketSorted]] with the `pred` column DICTIONARY-ENCODED for the
-    * shuffle: predicates are drawn from a tiny vocabulary (ontologies,
-    * not free text), so shipping the full IRI string on every quad is
-    * the single largest avoidable wire cost of the dedup+write exchange.
-    * Known predicates travel as an int code (`predCode`) with a NULL
-    * `predStr`; unknown ones fall back to the string — lossless either
-    * way, and the encoding is injective, so byte-equality dedup over the
-    * (code, str) pair equals dedup over `pred`. `predBucket` still
-    * hashes the ORIGINAL string (same layout as the plain path);
-    * [[dedupForWriteDict]] decodes after the exchange.
-    */
-  def bucketSortedDict(q: Dataset[QuadRow], buckets: Int,
-                       dict: Map[String, Int]): DataFrame = {
-    val dictCol = map(dict.toSeq.sortBy(_._1)
-      .flatMap { case (p, c) => Seq(lit(p), lit(c)) }: _*)
-    val (bucketed, key) = withBucketKey(q.toDF().drop("docId"), buckets)
-    bucketed
-      .withColumn("predCode", element_at(dictCol, col("pred")))
-      .withColumn("predStr",
-        when(col("predCode").isNotNull, lit(null).cast("string")).otherwise(col("pred")))
-      .drop("pred")
-      .withColumn("qh", xxhash64(Seq("subj", "predCode", "predStr", "obj", "objKind",
-        "objDatatype", "objLang", "graph").map(col): _*))
-      .repartition(key: _*)
-      .sortWithinPartitions(col("qh"))
-  }
-
-  /** [[dedupForWrite]] over the dictionary-encoded exchange: same fused
-    * one-shuffle dedup, `pred` decoded back (reverse-map lookup, string
-    * fallback) after the exchange, before the write.
-    */
-  def dedupForWriteDict(q: Dataset[QuadRow], buckets: Int,
-                        dict: Map[String, Int]): DataFrame = {
-    // column layout after drop(pred): subj 0, obj 1, objKind 2,
-    // objDatatype 3, objLang 4, graph 5, predBucket 6, predCode 7,
-    // predStr 8, qh 9
-    val deduped = adjacentDedupUnsafe(bucketSortedDict(q, buckets, dict), qhIdx = 9)
-      .drop("qh")
-    val rev = map(dict.toSeq.sortBy(_._1)
-      .flatMap { case (p, c) => Seq(lit(c), lit(p)) }: _*)
-    deduped
-      .withColumn("pred", coalesce(element_at(rev, col("predCode")), col("predStr")))
-      .drop("predCode", "predStr")
-  }
-
-  private def adjacentDedupUnsafe(sorted: DataFrame, qhIdx: Int): DataFrame = {
+  private def adjacentDedupUnsafe(sorted: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     // adjacent-dedup over raw UnsafeRows (GraftInternal): the Row-encoder
     // version allocated one boxed row per quad and inverted thread scaling
     org.apache.spark.sql.GraftInternal.mapPartitionsUnsafe(sorted, { rows =>
       new Iterator[InternalRow] {
-        private val QhIdx = qhIdx // trailing qh column
+        private val QhIdx = 8 // trailing qh column
         // rows share a mutable buffer → copy anything retained (one flat
         // byte-array copy per row; no boxing, no string decode)
         private var pending: InternalRow = if (rows.hasNext) {
@@ -468,11 +423,4 @@ object Pipeline extends Serializable {
     */
   def dedupAndWritePartitioned(q: Dataset[QuadRow], target: String, buckets: Int = 64): Unit =
     CorpusIO.writeTriples(dedupForWrite(q, buckets), target, buckets)
-
-  /** [[dedupAndWritePartitioned]] through the dictionary-encoded
-    * exchange ([[dedupForWriteDict]]) — same sink, fewer shuffle bytes.
-    */
-  def dedupAndWritePartitionedDict(q: Dataset[QuadRow], target: String, buckets: Int,
-                                   dict: Map[String, Int]): Unit =
-    CorpusIO.writeTriples(dedupForWriteDict(q, buckets, dict), target, buckets)
 }

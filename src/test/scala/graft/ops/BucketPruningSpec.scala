@@ -161,10 +161,6 @@ class BucketPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(pruned, s"not pruned over the 4-bucket graph: $text")
       assert(rows.nonEmpty && rows == run(triples, text)._1, s"rows differ over the 4-bucket graph: $text")
     }
-    // the dictionary-encoded exchange keeps the count on its predBucket
-    val dict = root.resolve("dict")
-    CorpusIO.writeTriples(Pipeline.dedupForWriteDict(q, 4, Map(V + "score" -> 0)), dict.toString)
-    assert(CorpusIO.bucketCount(spark, dict.toString).contains(4))
     // a predBucket of unknown origin leaves the graph unmarked
     val own = root.resolve("own")
     CorpusIO.writeTriples(q.toDF().drop("docId")

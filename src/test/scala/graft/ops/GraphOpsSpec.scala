@@ -164,19 +164,25 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withoutFlag.count() == 0, "absent constant triple must gate out all bindings")
   }
 
+  /** The one group a bare pattern block parses to. */
+  private def group(text: String): Sparql.Group = Sparql.parse(text) match {
+    case Sparql.BareQuery(Seq(g: Sparql.Group)) => g
+    case other => fail(s"not a one-group pattern block: $other")
+  }
+
   test("parsePatterns: vars, IRIs, quoted literals (with spaces), dot separators") {
-    val pats = GraphOps.parsePatterns(
+    val pats = group(
       """?c <urn:p#in> ?n .
         |?n <urn:p#name> "MIDDLE EAST" .
-        |?n <urn:p#of> <urn:r/1>""".stripMargin)
+        |?n <urn:p#of> <urn:r/1>""".stripMargin).triples
     assert(pats == Seq(
       TriplePattern(Var("c"), Const("urn:p#in"), Var("n")),
       TriplePattern(Var("n"), Const("urn:p#name"), Const("MIDDLE EAST")),
       TriplePattern(Var("n"), Const("urn:p#of"), Const("urn:r/1"))))
     // trailing dot is tolerated
-    assert(GraphOps.parsePatterns("?a <urn:p> ?b .").length == 1)
-    assertThrows[IllegalArgumentException](GraphOps.parsePatterns("?a <urn:p>"))
-    assertThrows[IllegalArgumentException](GraphOps.parsePatterns("?a bare ?b"))
+    assert(group("?a <urn:p> ?b .").triples.length == 1)
+    assertThrows[IllegalArgumentException](group("?a <urn:p>"))
+    assertThrows[IllegalArgumentException](group("?a bare ?b"))
   }
 
   test("construct: template instantiation per binding, set semantics") {
@@ -245,18 +251,17 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parsePatterns: quoted literal containing ' . ' does not split the pattern") {
-    val pats = GraphOps.parsePatterns(
-      """?a <urn:p#note> "one . two" . ?a <urn:p#of> ?b""")
+    val pats = group("""?a <urn:p#note> "one . two" . ?a <urn:p#of> ?b""").triples
     assert(pats == Seq(
       TriplePattern(Var("a"), Const("urn:p#note"), Const("one . two")),
       TriplePattern(Var("a"), Const("urn:p#of"), Var("b"))))
   }
 
   test("parseQuery: FILTER clauses extract (numeric + string), patterns parse around them") {
-    val q = GraphOps.parseQuery(
+    val q = group(
       """?n <urn:p#rk> ?rk . FILTER(?rk >= 2) .
         |?n <urn:p#name> ?name . FILTER(?name != "EGYPT")""".stripMargin)
-    assert(q.patterns.length == 2)
+    assert(q.triples.length == 2)
     assert(q.filters == Seq(
       VarFilter("rk", ">=", Left(2.0)),
       VarFilter("name", "!=", Right("EGYPT"))))
@@ -326,6 +331,49 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(pairs(quadTable, op) == want, s"<p:broader>$op over (subj, pred, obj, dt, graph)")
     }
   }
+
+  /** Path pairs of `<p>op` over one edge set, computed on the driver. */
+  private def pathPairs(edges: Set[(String, String)], op: String): Set[(String, String)] = {
+    val identity = edges.flatMap { case (a, b) => Set((a, a), (b, b)) }
+    var closed = edges
+    var grown = op != "?"
+    while (grown) {
+      val next = closed ++ (for ((a, b) <- closed; (c, d) <- edges if b == c) yield (a, d))
+      grown = next.size > closed.size
+      closed = next
+    }
+    if (op == "+") closed else closed ++ identity
+  }
+
+  for (op <- Seq("+", "*", "?"))
+    test(s"GRAPH block path <p>$op closes per graph: GRAPH <g> selects, GRAPH ?g binds, no cross-graph hops") {
+      val sp = spark; import sp.implicits._
+      val g1 = Set(("a", "b"), ("b", "c"))
+      val g2 = Set(("c", "d")) // continues g1's chain in another graph
+      val quadTable = (g1.toSeq.map { case (x, y) => (x, "p:broader", y, "", "g1") } ++
+        g2.toSeq.map { case (x, y) => (x, "p:broader", y, "", "g2") } :+
+        (("b", "p:label", "mid", XsdString, "g1")))
+        .toDF("subj", "pred", "obj", "dt", "graph")
+      def pairs(text: String) = select(quadTable, text).select("x", "y").collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      assert(pairs(s"GRAPH <g1> { ?x <p:broader>$op ?y }") == pathPairs(g1, op))
+      val bound = select(quadTable, s"GRAPH ?g { ?x <p:broader>$op ?y }")
+        .select("g", "x", "y").collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      assert(bound == pathPairs(g1, op).map { case (x, y) => ("g1", x, y) } ++
+        pathPairs(g2, op).map { case (x, y) => ("g2", x, y) })
+      // outside GRAPH the chain connects across graphs; inside it does not
+      val outside = pairs(s"?x <p:broader>$op ?y")
+      assert(outside == pathPairs(g1 ++ g2, op))
+      if (op != "?") assert(outside.contains(("a", "d")) && !bound.exists(t => (t._2, t._3) == (("a", "d"))))
+      // both kinds in one group: each pattern sees its own closure triples once
+      val both = select(quadTable, s"?x <p:broader>$op ?y . GRAPH ?g { ?x <p:broader>$op ?y }")
+      assert(both.count() == bound.size)
+      // FROM NAMED closes over the named side only
+      val named = select(quadTable,
+        s"SELECT ?g ?x ?y FROM NAMED <g1> WHERE { GRAPH ?g { ?x <p:broader>$op ?y } }")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      assert(named == pathPairs(g1, op).map { case (x, y) => ("g1", x, y) })
+    }
 
   test("select: composed text query — UNION branches with FILTER and OPTIONAL") {
     val kg = quads(
@@ -445,6 +493,13 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         |{ ?m <p:cust> ?n . ?n <p:rk> ?rk . FILTER(?rk <= 1) }""".stripMargin)
       .select("m").collect().map(_.getString(0)).toSet
     assert(le == Set("s1", "c1"))
+  }
+
+  test("select: a variable named ?where works in the headed form") {
+    val kg = quads(("a", "p:x", "b", ""), ("c", "p:y", "d", ""))
+    val got = select(kg, "SELECT ?where WHERE { ?where <p:x> ?o }")
+    assert(got.columns.toSeq == Seq("where"))
+    assert(got.collect().map(_.getString(0)).toSeq == Seq("a"))
   }
 
   test("select: '?my_union' variable does not trigger a bogus top-level split") {
@@ -597,7 +652,7 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parseQuery/select: FILTER(?a < ?b) compares two bound variables numerically") {
-    val q = GraphOps.parseQuery("?n <p:a> ?x . ?n <p:b> ?y . FILTER(?x < ?y)")
+    val q = group("?n <p:a> ?x . ?n <p:b> ?y . FILTER(?x < ?y)")
     assert(q.filters == Seq(VarCompare("x", "<", "y")))
     val kg = quads(
       ("n1", "p:a", "2", XsdInteger), ("n1", "p:b", "10", XsdInteger),

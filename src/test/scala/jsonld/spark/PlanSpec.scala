@@ -120,28 +120,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p2.contains("Exchange"), s"dedup added a shuffle:\n$p2")
   }
 
-  test("dict-encoded dedup+write: identical quad set, still one exchange, unknown preds survive") {
-    import org.apache.spark.sql.Encoders
-    val rows = (0 until 20).map(i =>
-      QuadRow(s"d$i", s"s${i % 5}",
-        if (i % 3 == 0) "urn:p:known" else s"urn:p:odd$i", // mixed: in-dict + unknown
-        s"o${i % 7}", 0.toByte, "", "", "")) ++ Seq(
-      QuadRow("dupA", "s0", "urn:p:known", "o0", 0.toByte, "", "", ""),
-      QuadRow("dupB", "s0", "urn:p:known", "o0", 0.toByte, "", "", "")) // exact duplicates of i=0
-    val q = spark.createDataset(rows)(Encoders.product[QuadRow])
-    val dict = Map("urn:p:known" -> 0)
-    def collectSet(df: org.apache.spark.sql.DataFrame) =
-      df.select("subj", "pred", "obj").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    val plain = collectSet(Pipeline.dedupForWrite(q, buckets = 8))
-    val dicted = collectSet(Pipeline.dedupForWriteDict(q, buckets = 8, dict))
-    assert(plain.size == plain.toSet.size && dicted.toSet == plain.toSet,
-      "dictionary encoding must not change the deduplicated quad set")
-    // the decode projection adds no shuffle on top of the fused exchange
-    val p = plan(Pipeline.dedupForWriteDict(q, buckets = 8, dict))
-    assert(!p.contains("Exchange"), s"dict decode added a shuffle:\n$p")
-  }
-
   test("BGP over the bucketed triple table prunes partitions and pushes the pred filter") {
     import graft.ops.GraphOps
     // materialize a triple table the way the pipeline does: partitioned
