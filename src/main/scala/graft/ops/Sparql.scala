@@ -333,6 +333,7 @@ private[ops] object Sparql {
         case "CONSTRUCT" => construct()
         case "ASK" =>
           next()
+          accept("WHERE")
           val q = AskQuery(braced(body))
           done("ASK block")
           q
@@ -394,7 +395,8 @@ private[ops] object Sparql {
       val defaults = ArrayBuffer[String]()
       val named = ArrayBuffer[String]()
       var star = false
-      while (!isKw("WHERE")) {
+      // the head ends at WHERE or, that keyword being optional, at `{`
+      while (!isKw("WHERE") && !isSym("{")) {
         if (pos >= end) fail("SELECT needs a WHERE { … } block")
         if (accept("FROM")) {
           if (accept("NAMED")) named += iri() else defaults += iri()
@@ -402,7 +404,7 @@ private[ops] object Sparql {
         else if (star) fail(s"unrecognized SELECT projection '${show(peek)}' after '*'")
         else projs += projection()
       }
-      next()
+      accept("WHERE")
       val where = braced(body)
       val groupBy = ArrayBuffer[String]()
       val having = ArrayBuffer[Constraint]()
@@ -490,8 +492,8 @@ private[ops] object Sparql {
     // ---------------------------------------------- graph patterns
 
     /** Top-level UNION branches between `pos` and `end`. A branch that
-      * is one `{ … }` block loses its braces; a braced branch holding a
-      * lone `SELECT` is a sub-select.
+      * is one `{ … }` block loses its braces, as often as they nest; a
+      * braced branch holding a lone `SELECT` is a sub-select.
       */
     private def body(end: Int): Seq[Branch] = {
       val out = ArrayBuffer[Branch]()
@@ -500,15 +502,17 @@ private[ops] object Sparql {
         var stop = pos
         while (stop < end && !isKw("UNION", toks(stop)))
           stop = if (isSym("{", toks(stop))) closeOf(stop) + 1 else stop + 1
-        out += (if (isSym("{") && closeOf(pos) == stop - 1) braced(groupOrSelect) else groupOrSelect(stop))
+        out += branch(stop)
         more = stop < end
         if (more) next()
       }
       out.toSeq
     }
 
-    private def groupOrSelect(end: Int): Branch =
-      if (isKw("SELECT")) select(end) else group(end)
+    private def branch(end: Int): Branch =
+      if (isSym("{") && closeOf(pos) == end - 1) braced(branch)
+      else if (isKw("SELECT")) select(end)
+      else group(end)
 
     private def group(end: Int): Group = {
       val start = pos

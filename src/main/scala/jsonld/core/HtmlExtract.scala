@@ -7,8 +7,8 @@ package jsonld.core
   *
   * Fixture-grade HTML needs no full parser: script elements carry raw
   * text content, so attribute-aware regex scanning is exact for this
-  * grammar. The same extractor backs corpus detection (jsonld.spark.Detect
-  * uses the simpler form) and the HtmlTest suites.
+  * grammar. The same scan ([[scripts]]) backs corpus detection
+  * (jsonld.spark.Detect) and the HtmlTest suites.
   */
 object HtmlExtract {
 
@@ -26,13 +26,14 @@ object HtmlExtract {
         throw JsonLdError(JsonLdError.InvalidScriptElement, String.valueOf(e.getMessage))
     }
 
-  /** @param fragment URL fragment targeting a script by element id ("" = none)
-    * @param extractAllScripts merge every ld+json script into one array
+  /** The `(id, body)` of every `application/ld+json` script element of
+    * `html`, in document order: the type matched case-insensitively and
+    * with or without parameters (`application/ld+json; charset=utf-8`),
+    * attribute names in any case; `id` is "" when the element has none.
+    * Bodies are raw text, unparsed.
     */
-  def extract(html: String, fragment: String, extractAllScripts: Boolean): Extracted = {
-    val baseHref = baseRe.findFirstMatchIn(html).map(_.group(1))
-
-    val scripts: Seq[(String, String)] = scriptRe.findAllMatchIn(html).flatMap { m =>
+  def scripts(html: String): Seq[(String, String)] =
+    scriptRe.findAllMatchIn(html).flatMap { m =>
       val attrs = m.group(1)
       val tpe = typeAttrRe.findFirstMatchIn(attrs).map(_.group(1).trim.toLowerCase).getOrElse("")
       if (tpe == "application/ld+json" || tpe.startsWith("application/ld+json;")) {
@@ -41,17 +42,25 @@ object HtmlExtract {
       } else None
     }.toSeq
 
+  /** @param fragment URL fragment targeting a script by element id ("" = none)
+    * @param extractAllScripts merge every ld+json script into one array
+    */
+  def extract(html: String, fragment: String, extractAllScripts: Boolean): Extracted = {
+    val baseHref = baseRe.findFirstMatchIn(html).map(_.group(1))
+
+    val found = scripts(html)
+
     if (fragment != null && fragment.nonEmpty) {
-      scripts.find(_._1 == fragment) match {
+      found.find(_._1 == fragment) match {
         case Some((_, body)) => Extracted(parseScript(body), baseHref)
         case None => throw JsonLdError(JsonLdError.LoadingDocumentFailed,
           s"no application/ld+json script with id $fragment")
       }
     } else if (extractAllScripts) {
-      if (scripts.isEmpty)
+      if (found.isEmpty)
         throw JsonLdError(JsonLdError.LoadingDocumentFailed, "no application/ld+json script elements")
       val out = Json.arr()
-      scripts.foreach { case (_, body) =>
+      found.foreach { case (_, body) =>
         parseScript(body) match {
           case a: Json.JArr @unchecked => out ++= a
           case other => out += other
@@ -59,7 +68,7 @@ object HtmlExtract {
       }
       Extracted(out, baseHref)
     } else {
-      scripts.headOption match {
+      found.headOption match {
         case Some((_, body)) => Extracted(parseScript(body), baseHref)
         case None => throw JsonLdError(JsonLdError.LoadingDocumentFailed,
           "no application/ld+json script elements")

@@ -1,7 +1,6 @@
 package jsonld.spark
 
-import jsonld.core.{Json, JsonLdUtils}
-import java.security.MessageDigest
+import jsonld.core.HtmlExtract
 
 /** Embedded JSON-LD detection — the pipeline's generator stage.
   *
@@ -27,41 +26,18 @@ object Detect extends Serializable {
       content.contains("application/ld+json")
   }
 
-  private val scriptRe =
-    "(?is)<script[^>]*type\\s*=\\s*[\"']application/ld\\+json[\"'][^>]*>(.*?)</script>".r
-
-  // thread-local digest: getInstance's locked provider lookup serializes
-  // executor threads at scale; digest(bytes) resets, so reuse is safe here
-  // (no nested use)
-  private val sha256Local: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("SHA-256"))
-  private val HexChars = "0123456789abcdef".toCharArray
-
-  def sha256Hex(s: String): String = {
-    val d = sha256Local.get().digest(s.getBytes("UTF-8"))
-    val out = new Array[Char](64)
-    var i = 0
-    while (i < d.length) {
-      out(2 * i) = HexChars((d(i) >> 4) & 0xf)
-      out(2 * i + 1) = HexChars(d(i) & 0xf)
-      i += 1
-    }
-    new String(out)
-  }
-
   /** Extract 0..n candidate JSON-LD documents from one file. Pure; returns
     * raw JSON strings — parsing/validation happens in the transform stage so
     * detection stays cheap.
     */
   def detect(f: RepoFile): Iterator[DetectedDoc] = {
     if (!cheapSignal(f.lang, f.path, f.content)) return Iterator.empty
-    val sha = sha256Hex(f.content)
     val base = s"graft://${f.repo}/${f.path}"
     val lower = if (f.lang == null) "" else f.lang.toLowerCase
 
     val candidates: Seq[String] =
       if (lower == "html" || f.path.endsWith(".html") || f.path.endsWith(".htm")) {
-        scriptRe.findAllMatchIn(f.content).map(_.group(1).trim).toSeq
+        HtmlExtract.scripts(f.content).map(_._2)
       } else if (lower == "jsonld" || lower == "json" ||
                  f.path.endsWith(".jsonld") || f.path.endsWith(".json")) {
         Seq(f.content)
@@ -81,8 +57,7 @@ object Detect extends Serializable {
         // short commit keeps the id unique per snapshot while saving ~50
         // bytes on every downstream quad row (docId rides the shuffle)
         docId = s"${f.repo}/${f.path}@${f.commit.take(12)}#$idx",
-        repo = f.repo, path = f.path, commit = f.commit,
-        docIdx = idx, baseIri = base, json = t, contentSha256 = sha))
+        repo = f.repo, path = f.path, baseIri = base, json = t))
     }
   }
 }

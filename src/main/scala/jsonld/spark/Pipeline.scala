@@ -16,10 +16,10 @@ import jsonld.core.Rdf._
   * core inside `mapPartitions` — one task processes many documents, no
   * per-document state ever crosses a task boundary (blank-node scopes are
   * per document). Corpus-level relational work (dedup, joins, bucketing,
-  * lineage aggregation) is left to Catalyst: it shuffles only at
-  * `dropDuplicates` / the predicate-bucket repartition, which writes one
-  * parquet file per bucket whenever `buckets >= spark.sql.shuffle.partitions`
-  * ([[bucketSorted]]). The written graph records its bucket count in a
+  * lineage aggregation) is left to Catalyst: the written graph shuffles
+  * once, at the predicate-bucket repartition that both dedups and writes
+  * ([[dedupForWrite]]), one parquet file per bucket whenever
+  * `buckets >= spark.sql.shuffle.partitions` ([[bucketSorted]]). The written graph records its bucket count in a
   * hidden marker ([[CorpusIO.BucketsMarker]]), and `GraphOps` prunes each
   * constant-predicate triple pattern over it to that predicate's bucket
   * ([[bucketOf]]): the scan opens one `predBucket=` directory, not all.
@@ -72,12 +72,14 @@ object Pipeline extends Serializable {
 
   /** Incremental ingest: keep only files that are NEW or whose content
     * CHANGED since a prior run. `prevManifest` is the previous run's
-    * (path, content_sha256) table — exactly what the detect stage records
-    * per row — and the filter is one left-anti join on those two columns
-    * (broadcast when the manifest is small, shuffle otherwise; AQE
-    * decides). At 10^12 files reprocessing the unchanged 99% is the
-    * difference between a nightly delta and a week-long full rebuild;
-    * content-hash (not mtime/commit) comparison makes the delta exact.
+    * (path, content_sha256) table, content_sha256 being
+    * `sha2(content, 256)` of that run's corpus, computed as here rather
+    * than recorded by a stage; the filter is one left-anti join on those
+    * two columns (broadcast when the manifest is small, shuffle
+    * otherwise; AQE decides). At 10^12 files reprocessing the unchanged
+    * 99% is the difference between a nightly delta and a week-long full
+    * rebuild; content-hash (not mtime/commit) comparison makes the delta
+    * exact.
     */
   def incrementalCorpus(corpus: Dataset[RepoFile],
                         prevManifest: DataFrame): Dataset[RepoFile] = {
@@ -118,7 +120,6 @@ object Pipeline extends Serializable {
   def transformStage(docs: Dataset[DetectedDoc],
                      contextCache: Broadcast[Map[String, String]],
                      counters: Counters,
-                     canonicalize: Boolean = true,
                      maxPermutations: Long = 100000L): Dataset[PipeRow] = {
     import docs.sparkSession.implicits._
     docs.mapPartitions { iter =>
@@ -148,11 +149,8 @@ object Pipeline extends Serializable {
           // relative-IRI skips (both silent in the reference)
           counters.quadsDropped.add(
             dataset.droppedQuads + dataset.skippedRelative + dataset.skippedGeneralized)
-          val quads: Seq[(String, Quad)] =
-            if (canonicalize)
-              new Canonicalizer("URDNA2015", maxPermutations).canonicalQuads(dataset)
-                .map { case (g, q) => (if (g.isEmpty) "@default" else g, q) }
-            else dataset.allQuads
+          val quads = new Canonicalizer("URDNA2015", maxPermutations).canonicalQuads(dataset)
+            .map { case (g, q) => (if (g.isEmpty) "@default" else g, q) }
           counters.docsOk.add(1)
           counters.quadsOut.add(quads.size)
           quads.iterator.map { case (graphName, q) =>
@@ -201,12 +199,13 @@ object Pipeline extends Serializable {
       .as[ErrorRow]
   }
 
-  /** Corpus-level triple dedup — set semantics across documents. Hash
-    * aggregate, map-side partial combine; the single unavoidable shuffle of
-    * the spine. docId is dropped BEFORE the shuffle: dedup keeps an
-    * arbitrary witness anyway, and at corpus scale the column is pure
-    * shuffle weight (the graph is the quad set, provenance lives in the
-    * lineage/quarantine tables).
+  /** Corpus-level triple dedup — set semantics across documents — for a
+    * graph that stays in memory (a written graph dedups in its write,
+    * [[dedupForWrite]]). Hash aggregate, map-side partial combine. docId
+    * is dropped BEFORE the shuffle: dedup keeps an arbitrary witness
+    * anyway, and at corpus scale the column is pure shuffle weight (the
+    * graph is the quad set, provenance lives in the lineage/quarantine
+    * tables).
     */
   def dedupQuads(q: Dataset[QuadRow]): DataFrame =
     q.toDF().drop("docId")
@@ -230,8 +229,10 @@ object Pipeline extends Serializable {
     * (north rule: resumable from checkpointed stage outputs). Stage names
     * are deterministic, so resume is a pure function of the work dir.
     *
-    * Returns the final deduped quads DataFrame (read back from storage —
-    * lineage is cut at each checkpoint).
+    * The graph stage is [[dedupAndWritePartitioned]], the one shuffle and
+    * one write of the timed spine, so `workDir/graph` carries the bucket
+    * marker. Returns the deduped quads read back from that graph without
+    * `predBucket` (lineage is cut at each checkpoint).
     */
   def runResumable(spark: SparkSession, corpus: Dataset[RepoFile], workDir: String,
                    contextCache: Broadcast[Map[String, String]],
@@ -251,30 +252,12 @@ object Pipeline extends Serializable {
     CorpusIO.stage(spark, s"$workDir/quarantine") { quarantine(pipe).toDF() }
     CorpusIO.stage(spark, s"$workDir/lineage") { lineage(pipe) }
 
-    val quadsDf = CorpusIO.stage(spark, s"$workDir/stage3_quads") {
-      dedupQuads(quads(pipe))
+    val graph = s"$workDir/graph"
+    if (!CorpusIO.stageDone(spark, graph)) {
+      dedupAndWritePartitioned(quads(pipe), graph, buckets)
+      CorpusIO.markDone(spark, graph)
     }
-    if (!CorpusIO.stageDone(spark, s"$workDir/graph")) {
-      writePartitioned(quadsDf, s"$workDir/graph", buckets)
-      CorpusIO.markDone(spark, s"$workDir/graph")
-    }
-    quadsDf
-  }
-
-  /** Predicate-bucketed graph materialization: co-locates quads of one
-    * predicate family, sorted for run-length-friendly encoding and
-    * pushdown-able reads at 100 TB (SURVEY.md §2.10). Marks the graph
-    * with its bucket count ([[CorpusIO.markBuckets]]) after the write.
-    */
-  def writePartitioned(quadsDf: DataFrame, outDir: String, buckets: Int = 64): Unit = {
-    val (bucketed, key) = withBucketKey(quadsDf, buckets)
-    bucketed
-      .repartition(key: _*)
-      .sortWithinPartitions("subj", "pred", "obj")
-      .write.mode("overwrite")
-      .partitionBy("predBucket")
-      .parquet(outDir)
-    CorpusIO.markBuckets(quadsDf.sparkSession, outDir, buckets)
+    spark.read.parquet(graph).drop("predBucket")
   }
 
   /** The bucket of a predicate column: `pmod(hash(pred), buckets)`. */
@@ -345,9 +328,9 @@ object Pipeline extends Serializable {
     * on fewer tasks than cores, its largest bucket on one task; set P
     * above `buckets` for such a corpus.
     *
-    * ONE shuffle for dedup and write: `dropDuplicates` followed by
-    * `writePartitioned` shuffles every quad twice (hash-agg exchange,
-    * then the write repartition). But two equal quads share pred and
+    * ONE shuffle for dedup and write: `dropDuplicates` followed by a
+    * bucketed write shuffles every quad twice (hash-agg exchange, then
+    * the write repartition). But two equal quads share pred and
     * subj, hence the same exchange key whatever `salts` is, so the
     * write's own repartition already co-locates duplicates, and dedup
     * degenerates to dropping adjacent rows after the per-partition sort.

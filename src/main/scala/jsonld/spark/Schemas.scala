@@ -12,18 +12,16 @@ final case class RepoFile(
     content: String)
 
 /** One embedded JSON-LD document detected inside a repo file.
-  * docId = s"$repo/$path@$commit#$docIdx" — globally unique, deterministic.
+  * docId = s"$repo/$path@$commit12#$i" (the commit's first 12 characters,
+  * the document's index within its file) — globally unique, deterministic.
   * baseIri is the document's base for relative IRI resolution.
   */
 final case class DetectedDoc(
     docId: String,
     repo: String,
     path: String,
-    commit: String,
-    docIdx: Int,
     baseIri: String,
-    json: String,
-    contentSha256: String)
+    json: String)
 
 /** One RDF quad, canonical blank-node labels (_:c14nN) already applied.
   * objKind: 0 = IRI, 1 = blank node, 2 = literal.
@@ -58,22 +56,3 @@ final case class ErrorRow(
     stage: String,
     errorCode: String,
     message: String)
-
-object Schemas {
-  import org.apache.spark.sql.types._
-
-  /** Row schema of the materialized graph (QuadRow minus docId), with the
-    * trailing predBucket partition column when `withBucket`.
-    */
-  def graphQuadSchema(withBucket: Boolean): StructType = {
-    val base = StructType(Seq(
-      StructField("subj", StringType, nullable = true),
-      StructField("pred", StringType, nullable = true),
-      StructField("obj", StringType, nullable = true),
-      StructField("objKind", ByteType, nullable = true),
-      StructField("objDatatype", StringType, nullable = true),
-      StructField("objLang", StringType, nullable = true),
-      StructField("graph", StringType, nullable = true)))
-    if (withBucket) base.add(StructField("predBucket", IntegerType, nullable = true)) else base
-  }
-}

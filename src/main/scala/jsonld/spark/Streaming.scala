@@ -1,7 +1,6 @@
 package jsonld.spark
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.broadcast.Broadcast
 
 /** Structured Streaming face of the KG pipeline.
@@ -9,36 +8,13 @@ import org.apache.spark.broadcast.Broadcast
   * The per-document transform is stateless (pure function of content +
   * broadcast context cache), so the same detect/transform stages lift to
   * `readStream` unchanged — no watermarks or state stores needed for the
-  * spine. Stateful pieces that do need them:
-  * - `quadRateByPredicate`: sliding-window quad counts with a watermark
-  *   (monitoring feed);
-  * - corpus-wide dedup in a stream is deliberately NOT done here: set
-  *   semantics across an unbounded stream needs either a TTL'd state store
-  *   or downstream compaction; batch dedup at materialization time is the
-  *   scale-correct choice (same decision Iceberg-based pipelines make).
+  * spine. Corpus-wide dedup in a stream is deliberately NOT part of it:
+  * set semantics across an unbounded stream needs either a TTL'd state
+  * store ([[streamingDedupQuads]]) or downstream compaction; batch dedup
+  * at materialization time is the scale-correct choice (same decision
+  * Iceberg-based pipelines make).
   */
 object Streaming {
-
-  /** Streaming corpus → streaming quads. Works for any streaming source
-    * producing the corpus schema (files, Kafka with a projection, rate).
-    */
-  def streamQuads(corpus: Dataset[RepoFile],
-                  contextCache: Broadcast[Map[String, String]],
-                  counters: Pipeline.Counters): Dataset[Pipeline.PipeRow] = {
-    val docs = Pipeline.detectStage(corpus, counters)
-    Pipeline.transformStage(docs, contextCache, counters)
-  }
-
-  /** Per-predicate quad rates over event-time windows (requires an
-    * ingestion timestamp column upstream; here processing time).
-    */
-  def quadRateByPredicate(quads: DataFrame, windowDur: String = "1 minute",
-                          slideDur: String = "30 seconds"): DataFrame =
-    quads
-      .withColumn("ingestTs", current_timestamp())
-      .withWatermark("ingestTs", "2 minutes")
-      .groupBy(window(col("ingestTs"), windowDur, slideDur), col("pred"))
-      .agg(count(lit(1)).as("n_quads"))
 
   /** Streaming exact quad dedup with TTL'd state — the set-semantics
     * option the spine's batch dedup deliberately leaves to a state store:
@@ -79,7 +55,8 @@ object Streaming {
     val schema = Encoders.product[RepoFile].schema
     val corpus = spark.readStream.schema(schema).parquet(inDir).as[RepoFile](Encoders.product[RepoFile])
     val counters = Pipeline.newCounters(spark)
-    val quads = Pipeline.quads(streamQuads(corpus, contextCache, counters))
+    val quads = Pipeline.quads(
+      Pipeline.transformStage(Pipeline.detectStage(corpus, counters), contextCache, counters))
     quads.writeStream
       .format("parquet")
       .option("path", outDir)

@@ -502,6 +502,33 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.collect().map(_.getString(0)).toSeq == Seq("a"))
   }
 
+  test("ask: the optional WHERE keyword after ASK") {
+    val kg = quads(("c1", "p:in", "n1", ""))
+    assert(askQuery(kg, "ASK WHERE { ?c <p:in> <n1> }").collect()(0).getBoolean(0))
+    assert(!askQuery(kg, "ask where { ?c <p:in> <n9> }").collect()(0).getBoolean(0))
+  }
+
+  test("select: the head ends at '{' when WHERE is left out") {
+    val kg = quads(("a", "p:x", "b", ""), ("c", "p:y", "d", ""))
+    val got = select(kg, "SELECT ?s { ?s <p:x> ?o }")
+    assert(got.columns.toSeq == Seq("s"))
+    assert(got.collect().map(_.getString(0)).toSeq == Seq("a"))
+    assert(select(kg, "SELECT DISTINCT * { ?s <p:y> ?o }").select("s", "o").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("c", "d")))
+  }
+
+  test("select: redundant braces around a UNION branch or a whole body are stripped") {
+    val kg = quads(("a", "p:x", "b", ""), ("c", "p:y", "d", ""))
+    def subjects(q: String): Set[String] =
+      select(kg, q).select("s").collect().map(_.getString(0)).toSet
+    assert(subjects("{ { ?s <p:x> ?o } } UNION { ?s <p:y> ?o }") == Set("a", "c"))
+    assert(subjects("SELECT ?s WHERE { { { ?s <p:x> ?o } } }") == Set("a"))
+    // a nested group beside sibling triples stays unsupported
+    val err = intercept[IllegalArgumentException](
+      select(kg, "SELECT ?s WHERE { ?s <p:x> ?o . { ?s <p:y> ?o } }"))
+    assert(err.getMessage.contains("nested group"), err.getMessage)
+  }
+
   test("select: '?my_union' variable does not trigger a bogus top-level split") {
     val kg = quads(("a", "p:x", "b", ""))
     val got = select(kg, "?my_union <p:x> ?o")

@@ -26,8 +26,8 @@ class ContextResolverSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def doc(id: Int, ctx: String): DetectedDoc =
-    DetectedDoc(s"d$id", "org", s"f$id.jsonld", "c0", 0, "",
-      s"""{"@context": $ctx, "@id": "http://ex.org/$id", "name": "x$id"}""", "sha")
+    DetectedDoc(s"d$id", "org", s"f$id.jsonld", "",
+      s"""{"@context": $ctx, "@id": "http://ex.org/$id", "name": "x$id"}""")
 
   test("harvest → closure → broadcast → expand, with dead URLs quarantined not thrown") {
     val ctxA = "http://ctx.example/a.jsonld"   // imports b

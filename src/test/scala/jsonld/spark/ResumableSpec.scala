@@ -2,7 +2,8 @@ package jsonld.spark
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.{SparkSession, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
 
 /** Checkpoint/resume: a second driver run over the same work dir must skip
@@ -29,14 +30,31 @@ class ResumableSpec extends AnyFunSuite with BeforeAndAfterAll {
       RepoFile(s"org$i", s"doc$i.jsonld", "c0", "jsonld",
         s"""{"@id": "http://ex.org/doc/$i", "http://ex.org/p": "v$i", "http://ex.org/q": $i}""")
     }
-    val corpus = spark.createDataset(rows)(Encoders.product[RepoFile])
+    // five fork copies repeat their originals' quads: the graph dedups them
+    val forks = rows.take(5).map(_.copy(repo = "fork"))
+    val corpus = spark.createDataset(rows ++ forks)(Encoders.product[RepoFile])
     val ctx = spark.sparkContext.broadcast(Map.empty[String, String])
 
     val first = Pipeline.runResumable(spark, corpus, work, ctx, buckets = 8)
     val n1 = first.count()
     assert(n1 == 60) // two quads per doc
-    Seq("stage1_detected", "stage2_transformed", "stage3_quads", "quarantine", "lineage", "graph")
+    Seq("stage1_detected", "stage2_transformed", "quarantine", "lineage", "graph")
       .foreach { s => assert(CorpusIO.stageDone(spark, s"$work/$s"), s"missing marker for $s") }
+    // the graph is written once, by the fused dedup/write: no stage copies
+    // the deduped quads before it
+    assert(!Files.exists(Paths.get(s"$work/stage3_quads")))
+
+    // the returned graph has the 7 quad columns and exactly the quad set
+    // a plain dropDuplicates of the transform output gives
+    val quadCols = Seq("subj", "pred", "obj", "objKind", "objDatatype", "objLang", "graph")
+    assert(first.columns.toSeq == quadCols)
+    def quadSet(df: DataFrame): Seq[String] =
+      df.select(quadCols.map(col): _*)
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    val transformed = spark.read.parquet(s"$work/stage2_transformed")
+      .filter("ok").select(quadCols.map(col): _*)
+    assert(transformed.count() == 70)
+    assert(quadSet(first) == quadSet(transformed.dropDuplicates()))
 
     // resume with an EMPTY corpus: if stages were recomputed the result
     // would be empty; the checkpointed outputs must win
@@ -44,10 +62,12 @@ class ResumableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val second = Pipeline.runResumable(spark, emptyCorpus, work, ctx, buckets = 8)
     assert(second.count() == n1)
 
-    // the materialized graph is partitioned by predicate bucket
+    // the materialized graph is partitioned by predicate bucket and marked
+    // with its bucket count, so queries over it prune to one bucket
     val graph = spark.read.parquet(s"$work/graph")
     assert(graph.count() == n1)
     assert(graph.columns.contains("predBucket"))
+    assert(CorpusIO.bucketCount(spark, s"$work/graph") == Some(8))
   }
 
   test("writeTriples dispatches on target: parquet branch runs, iceberg branch refuses cleanly here") {
