@@ -15,8 +15,11 @@ object HtmlExtract {
   final case class Extracted(json: Any, baseHref: Option[String])
 
   private val scriptRe = "(?is)<script([^>]*)>(.*?)</script>".r
-  private val typeAttrRe = "(?is)type\\s*=\\s*[\"']([^\"']*)[\"']".r
-  private val idAttrRe = "(?is)\\bid\\s*=\\s*[\"']([^\"']*)[\"']".r
+  // an attribute named exactly `type` / `id`: preceded by whitespace or
+  // the start of the attribute text, so `data-type=` is not `type=` (`\b`
+  // would match there: `-` is a word boundary)
+  private val typeAttrRe = "(?is)(?:^|\\s)type\\s*=\\s*[\"']([^\"']*)[\"']".r
+  private val idAttrRe = "(?is)(?:^|\\s)id\\s*=\\s*[\"']([^\"']*)[\"']".r
   private val baseRe = "(?is)<base[^>]*href\\s*=\\s*[\"']([^\"']*)[\"']".r
 
   private def parseScript(content: String): Any =
@@ -29,7 +32,8 @@ object HtmlExtract {
   /** The `(id, body)` of every `application/ld+json` script element of
     * `html`, in document order: the type matched case-insensitively and
     * with or without parameters (`application/ld+json; charset=utf-8`),
-    * attribute names in any case; `id` is "" when the element has none.
+    * attribute names in any case but whole (`data-type` is not `type`);
+    * `id` is "" when the element has none.
     * Bodies are raw text, unparsed.
     */
   def scripts(html: String): Seq[(String, String)] =

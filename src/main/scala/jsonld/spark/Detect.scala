@@ -23,8 +23,22 @@ object Detect extends Serializable {
     if (l == "jsonld" || path.endsWith(".jsonld")) return true
     content.contains("@context") || content.contains("@graph") ||
       (content.contains("@id") && content.contains("@type")) ||
-      content.contains("application/ld+json")
+      content.contains(IslandType) ||
+      // HtmlExtract.scripts matches the type in any case: so does the signal
+      (isHtml(l, path) && containsIgnoreCase(content, IslandType))
   }
+
+  private val IslandType = "application/ld+json"
+
+  /** An html file; `lang` is lower-cased. */
+  private def isHtml(lang: String, path: String): Boolean =
+    lang == "html" || path.endsWith(".html") || path.endsWith(".htm")
+
+  /** `needle` occurs in `s` in any case: a region match per start, `s`
+    * is not copied.
+    */
+  private def containsIgnoreCase(s: String, needle: String): Boolean =
+    (0 to s.length - needle.length).exists(s.regionMatches(true, _, needle, 0, needle.length))
 
   /** Extract 0..n candidate JSON-LD documents from one file. Pure; returns
     * raw JSON strings — parsing/validation happens in the transform stage so
@@ -36,7 +50,7 @@ object Detect extends Serializable {
     val lower = if (f.lang == null) "" else f.lang.toLowerCase
 
     val candidates: Seq[String] =
-      if (lower == "html" || f.path.endsWith(".html") || f.path.endsWith(".htm")) {
+      if (isHtml(lower, f.path)) {
         HtmlExtract.scripts(f.content).map(_._2)
       } else if (lower == "jsonld" || lower == "json" ||
                  f.path.endsWith(".jsonld") || f.path.endsWith(".json")) {

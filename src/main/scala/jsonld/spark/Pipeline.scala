@@ -1,6 +1,8 @@
 package jsonld.spark
 
 import org.apache.spark.sql.{Column, Dataset, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.LongAccumulator
@@ -107,6 +109,7 @@ object Pipeline extends Serializable {
       col("content").isNotNull && (
         lower(col("lang")).isin("jsonld", "json", "html") ||
         col("path").endsWith(".jsonld") || col("path").endsWith(".json") ||
+        col("path").endsWith(".html") || col("path").endsWith(".htm") ||
         col("content").contains("@context") || col("content").contains("@graph") ||
         col("content").contains("application/ld+json")))
     prefiltered.mapPartitions { files =>
@@ -340,65 +343,79 @@ object Pipeline extends Serializable {
     * Dedup mechanics: sorting by the quad columns directly is
     * pathologically slow here — subject IRIs share long prefixes, so the
     * sorter's 8-byte prefix disambiguates nothing and every comparison
-    * walks multiple strings. Instead rows sort by ONE xxhash64 over all
-    * quad columns (radix-friendly 8-byte key), which makes duplicate
-    * quads adjacent up to hash collisions; each equal-hash run (almost
-    * always a single row) is then deduplicated by EXACT row comparison,
-    * so a collision can never drop a distinct quad. The dynamic-partition
-    * writer re-sorts by the int predBucket only — cheap.
+    * walks multiple strings. Instead rows sort by ONE non-negative long,
+    * `sortKey` (radix-friendly): `predBucket` in its top
+    * `ceil(log2(buckets))` bits below the sign bit, the low bits of one
+    * xxhash64 over all quad columns beneath. Equal quads get equal keys,
+    * so duplicates are adjacent; each equal-key run (almost always a
+    * single row) is then deduplicated by EXACT row comparison
+    * ([[dropAdjacentDuplicates]]), so a collision can never drop a
+    * distinct quad.
+    *
+    * One sort per reduce task: a partition sorted by `sortKey` is also
+    * sorted by `predBucket`, the order the dynamic-partition writer
+    * needs. [[dedupForWrite]] declares that order, so the writer plans no
+    * second sort and keeps no second copy of the task's quads.
     */
   def bucketSorted(q: Dataset[QuadRow], buckets: Int): DataFrame = {
     val (bucketed, key) = withBucketKey(q.toDF().drop("docId"), buckets)
+    val hashBits = 63 - (32 - Integer.numberOfLeadingZeros(buckets - 1))
     bucketed
-      .withColumn("qh", xxhash64(graphCols.map(col): _*))
+      .withColumn("sortKey", shiftleft(col("predBucket").cast("long"), hashBits)
+        .bitwiseOR(xxhash64(graphCols.map(col): _*).bitwiseAND(lit((1L << hashBits) - 1))))
       .repartition(key: _*)
-      .sortWithinPartitions(col("qh"))
+      .sortWithinPartitions(col("sortKey"))
   }
 
-  def dedupForWrite(q: Dataset[QuadRow], buckets: Int = 64): DataFrame =
-    adjacentDedupUnsafe(bucketSorted(q, buckets)).drop("qh")
-
-  private def adjacentDedupUnsafe(sorted: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
+  def dedupForWrite(q: Dataset[QuadRow], buckets: Int = 64): DataFrame = {
+    val sorted = bucketSorted(q, buckets)
+    val keyIdx = sorted.schema.fieldIndex("sortKey")
     // adjacent-dedup over raw UnsafeRows (GraftInternal): the Row-encoder
     // version allocated one boxed row per quad and inverted thread scaling
-    org.apache.spark.sql.GraftInternal.mapPartitionsUnsafe(sorted, { rows =>
-      new Iterator[InternalRow] {
-        private val QhIdx = 8 // trailing qh column
-        // rows share a mutable buffer → copy anything retained (one flat
-        // byte-array copy per row; no boxing, no string decode)
-        private var pending: InternalRow = if (rows.hasNext) {
-          val first = rows.next()
-          // the run-dedup below relies on == being BYTE equality, which only
-          // UnsafeRow provides (GenericInternalRow == is reference equality —
-          // duplicates would silently pass). Fail fast if a plan change ever
-          // stops toRdd yielding UnsafeRows.
-          require(first.isInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow],
-            s"dedupForWrite requires UnsafeRow partitions, got ${first.getClass.getName}")
-          first.copy()
-        } else null
-        private val out = scala.collection.mutable.Queue.empty[InternalRow]
-        private def refill(): Unit = if (out.isEmpty && pending != null) {
-          // collect the full run of hash-equal rows starting at `pending`,
-          // dropping exact duplicates within it (hash-equal ≠ row-equal)
-          val h = pending.getLong(QhIdx)
-          val run = scala.collection.mutable.ArrayBuffer[InternalRow](pending)
-          pending = null
-          var done = false
-          while (!done && rows.hasNext) {
-            val r = rows.next()
-            if (r.getLong(QhIdx) == h) {
-              val c = r.copy()
-              if (!run.exists(_ == c)) run += c
-            } else { pending = r.copy(); done = true }
-          }
-          out ++= run
-        }
-        def hasNext: Boolean = { refill(); out.nonEmpty }
-        def next(): InternalRow = { refill(); out.dequeue() }
-      }
-    })
+    org.apache.spark.sql.GraftInternal.mapPartitionsUnsafe(sorted,
+      dropAdjacentDuplicates(_, keyIdx), ordering = Seq("predBucket")).drop("sortKey")
   }
+
+  /** `rows` without repeats, for rows where equal rows are adjacent: rows
+    * sorted by a long key at `keyIdx` that equal rows share. Within a run
+    * of equal keys, rows are compared whole, byte for byte, so distinct
+    * rows that share a key all survive. Order is kept.
+    */
+  private[spark] def dropAdjacentDuplicates(rows: Iterator[InternalRow],
+                                            keyIdx: Int): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      // rows share a mutable buffer → copy anything retained (one flat
+      // byte-array copy per row; no boxing, no string decode)
+      private var pending: InternalRow = if (rows.hasNext) {
+        val first = rows.next()
+        // the run-dedup below relies on == being BYTE equality, which only
+        // UnsafeRow provides (GenericInternalRow == is reference equality —
+        // duplicates would silently pass). Fail fast if a plan change ever
+        // stops toRdd yielding UnsafeRows.
+        require(first.isInstanceOf[UnsafeRow],
+          s"dropAdjacentDuplicates requires UnsafeRows, got ${first.getClass.getName}")
+        first.copy()
+      } else null
+      private val out = scala.collection.mutable.Queue.empty[InternalRow]
+      private def refill(): Unit = if (out.isEmpty && pending != null) {
+        // collect the full run of key-equal rows starting at `pending`,
+        // dropping exact duplicates within it (key-equal ≠ row-equal)
+        val k = pending.getLong(keyIdx)
+        val run = scala.collection.mutable.ArrayBuffer[InternalRow](pending)
+        pending = null
+        var done = false
+        while (!done && rows.hasNext) {
+          val r = rows.next()
+          if (r.getLong(keyIdx) == k) {
+            val c = r.copy()
+            if (!run.exists(_ == c)) run += c
+          } else { pending = r.copy(); done = true }
+        }
+        out ++= run
+      }
+      def hasNext: Boolean = { refill(); out.nonEmpty }
+      def next(): InternalRow = { refill(); out.dequeue() }
+    }
 
   /** Fused dedup + materialize. `target` dispatches the sink format
     * (path → partitioned parquet; catalog table → Iceberg with native

@@ -2,10 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, In, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, DataFrame => ClassicDataFrame,
   Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.IntegerType
 
@@ -24,14 +27,24 @@ import org.apache.spark.sql.types.IntegerType
   * anything retained across `next()` calls; emitted rows may be reused
   * immediately by the consumer, which is fine for every Spark sink (they
   * copy on retention).
+  *
+  * `ordering` names columns, each ascending, that every output partition
+  * of `f` is sorted by. It is a promise about `f`'s output, not a sort:
+  * the frame declares it to the planner, which then plans no `Sort` for
+  * an operator that needs that order. A wrong promise breaks those
+  * operators: a partitioned write then opens a file per run of rows of
+  * one partition value, a merge join misses matches.
   */
 object GraftInternal {
   def mapPartitionsUnsafe(df: DataFrame,
-                          f: Iterator[InternalRow] => Iterator[InternalRow]): DataFrame = {
+                          f: Iterator[InternalRow] => Iterator[InternalRow],
+                          ordering: Seq[String]): DataFrame = {
     val classic = df.asInstanceOf[ClassicDataFrame]
     val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    spark.internalCreateDataFrame(
-      classic.queryExecution.toRdd.mapPartitions(f), classic.schema)
+    val output = DataTypeUtils.toAttributes(classic.schema)
+    val order = ordering.map(c => SortOrder(output(classic.schema.fieldIndex(c)), Ascending))
+    ClassicDataset.ofRows(spark, LogicalRDD(output, classic.queryExecution.toRdd.mapPartitions(f),
+      UnknownPartitioning(0), order, isStreaming = false)(spark))
   }
 
   /** Eager local checkpoint that ALSO returns the row count from the
@@ -129,7 +142,7 @@ object GraftInternal {
     */
   def isMaterializedWithColumns(df: DataFrame, cols: Seq[String]): Boolean = {
     val lp = df.asInstanceOf[ClassicDataFrame].queryExecution.logical
-    lp.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD] &&
+    lp.isInstanceOf[LogicalRDD] &&
       lp.output.map(_.name) == cols
   }
 

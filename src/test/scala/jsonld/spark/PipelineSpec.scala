@@ -167,6 +167,34 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq((s"${id}2", "invalid input")))
   }
 
+  test("HTML islands: only an attribute named exactly type gives the script's type") {
+    val html =
+      """<html><head>
+        |<script data-type="application/ld+json" type="text/javascript">{"@id": "http://ex.org/js", "@type": "http://ex.org/T"}</script>
+        |<script data-id="no" id="yes" type="application/ld+json">{"@id": "http://ex.org/a", "http://ex.org/p": "x"}</script>
+        |</head></html>""".stripMargin
+    assert(HtmlExtract.scripts(html).map(_._1) == Seq("yes"))
+    val lone = """<script data-type="application/ld+json" type="text/javascript">{"@id": "urn:js"}</script>"""
+    assert(HtmlExtract.scripts(lone).isEmpty)
+    assert(Detect.detect(RepoFile("r", "js.html", "c0", "html", lone)).isEmpty)
+  }
+
+  test("HTML islands: an upper-case Application/LD+JSON type is detected through detectStage") {
+    val island = """<html><script type="Application/LD+JSON">{"name":"x","@id":"urn:a"}</script></html>"""
+    val files = Seq(
+      RepoFile("r", "a.html", "c0", "html", island),
+      // no html lang: the path alone must carry the file past the pre-filter
+      RepoFile("r", "b.htm", "c0", "", island),
+      // not html: the island marker is matched in lower case only, as before
+      RepoFile("r", "c.txt", "c0", "", island))
+    assert(HtmlExtract.scripts(island).size == 1)
+    val docs = Pipeline.detectStage(
+      spark.createDataset(files)(org.apache.spark.sql.Encoders.product[RepoFile]),
+      Pipeline.newCounters(spark)).collect()
+    assert(docs.map(_.path).sorted.toSeq == Seq("a.html", "b.htm"))
+    assert(docs.forall(_.json == """{"name":"x","@id":"urn:a"}"""))
+  }
+
   test("canonicalization budget quarantines an adversarial bnode clique in bounded time") {
     // a fully-connected blank-node clique: every node's first-degree hash is
     // identical, so URDNA2015's hash-n-degree step faces factorial
@@ -311,6 +339,39 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val files = filesPerBucket(out)
     assert(files.values.sum > files.size, s"no bucket was split over reduce tasks: $files")
     assert(sortedQuads(spark.read.parquet(out)) == expected)
+  }
+
+  test("bucket counts 1, 3, 32, 1000, salted and not: the exact dedup set, each row under its predicate's bucket") {
+    val quads = duplicatedQuads()
+    val expected = sortedQuads(Pipeline.dedupQuads(quads))
+    for (n <- Seq(1, 3, 32, 1000)) {
+      // 8 shuffle partitions: 1 and 3 buckets are salted, 32 and 1000 not
+      assert((Pipeline.subjectSalts(spark, n) == 1) == (n >= 8))
+      val out = Files.createTempDirectory(s"buckets$n").toString
+      withoutCoalescing(Pipeline.dedupAndWritePartitioned(quads, out, buckets = n))
+      val back = spark.read.parquet(out)
+      assert(sortedQuads(back) == expected, s"$n buckets")
+      val misplaced = back.select("pred", "predBucket").distinct().collect()
+        .filter(r => r.getInt(1) != Pipeline.bucketOf(r.getString(0), n))
+      assert(misplaced.isEmpty, s"$n buckets: rows outside their bucket: ${misplaced.toSeq}")
+      if (n >= 8) assert(filesPerBucket(out).values.forall(_ == 1), s"$n buckets: ${filesPerBucket(out)}")
+    }
+  }
+
+  test("the run-dedup keeps distinct rows that share a sort key, and drops repeats within the run") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.types.{LongType, StringType, StructType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val schema = new StructType().add("v", StringType).add("key", LongType)
+    // one projection: every input row shares its buffer, as rows from a sort do
+    val proj = UnsafeProjection.create(schema)
+    val in = Seq("a" -> 7L, "b" -> 7L, "a" -> 7L, "c" -> 7L, "b" -> 7L, "d" -> 8L, "d" -> 8L, "e" -> 8L)
+    val out = Pipeline.dropAdjacentDuplicates(
+      in.iterator.map { case (v, k) => proj(InternalRow(UTF8String.fromString(v), k)) }, keyIdx = 1)
+      .map(r => r.getUTF8String(0).toString -> r.getLong(1)).toList
+    assert(out == List("a" -> 7L, "b" -> 7L, "c" -> 7L, "d" -> 8L, "e" -> 8L))
+    assert(Pipeline.dropAdjacentDuplicates(Iterator.empty, keyIdx = 1).isEmpty)
   }
 
   test("the subject salt follows spark.sql.shuffle.partitions, not the cores") {

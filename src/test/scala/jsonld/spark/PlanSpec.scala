@@ -120,6 +120,41 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!p2.contains("Exchange"), s"dedup added a shuffle:\n$p2")
   }
 
+  test("the fused dedup+write sorts each reduce task once: no Sort between WriteFiles and the scan") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.WriteFilesExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val rows = (0 until 40).map(i =>
+      QuadRow(s"d$i", s"urn:s:${i % 10}", s"urn:p:${i % 5}", s"o$i", 1.toByte, "", "", ""))
+    val q = spark.createDataset(rows)(Encoders.product[QuadRow])
+    // the write is a command: its executed plan reaches only a listener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val dir = java.nio.file.Files.createTempDirectory("one-sort").resolve("g")
+    try {
+      CorpusIO.writeTriples(Pipeline.dedupForWrite(q, buckets = 8), dir.toString, buckets = 8)
+      org.apache.spark.sql.GraftInternal.waitListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val writes = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes).collect { case w: WriteFilesExec => w }
+    assert(writes.size == 1, s"expected one WriteFiles, got ${plans.toArray.mkString("\n")}")
+    val below = nodes(writes.head)
+    assert(below.count(_.isInstanceOf[RDDScanExec]) == 1, s"write not over the dedup scan:\n${writes.head}")
+    assert(!below.exists(_.isInstanceOf[SortExec]), s"the writer re-sorts the dedup output:\n${writes.head}")
+    assert(spark.read.parquet(dir.toString).count() == 40)
+  }
+
   test("BGP over the bucketed triple table prunes partitions and pushes the pred filter") {
     import graft.ops.GraphOps
     // materialize a triple table the way the pipeline does: partitioned
