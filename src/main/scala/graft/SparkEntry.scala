@@ -158,19 +158,14 @@ object SparkEntry {
         n = 3, k = 32, bands = 8, threshold = 0.2)
       .orderBy("doc_a", "doc_b")
 
+  /** Duplicate clusters ([[DedupOps.duplicateClusters]]). Registered
+    * under both `dedup_clusters` and `dedup_clusters_star`: the two keys
+    * and their identical recursive-CTE oracles are kept for callers that
+    * name either one, and both run the one CC routine.
+    */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame =
     DedupOps.duplicateClusters(t(spark, dir, "documents"), col("text"), col("doc_id"),
         n = 3, k = 32, bands = 8, threshold = 0.2)
-      .orderBy("doc_id")
-
-  /** The SAME clustering contract as [[dedupClusters]] computed by the
-    * alternating large-star/small-star algorithm — gated against the
-    * identical recursive-CTE oracle, so both CC algorithms are
-    * value-verified to agree with the declarative fixpoint.
-    */
-  def dedupClustersStar(spark: SparkSession, dir: String): DataFrame =
-    DedupOps.duplicateClusters(t(spark, dir, "documents"), col("text"), col("doc_id"),
-        n = 3, k = 32, bands = 8, threshold = 0.2, algorithm = "star")
       .orderBy("doc_id")
 
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
@@ -1631,7 +1626,7 @@ object SparkEntry {
     "dedup_exact" -> (dedupExact(_, _)),
     "dedup_minhash_lsh" -> (dedupMinhash(_, _)),
     "dedup_clusters" -> (dedupClusters(_, _)),
-    "dedup_clusters_star" -> (dedupClustersStar(_, _)),
+    "dedup_clusters_star" -> (dedupClusters(_, _)),
     "dedup_simhash" -> (dedupSimhash(_, _)),
     "dedup_embed_cosine" -> (dedupEmbedCosine(_, _)),
     "neighbor_jaccard" -> (neighborJaccard(_, _)),

@@ -202,82 +202,6 @@ object DedupOps {
     docs.select(id.as("doc_id"), simhash60(text).as("simhash"))
       .withColumn("bucket", shiftright(col("simhash"), 16))
 
-  /** Connected components by iterative min-label propagation: each round,
-    * every node takes the minimum label among itself and its neighbors —
-    * the fixpoint labels every node with the smallest node id in its
-    * component. `nodes` must have an `id` column, `edges` columns `a`,`b`
-    * (undirected; symmetrized here).
-    *
-    * Scale shape: each round is one equi-join + one hash aggregate (both
-    * shuffles on the node id — uniform key), and `localCheckpoint` cuts
-    * the lineage so plans don't grow with iterations. Rounds needed =
-    * component diameter; near-dup graphs are short-diameter by
-    * construction (members share LSH buckets), so this converges in a
-    * handful of rounds. Convergence is detected by the monotone label sum
-    * (strictly decreasing until the fixpoint — one cheap aggregate per
-    * round, no extra join); a graph that hasn't converged by
-    * `maxIterations` raises rather than returning silently-wrong labels.
-    * At 10^12 edges swap localCheckpoint for reliable checkpointing and
-    * consider alternating large-star/small-star (halves round count on
-    * high-diameter graphs); the join/agg shape is unchanged.
-    */
-  /** Diagnostic only: rounds the LAST [[connectedComponents]] /
-    * [[connectedComponentsStar]] call in this JVM took to converge. Read
-    * by the benchmark harness (graft.CcCompare) to report measured
-    * round counts next to wall times; not part of any data contract.
-    */
-  @volatile var lastCcRounds: Int = -1
-
-  def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIterations: Int = 20): DataFrame = {
-    // materialize the edge list ONCE: `edges` is typically an expensive
-    // plan (the whole MinHash-LSH candidate+verify pipeline), and every
-    // propagation round joins against it — without the checkpoint each
-    // round would re-run that entire upstream plan
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .localCheckpoint()
-    // iterate ONLY over nodes that have at least one edge: everything else
-    // is a singleton component by definition and gets self-labeled at the
-    // end without touching the join rounds. In a real corpus duplicates
-    // are a small fraction, so this shrinks the per-round frames from |V|
-    // to |touched(E)| — the difference between iterating over 10^12 docs
-    // and over the dup subgraph.
-    val touched = sym.select(col("a").as("id")).distinct()
-    // the decimal label-sum convergence checksum is computed DURING each
-    // round's checkpoint materialization (a cast column summed in the
-    // same pass), not as a separate per-round aggregation action
-    def sumCheckpoint(df: DataFrame): (DataFrame, Long, java.math.BigDecimal) = {
-      val (d, n, s) = org.apache.spark.sql.GraftInternal
-        .localCheckpointWithCountAndDecimalSum(
-          df.withColumn("__cs", col("component").cast("decimal(38,0)")), "__cs")
-      (d.select(col("id"), col("component")), n, s)
-    }
-    var (labels, _, prevSum) =
-      sumCheckpoint(touched.select(col("id"), col("id").as("component")))
-    var converged = prevSum == null // no edges at all → nothing to iterate
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val prop = sym.join(labels, sym("a") === labels("id"))
-        .select(col("b").as("id"), col("component"))
-      val (next, _, s) = sumCheckpoint(labels.union(prop)
-        .groupBy("id").agg(min("component").as("component")))
-      labels = next
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-    }
-    lastCcRounds = i
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIterations rounds " +
-          "(adversarially long chain?) — raise maxIterations")
-    val singletons = nodes.select(col("id"))
-      .join(touched, Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("component"))
-    labels.union(singletons)
-  }
-
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
     * (the MapReduce CC algorithm of Kiveris et al., "Connected Components
     * in MapReduce and Beyond"): each round rewires every node toward the
@@ -288,42 +212,42 @@ object DedupOps {
     *  - small-star: every neighbor ≤ u (and u itself) re-attaches to the
     *    minimum of that smaller side.
     *
+    * `nodes` must have an `id` column, `edges` columns `a`,`b` of the same
+    * orderable type (long doc ids, string IRIs); edges are undirected, so
+    * either orientation (or both) may be given. Output: (id, component)
+    * for every node in `nodes` and every endpoint of a non-loop edge,
+    * labeled with the smallest id of its component; singletons label
+    * themselves.
+    *
     * Converges when the edge set reaches a fixpoint — at which point the
     * graph is a forest of stars, each centered at its component's minimum
-    * id. Round count is O(log n) even on a DIAMETER-n chain, where plain
-    * min-label propagation ([[connectedComponents]]) needs O(n) rounds:
-    * this is the variant for adversarially long duplicate chains. Each
-    * round costs two groupBy-min aggregations and two joins (vs one+one
-    * for label propagation), all on uniform node-id keys, so label
-    * propagation remains the default for the short-diameter graphs LSH
-    * dedup actually produces.
+    * id. Round count is O(log n) even on a DIAMETER-n chain, where min-label
+    * propagation needs O(n) rounds, so one adversarial duplicate or
+    * owl:sameAs chain cannot run a caller out of its round budget. This is
+    * the only CC routine: on the short-diameter LSH dup graph it also costs
+    * no more than label propagation did (sf0.1, back to back: 1.45 s / 35
+    * jobs against label propagation's 1.76 s / 33; 50 disjoint
+    * diameter-100 chains: 8 rounds / 9.28 s against 101 rounds / 45.0 s).
     *
-    * Output contract identical to [[connectedComponents]]: (id,
-    * component) for every node in `nodes`, singletons self-labeled;
-    * raises on non-convergence. Same 100-TB swap: localCheckpoint →
-    * reliable checkpoint.
-    *
-    * MEASURED guidance (graft.CcCompare, sf0.1, local[32], health-gated
-    * — cc_compare.json at repo root): on the real LSH dup graph (short
-    * diameter) label propagation converged in 3 rounds / 2.49 s vs
-    * star's 2 rounds / 3.38 s — label wins, star's two-join rounds cost
-    * more than they save. On 50 disjoint diameter-100 chains, label
-    * needed 101 rounds / 45.0 s vs star's 8 rounds / 9.28 s — a 4.8×
-    * win. Flip to `algorithm = "star"` when component diameters reach
-    * the tens; below that, label propagation is the right default.
+    * Each round costs two groupBy-min aggregations and two joins, all on
+    * uniform node-id keys, and `localCheckpoint` cuts the lineage so plans
+    * don't grow with iterations. The fixpoint test is a (row count,
+    * wrapping xxhash64 sum) checksum of the round's edge set, taken during
+    * the round's own checkpoint materialization. A graph that hasn't
+    * converged by `maxIterations` raises rather than returning
+    * partially-merged labels. At 10^12 edges swap localCheckpoint for
+    * reliable checkpointing; the join/agg shape is unchanged.
     */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-                              maxIterations: Int = 30): DataFrame = {
-    // the (count, edge-hash-sum) fixpoint checksum is computed DURING the
-    // round's checkpoint materialization, not as a separate action
-    def checksummedCheckpoint(e0: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+  def connectedComponents(nodes: DataFrame, edges: DataFrame,
+                          maxIterations: Int = 30): DataFrame = {
+    def checksummedCheckpoint(e0: DataFrame): (DataFrame, (Long, Long)) = {
       val (d, n, s) = org.apache.spark.sql.GraftInternal
-        .localCheckpointWithCountAndDecimalSum(
-          e0.withColumn("__h",
-            xxhash64(col("a"), col("b")).cast("decimal(38,0)")), "__h")
-      (d.select(col("a"), col("b")),
-        (n, Option(s).getOrElse(java.math.BigDecimal.ZERO)))
+        .localCheckpointWithSum(e0.withColumn("__h", xxhash64(col("a"), col("b"))), "__h")
+      (d.select(col("a"), col("b")), (n, s))
     }
+    // materialize the edge list ONCE: `edges` is typically an expensive
+    // plan (the whole MinHash-LSH candidate+verify pipeline, a scan of the
+    // graph), and the first round would otherwise re-run it
     var (e, prev) = checksummedCheckpoint(edges.select(col("a"), col("b"))
       .filter(col("a") =!= col("b")).distinct())
     var converged = prev._1 == 0 // no non-loop edges → nothing to iterate
@@ -352,10 +276,9 @@ object DedupOps {
       e = ss
       i += 1
     }
-    lastCcRounds = i
     if (!converged)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxIterations rounds — raise maxIterations")
+        s"connectedComponents did not converge in $maxIterations rounds — raise maxIterations")
     // fixpoint edge set = star edges (member → component-min center)
     val members = e.select(col("a").as("id"), col("b").as("component"))
     val centers = e.select(col("b").as("id"), col("b").as("component")).distinct()
@@ -377,19 +300,13 @@ object DedupOps {
   def duplicateClusters(docs: DataFrame, text: Column, id: Column,
                         n: Int = 3, k: Int = 32, bands: Int = 8,
                         threshold: Double = 0.5, maxBucket: Int = 1000,
-                        maxIterations: Int = 20,
-                        algorithm: String = "label"): DataFrame = {
+                        maxIterations: Int = 20): DataFrame = {
     val near = minhashNearDuplicates(docs, text, id, n, k, bands, threshold, maxBucket)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     val exact = exactDuplicatePairs(docs, text, id)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
-    val cc = algorithm match {
-      case "label" => connectedComponents(docs.select(id.as("id")), near.union(exact), maxIterations)
-      case "star" => connectedComponentsStar(docs.select(id.as("id")), near.union(exact), maxIterations)
-      case other => throw new IllegalArgumentException(
-        s"unknown clustering algorithm '$other' (label | star)")
-    }
-    cc.select(col("id").as("doc_id"), col("component").as("cluster_rep"))
+    connectedComponents(docs.select(id.as("id")), near.union(exact), maxIterations)
+      .select(col("id").as("doc_id"), col("component").as("cluster_rep"))
   }
 
   /** Exact word-set Jaccard between each doc and its successor — a linear

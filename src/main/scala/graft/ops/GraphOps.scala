@@ -1184,11 +1184,12 @@ object GraphOps {
     * (`?a <owl:sameAs> ?b`, both ends IRIs) span an equivalence relation,
     * so:
     *
-    *  1. connected components over the symmetrized sameAs subgraph by
-    *     min-label propagation; each clique's canonical representative is
-    *     its lexicographically SMALLEST IRI — deterministic and
-    *     engine-independent, which is what makes the whole op
-    *     value-gateable against a declarative recursive-CTE oracle;
+    *  1. connected components over the sameAs subgraph
+    *     ([[DedupOps.connectedComponents]]); each clique's canonical
+    *     representative is its lexicographically SMALLEST IRI —
+    *     deterministic and engine-independent, which is what makes the
+    *     whole op value-gateable against a declarative recursive-CTE
+    *     oracle;
     *  2. every quad's subject — and IRI object (`dt = ""`; literals whose
     *     lexical form happens to equal an alias IRI are NOT touched — is
     *     rewritten through the (alias → canonical) mapping;
@@ -1203,12 +1204,14 @@ object GraphOps {
     * broadcast-hash joins — the rewrite pass is map-side — and set-dedup
     * probes the small rewritten slice against the (broadcast) collidable
     * slice of the untouched graph, never a whole-graph `distinct()`.
-    * Label-propagation rounds are equi-joins over the alias subgraph
-    * alone; labels only ever decrease lexicographically, so "no row
-    * changed" (one small join per round) is the fixpoint test. A mapping
-    * too big to broadcast (pathological: most nodes are aliases) degrades
-    * to shuffle joins with the same plan. Raises on non-convergence
-    * rather than returning partially-merged identities.
+    * The CC rounds are joins over the alias subgraph alone and take
+    * O(log n) rounds even on an n-link alias chain. `broadcastCap` gates
+    * on the mapping's row count (one row per alias that is not its
+    * clique's representative), counted while the mapping's checkpoint
+    * materializes — no extra job. A mapping too big to broadcast
+    * (pathological: most nodes are aliases) degrades to shuffle joins
+    * with the same plan. Raises on non-convergence rather than returning
+    * partially-merged identities.
     */
   def resolveSameAs(quads: DataFrame, sameAsPred: String = OwlSameAs,
                     maxIterations: Int = 20,
@@ -1216,46 +1219,20 @@ object GraphOps {
     val edges = quads
       .filter(col("pred") === sameAsPred && col("dt") === "")
       .select(col("subj").as("a"), col("obj").as("b"))
-    val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
-    var (labels, nAlias) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-      sym.select(col("a").as("id")).distinct()
-        .select(col("id"), col("id").as("component")))
-    var converged = nAlias == 0
-    var i = 0
-    while (!converged && i < maxIterations) {
-      // the old-label join rides INSIDE the checkpointed round (one
-      // `prev` column), and the convergence test — any label changed? —
-      // is a boolean column counted DURING the checkpoint
-      // materialization: one driver action per round, no separate probe
-      val prop = sym.join(labels, sym("a") === labels("id"))
-        .select(col("b").as("id"), col("component"))
-      val (next, _, nChanged) =
-        org.apache.spark.sql.GraftInternal.localCheckpointWithPredCount(
-          labels.select(col("id"), col("component")).union(prop)
-            .groupBy("id").agg(min("component").as("component"))
-            .join(labels.select(col("id"), col("component").as("prev")), Seq("id"))
-            .withColumn("__changed", col("component") =!= col("prev")),
-          "__changed")
-      converged = nChanged == 0
-      labels = next.select(col("id"), col("component"))
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"resolveSameAs did not converge in $maxIterations rounds " +
-          "(adversarially long sameAs chain?) — raise maxIterations")
+    // every alias is an edge endpoint, so the CC takes no further nodes
+    // (`limit(0)` folds away in planning: no second scan of the graph);
+    // the checkpoint counts the mapping's rows for the broadcast gate
+    val (mapping, nAlias) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
+      DedupOps.connectedComponents(edges.select(col("a").as("id")).limit(0), edges, maxIterations)
+        .filter(col("id") =!= col("component")))
     // size gate (r5 review #3): at web scale owl:sameAs alias sets are
     // NOT always vocabulary-sized — hundreds of millions of cross-links
     // force-broadcast would OOM the driver or trip the 8 GB broadcast
-    // hard cap. The alias-subgraph node count is already known from the
-    // label materialization (no extra job); past the cap every
-    // mapping-shaped join degrades to a plain shuffle join with the
-    // identical plan semantics (same pattern as schemaClosure's
-    // driver-side cap).
+    // hard cap. Past the cap every mapping-shaped join degrades to a
+    // plain shuffle join with the identical plan semantics (same pattern
+    // as schemaClosure's driver-side cap).
     val small = nAlias <= broadcastCap
     def bcast(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val mapping = labels.filter(col("id") =!= col("component"))
     val noSameAs = quads.filter(col("pred") =!= sameAsPred)
     val joined = noSameAs
       .join(bcast(mapping.select(col("id").as("s_alias"),
@@ -1531,10 +1508,10 @@ object GraphOps {
       // the "any node below k?" probe is counted during the degree
       // checkpoint's own materialization — one action per peeling round
       val (deg, _, nBelow) =
-        org.apache.spark.sql.GraftInternal.localCheckpointWithPredCount(
+        org.apache.spark.sql.GraftInternal.localCheckpointWithSum(
           und.select(col("a").as("node")).union(und.select(col("b").as("node")))
             .groupBy("node").agg(count(lit(1)).as("core_degree"))
-            .withColumn("__below", col("core_degree") < k),
+            .withColumn("__below", (col("core_degree") < k).cast("long")),
           "__below")
       val keep = deg.filter(col("core_degree") >= k)
         .select(col("node"), col("core_degree"))

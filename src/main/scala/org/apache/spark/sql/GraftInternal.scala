@@ -10,7 +10,7 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, DataFrame 
   Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Zero-copy escape hatch: run an Iterator[InternalRow] transform over a
   * DataFrame's Tungsten rows WITHOUT the Row-encoder boundary.
@@ -67,69 +67,33 @@ object GraftInternal {
     (spark.internalCreateDataFrame(rdd, classic.schema), n)
   }
 
-  /** [[localCheckpointWithCount]] variant that additionally counts the
-    * rows whose boolean column `predCol` is true, still in the single
-    * materialization job. Fixpoint loops whose convergence test is a
-    * predicate over the just-materialized round (label ≠ previous label,
-    * degree < k, ...) previously paid a separate `isEmpty`/`filter.count`
-    * action per round on top of the checkpoint — guide §1.2 again: the
-    * probe is free if it rides the materialization pass.
+  /** [[localCheckpointWithCount]] variant that also sums the LongType
+    * column `longCol` in the same materialization job: returns the frame,
+    * its row count and the sum. The sum wraps on overflow and counts a
+    * null as 0. Fixpoint loops ride their convergence test on it instead
+    * of a separate action per round: a count of rows meeting a predicate
+    * (sum the predicate cast to long), or a checksum of the round's rows
+    * (sum a row hash — wrapping addition is as good a checksum as an
+    * exact one).
     */
-  def localCheckpointWithPredCount(df: DataFrame,
-                                   predCol: String): (DataFrame, Long, Long) = {
+  def localCheckpointWithSum(df: DataFrame, longCol: String): (DataFrame, Long, Long) = {
     val classic = df.asInstanceOf[ClassicDataFrame]
     val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    val ord = classic.schema.fieldIndex(predCol)
+    require(classic.schema(longCol).dataType == LongType, s"$longCol must be a long column")
+    val ord = classic.schema.fieldIndex(longCol)
     val rdd = classic.queryExecution.toRdd.map(_.copy())
     rdd.localCheckpoint()
-    val (n, nTrue) = rdd.mapPartitions { it =>
+    val (n, sum) = rdd.mapPartitions { it =>
       var total = 0L
-      var t = 0L
+      var acc = 0L
       while (it.hasNext) {
         val r = it.next()
         total += 1
-        if (!r.isNullAt(ord) && r.getBoolean(ord)) t += 1
+        if (!r.isNullAt(ord)) acc += r.getLong(ord)
       }
-      Iterator.single((total, t))
-    }.fold((0L, 0L)) { case ((a1, b1), (a2, b2)) => (a1 + a2, b1 + b2) }
-    (spark.internalCreateDataFrame(rdd, classic.schema), n, nTrue)
-  }
-
-  /** [[localCheckpointWithCount]] variant that additionally sums a
-    * DecimalType column during the materialization pass (null when every
-    * value is null, mirroring SQL `sum`). For fixpoint loops whose
-    * convergence test is a checksum aggregate of the round (connected
-    * components' label sum, star CC's edge-hash sum): the caller casts
-    * the checksum into a column of the round frame and the separate
-    * per-round aggregation action disappears.
-    */
-  def localCheckpointWithCountAndDecimalSum(
-      df: DataFrame, sumCol: String): (DataFrame, Long, java.math.BigDecimal) = {
-    val classic = df.asInstanceOf[ClassicDataFrame]
-    val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
-    val ord = classic.schema.fieldIndex(sumCol)
-    val dt = classic.schema(sumCol).dataType
-      .asInstanceOf[org.apache.spark.sql.types.DecimalType]
-    val (p, s) = (dt.precision, dt.scale)
-    val rdd = classic.queryExecution.toRdd.map(_.copy())
-    rdd.localCheckpoint()
-    val (n, sum, any) = rdd.mapPartitions { it =>
-      var total = 0L
-      var acc = java.math.BigDecimal.ZERO
-      var seen = false
-      while (it.hasNext) {
-        val r = it.next()
-        total += 1
-        if (!r.isNullAt(ord)) {
-          acc = acc.add(r.getDecimal(ord, p, s).toJavaBigDecimal)
-          seen = true
-        }
-      }
-      Iterator.single((total, acc, seen))
-    }.fold((0L, java.math.BigDecimal.ZERO, false)) {
-      case ((n1, s1, a1), (n2, s2, a2)) => (n1 + n2, s1.add(s2), a1 || a2)
-    }
-    (spark.internalCreateDataFrame(rdd, classic.schema), n, if (any) sum else null)
+      Iterator.single((total, acc))
+    }.fold((0L, 0L)) { case ((n1, s1), (n2, s2)) => (n1 + n2, s1 + s2) }
+    (spark.internalCreateDataFrame(rdd, classic.schema), n, sum)
   }
 
   /** True when `df` is ALREADY a materialized RDD (a local/reliable

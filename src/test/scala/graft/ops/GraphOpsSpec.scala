@@ -1335,6 +1335,16 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(asSet(GraphOps.resolveSameAs(kg)) == expected)
   }
 
+  test("resolveSameAs: a 60-link chain resolves to its least IRI in default rounds") {
+    // diameter 60: min-label propagation would need 60 rounds, past the
+    // default budget of 20; the canonical IRI sits at the far end from the
+    // one alias that holds a triple
+    def iri(i: Int) = f"urn:e:$i%04d"
+    val chain = (0 until 60).map(i => (iri(i + 1), GraphOps.OwlSameAs, iri(i), ""))
+    val kg = quads(chain :+ ((iri(60), "p:name", "far", XsdString)): _*)
+    assert(asSet(GraphOps.resolveSameAs(kg)) == Set(("urn:e:0000", "p:name", "far", XsdString)))
+  }
+
   test("hits: 20 iterations leave no persisted frames behind (unpersist discipline)") {
     val sp = spark; import sp.implicits._
     sp.catalog.clearCache()

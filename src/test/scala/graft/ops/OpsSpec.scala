@@ -268,14 +268,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L, 20L -> 20L))
 
-    // a long chain must raise (observable non-convergence), not mislabel
-    val chainN = 40
-    val chainNodes = (1L to chainN).toDF("id")
-    val chainEdges = (1L until chainN).map(i => (i, i + 1)).toDF("a", "b")
-    intercept[IllegalStateException] {
-      DedupOps.connectedComponents(chainNodes, chainEdges, maxIterations = 3).collect()
-    }
-
     // duplicateClusters: exact dups AND transitive near-dups share one rep
     val ws = (0 until 30).map(i => s"${('a' + i / 26).toChar}${('a' + i % 26).toChar}word")
     val body = ws.mkString(" ")
@@ -290,38 +282,32 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(clusters == Map(1L -> 1L, 5L -> 1L, 3L -> 1L, 7L -> 7L), clusters.toString)
   }
 
-  test("connectedComponentsStar: log-round convergence on a 1000-link chain; same labels as label propagation") {
+  test("connectedComponents: O(log n) rounds on a 1000-link chain; 3 rounds must raise") {
     val sp = spark; import sp.implicits._
     // the adversarial case for min-label propagation: a diameter-1000
-    // chain needs ~1000 label rounds, but the alternating-star variant
-    // must close it in O(log n) — 12 rounds is the ⌈log₂ 1001⌉ = 10
-    // bound plus the fixpoint-detection round and one slack round
+    // chain needs ~1000 label rounds, but large-star/small-star must
+    // close it in O(log n) — 12 rounds is the ⌈log₂ 1001⌉ = 10 bound plus
+    // the fixpoint-detection round and one slack round
     val n = 1000L
     val chainNodes = (0L to n).toDF("id")
     val chainEdges = (0L until n).map(i => (i, i + 1)).toDF("a", "b")
-    val star = DedupOps.connectedComponentsStar(chainNodes, chainEdges, maxIterations = 12)
+    val labels = DedupOps.connectedComponents(chainNodes, chainEdges, maxIterations = 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star.size == n.toInt + 1 && star.values.forall(_ == 0L),
+    assert(labels.size == n.toInt + 1 && labels.values.forall(_ == 0L),
       "every chain node must label to the minimum id 0")
-    // agreement with the default algorithm on a multi-component graph
-    val nodes = Seq(1L, 2L, 3L, 4L, 10L, 11L, 20L).toDF("id")
-    val edges = Seq((2L, 1L), (2L, 3L), (4L, 3L), (10L, 11L)).toDF("a", "b")
-    val a = DedupOps.connectedComponents(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = DedupOps.connectedComponentsStar(nodes, edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b, "star and label propagation must produce identical labels")
+    // too small a round budget raises (observable non-convergence), not mislabels
+    intercept[IllegalStateException] {
+      DedupOps.connectedComponents(chainNodes, chainEdges, maxIterations = 3).collect()
+    }
     // empty edge set: all singletons, no iteration
     val none = Seq.empty[(Long, Long)].toDF("a", "b")
-    assert(DedupOps.connectedComponentsStar(Seq(7L).toDF("id"), none)
+    assert(DedupOps.connectedComponents(Seq(7L).toDF("id"), none)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 7L)))
-    // duplicateClusters routes through the flag
     val docs = Seq((1L, "aa bb cc dd"), (5L, "aa bb cc dd"),
       (9L, "zz yy xx ww")).toDF("doc_id", "text")
-    val viaStar = DedupOps.duplicateClusters(docs, col("text"), col("doc_id"),
-        threshold = 0.5, algorithm = "star")
+    val clusters = DedupOps.duplicateClusters(docs, col("text"), col("doc_id"), threshold = 0.5)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStar == Map(1L -> 1L, 5L -> 1L, 9L -> 9L))
+    assert(clusters == Map(1L -> 1L, 5L -> 1L, 9L -> 9L))
   }
 
   test("exactDuplicatePairs recovers the dup→rep mapping the LSH collapse hides") {
@@ -480,36 +466,20 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"embedding near-dup degenerated to all-pairs:\n$p2")
   }
 
-  test("localCheckpointWithPredCount: counts ride the materialization and match SQL") {
+  test("localCheckpointWithSum: count and wrapping long sum ride one materialization") {
     val sp = spark; import sp.implicits._
-    val df = Seq((1L, true), (2L, false), (3L, true), (4L, true))
-      .toDF("id", "flag")
-      .withColumn("flag", when(col("id") === 2L, lit(null)).otherwise(col("flag")))
-    val (out, n, nTrue) =
-      org.apache.spark.sql.GraftInternal.localCheckpointWithPredCount(df, "flag")
-    assert(n == 4L && nTrue == 3L) // null counts as not-true, like a SQL filter
-    assert(out.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L, 4L))
-    val (_, n0, t0) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithPredCount(df.filter(col("id") > 100), "flag")
-    assert(n0 == 0L && t0 == 0L)
-  }
-
-  test("localCheckpointWithCountAndDecimalSum matches SQL sum incl. null cases") {
-    val sp = spark; import sp.implicits._
-    val df = Seq(Some(10L), Some(20L), None, Some(30L)).toDF("v")
-      .withColumn("__cs", col("v").cast("decimal(38,0)"))
-    val (out, n, s) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithCountAndDecimalSum(df, "__cs")
-    assert(n == 4L && s.compareTo(new java.math.BigDecimal(60)) == 0)
-    assert(out.count() == 4L)
-    // all-null and empty frames sum to null, mirroring SQL sum()
-    val allNull = Seq("a", "b").toDF("v")
-      .withColumn("__cs", lit(null).cast("decimal(38,0)"))
+    val df = Seq(Some(10L), None, Some(30L)).toDF("v")
+    val (out, n, s) = org.apache.spark.sql.GraftInternal.localCheckpointWithSum(df, "v")
+    assert(n == 3L && s == 40L) // a null row counts, and adds 0
+    assert(out.select("v").collect().map(r => Option(r.get(0))).toSet ==
+      Set(Some(10L), None, Some(30L)))
+    // the sum wraps past Long.MaxValue like JVM long addition
     val (_, n1, s1) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithCountAndDecimalSum(allNull, "__cs")
-    assert(n1 == 2L && s1 == null)
+      .localCheckpointWithSum(Seq(Long.MaxValue, 2L).toDF("v"), "v")
+    assert(n1 == 2L && s1 == Long.MinValue + 1L)
+    // an empty frame: no rows, sum 0
     val (_, n2, s2) = org.apache.spark.sql.GraftInternal
-      .localCheckpointWithCountAndDecimalSum(allNull.filter(col("v") === "zz"), "__cs")
-    assert(n2 == 0L && s2 == null)
+      .localCheckpointWithSum(df.filter(col("v") > 100L), "v")
+    assert(n2 == 0L && s2 == 0L)
   }
 }
