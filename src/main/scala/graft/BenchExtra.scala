@@ -48,9 +48,11 @@ object BenchExtra {
     }
 
     // one warmup pass (JIT) then `reps` interleaved timed passes, min per
-    // query — the Bench discipline
+    // query — the Bench discipline. Pass p runs the names rotated by p, so
+    // no query always holds the same slot (the first slot reads slower).
     val all = (0 to reps).map { pass =>
-      names.map { name =>
+      val r = pass % math.max(names.size, 1)
+      (names.drop(r) ++ names.take(r)).map { name =>
         val (j0, s0) = snap()
         val t0 = System.nanoTime()
         val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }

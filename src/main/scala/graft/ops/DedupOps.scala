@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines.
@@ -219,69 +220,42 @@ object DedupOps {
     * labeled with the smallest id of its component; singletons label
     * themselves.
     *
-    * Converges when the edge set reaches a fixpoint — at which point the
-    * graph is a forest of stars, each centered at its component's minimum
-    * id. Round count is O(log n) even on a DIAMETER-n chain, where min-label
-    * propagation needs O(n) rounds, so one adversarial duplicate or
-    * owl:sameAs chain cannot run a caller out of its round budget. This is
-    * the only CC routine: on the short-diameter LSH dup graph it also costs
-    * no more than label propagation did (sf0.1, back to back: 1.45 s / 35
-    * jobs against label propagation's 1.76 s / 33; 50 disjoint
-    * diameter-100 chains: 8 rounds / 9.28 s against 101 rounds / 45.0 s).
+    * The fixpoint ([[Fixpoint.run]]) is a forest of stars, each centered
+    * at its component's minimum id. Round count is O(log n) even on a
+    * DIAMETER-n chain, where min-label propagation needs O(n) rounds, so
+    * one adversarial duplicate or owl:sameAs chain cannot run a caller out
+    * of its round budget. This is the only CC routine: on the
+    * short-diameter LSH dup graph it also costs no more than label
+    * propagation did (sf0.1, back to back: 1.45 s / 35 jobs against label
+    * propagation's 1.76 s / 33; 50 disjoint diameter-100 chains: 8 rounds
+    * / 9.28 s against 101 rounds / 45.0 s).
     *
-    * Each round costs two groupBy-min aggregations and two joins, all on
-    * uniform node-id keys, and `localCheckpoint` cuts the lineage so plans
-    * don't grow with iterations. The fixpoint test is a (row count,
-    * wrapping xxhash64 sum) checksum of the round's edge set, taken during
-    * the round's own checkpoint materialization. A graph that hasn't
-    * converged by `maxIterations` raises rather than returning
-    * partially-merged labels. At 10^12 edges swap localCheckpoint for
-    * reliable checkpointing; the join/agg shape is unchanged.
+    * Each round is two windowed minimums (one per star step, each one
+    * shuffle on a uniform node-id key, no join) and one distinct.
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIterations: Int = 30): DataFrame = {
-    def checksummedCheckpoint(e0: DataFrame): (DataFrame, (Long, Long)) = {
-      val (d, n, s) = org.apache.spark.sql.GraftInternal
-        .localCheckpointWithSum(e0.withColumn("__h", xxhash64(col("a"), col("b"))), "__h")
-      (d.select(col("a"), col("b")), (n, s))
-    }
-    // materialize the edge list ONCE: `edges` is typically an expensive
-    // plan (the whole MinHash-LSH candidate+verify pipeline, a scan of the
-    // graph), and the first round would otherwise re-run it
-    var (e, prev) = checksummedCheckpoint(edges.select(col("a"), col("b"))
-      .filter(col("a") =!= col("b")).distinct())
-    var converged = prev._1 == 0 // no non-loop edges → nothing to iterate
-    var i = 0
-    while (!converged && i < maxIterations) {
+    // the start frame is materialized ONCE: `edges` is typically an
+    // expensive plan (the whole MinHash-LSH candidate+verify pipeline, a
+    // scan of the graph), and the first round would otherwise re-run it
+    val start = edges.select(col("a"), col("b")).filter(col("a") =!= col("b")).distinct()
+    val stars = Fixpoint.run("connectedComponents", maxIterations, start) { e =>
       // large-star over the symmetric view: neighbors ABOVE u hook to
-      // m = min(N(u) ∪ {u})
+      // m = min(N(u) ∪ {u}); every output edge has u > v
       val s = e.union(e.select(col("b").as("a"), col("a").as("b")))
-      val mins = s.groupBy("a").agg(min("b").as("mn"))
-      val ls = s.join(mins, "a")
+      val ls = s.withColumn("mn", min("b").over(Window.partitionBy("a")))
         .filter(col("b") > col("a"))
-        .select(col("b").as("a"), least(col("a"), col("mn")).as("b"))
+        .select(col("b").as("u"), least(col("a"), col("mn")).as("v"))
+      // small-star over that larger → smaller orientation: the ≤ side of
+      // every node (plus the node) hooks to its minimum; large-star's
+      // duplicate edges fall to the one distinct below
+      ls.withColumn("m", min("v").over(Window.partitionBy("u")))
+        .select(explode(array(col("v"), col("u"))).as("a"), col("m").as("b"))
         .filter(col("a") =!= col("b")).distinct()
-      // small-star over the canonical (larger → smaller) orientation:
-      // the ≤ side of every node (plus the node) hooks to its minimum
-      val canon = ls.select(greatest(col("a"), col("b")).as("u"),
-        least(col("a"), col("b")).as("v"))
-      val mins2 = canon.groupBy("u").agg(min("v").as("m"))
-      val withM = canon.join(mins2, "u")
-      val (ss, cs) = checksummedCheckpoint(
-        withM.select(col("v").as("a"), col("m").as("b"))
-          .union(withM.select(col("u").as("a"), col("m").as("b")))
-          .filter(col("a") =!= col("b")).distinct())
-      converged = cs == prev
-      prev = cs
-      e = ss
-      i += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIterations rounds — raise maxIterations")
     // fixpoint edge set = star edges (member → component-min center)
-    val members = e.select(col("a").as("id"), col("b").as("component"))
-    val centers = e.select(col("b").as("id"), col("b").as("component")).distinct()
+    val members = stars.select(col("a").as("id"), col("b").as("component"))
+    val centers = stars.select(col("b").as("id"), col("b").as("component")).distinct()
     val labeled = members.union(centers)
     val singletons = nodes.select(col("id"))
       .join(labeled.select(col("id")), Seq("id"), "left_anti")

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1474,57 +1475,40 @@ object GraphOps {
 
   /** k-core decomposition membership: the maximal induced subgraph in
     * which every node has degree ≥ k, found by the standard peeling
-    * fixpoint — repeatedly drop nodes whose CURRENT induced degree is
-    * below k. Each round is one degree aggregation over the surviving
-    * edge set plus two semi-joins restricting edges to surviving
-    * endpoints — all keyed on the uniform node id, lineage cut per
-    * round. Peeling removes at least one node per non-final round, but
-    * in practice converges in a handful of rounds (each round removes
-    * the whole current "shell"); `maxIterations` bounds the loop and the
-    * method RAISES rather than returning a superset of the core. The
-    * k-core is unique (the union of two subgraphs with min-degree ≥ k
-    * has min-degree ≥ k), so a declarative unrolled replay — the DuckDB
-    * oracle chains the same peel round a fixed number of times; extra
-    * rounds past the fixpoint are no-ops — value-gates the result.
-    *
-    * At 10^12 edges: the edge table shrinks monotonically (each round's
-    * semi-joins only ever REMOVE rows), so round cost decays; the
-    * convergence test rides the degree aggregate already computed (no
-    * extra job). Swap localCheckpoint → reliable checkpoint on a real
-    * cluster, as with every iterative op here.
+    * fixpoint over the undirected edge set ([[Fixpoint.run]]). Each round
+    * is one peel: it keeps the edges whose two endpoints both have degree
+    * ≥ k in the current set, by two windowed counts over the symmetric
+    * view (one shuffle each on the uniform node id, no join). The
+    * fixpoint is a peel that removes nothing, so P peels that remove
+    * nodes need `maxIterations ≥ P + 1`. Each round removes the whole
+    * current "shell", so a handful of rounds is typical, and the edge set
+    * only ever shrinks, so round cost decays. The k-core is unique (the
+    * union of two subgraphs with min-degree ≥ k has min-degree ≥ k), so a
+    * declarative unrolled replay — the DuckDB oracle chains the same peel
+    * round a fixed number of times; extra rounds past the fixpoint are
+    * no-ops — value-gates the result.
     *
     * Output: (node, core_degree) for k-core members — their degree
     * WITHIN the core (≥ k by construction).
     */
   def kCore(edges0: DataFrame, k: Int, maxIterations: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var und = edges0.select(col("src"), col("dst"))
+    val und = edges0.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
-      .distinct().localCheckpoint()
-    var i = 0
-    while (i < maxIterations) {
-      // the "any node below k?" probe is counted during the degree
-      // checkpoint's own materialization — one action per peeling round
-      val (deg, _, nBelow) =
-        org.apache.spark.sql.GraftInternal.localCheckpointWithSum(
-          und.select(col("a").as("node")).union(und.select(col("b").as("node")))
-            .groupBy("node").agg(count(lit(1)).as("core_degree"))
-            .withColumn("__below", (col("core_degree") < k).cast("long")),
-          "__below")
-      val keep = deg.filter(col("core_degree") >= k)
-        .select(col("node"), col("core_degree"))
-      if (nBelow == 0) return keep
-      und = und
-        .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      i += 1
+      .distinct()
+    val core = Fixpoint.run(s"kCore(k=$k)", maxIterations, und) { e =>
+      // over the symmetric view, the rows with b = x are as many as those
+      // with a = x, so each window counts one endpoint's degree
+      e.union(e.select(col("b").as("a"), col("a").as("b")))
+        .withColumn("da", count(lit(1)).over(Window.partitionBy("a")))
+        .withColumn("db", count(lit(1)).over(Window.partitionBy("b")))
+        .filter(col("a") < col("b") && col("da") >= k && col("db") >= k)
+        .select(col("a"), col("b"))
     }
-    throw new IllegalStateException(
-      s"kCore(k=$k) did not reach its peeling fixpoint in $maxIterations " +
-        "rounds — raise maxIterations")
+    core.select(col("a").as("node")).union(core.select(col("b").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("core_degree"))
   }
 
   /** Semi-supervised label propagation: seed nodes carry fixed labels
@@ -1771,13 +1755,12 @@ object GraphOps {
     * round d's frontier is exactly the set of nodes first reached at
     * distance d, so no per-node min() is ever needed — a node entering
     * the frontier IS at its shortest distance, and the anti-join against
-    * the settled set both deduplicates and terminates. Rounds =
-    * eccentricity of the source set; each round is one equi-join of the
-    * (shrinking) frontier against the edge table plus one anti-join
-    * against the settled table — all keyed on the uniform node id, with
-    * lineage cut per round. Converges when the frontier empties; raises
-    * if `maxIterations` rounds still have live frontier (disconnected
-    * remainder is fine — unreached nodes simply don't appear).
+    * the settled set both deduplicates and terminates. Each round is one
+    * equi-join of the (shrinking) frontier against the edge table plus one
+    * anti-join against the settled table, all keyed on the uniform node
+    * id. It converges when the frontier empties, after eccentricity + 1
+    * rounds; the round budget and its error are [[Fixpoint.rounds]]'s.
+    * A disconnected remainder is fine: unreached nodes simply don't appear.
     *
     * At 10^12 edges this is the textbook Pregel-style BFS as relational
     * rounds: co-partition the stored edge table by `src` and the
@@ -1799,14 +1782,11 @@ object GraphOps {
     // of its own — it is a plain union of the already-materialized
     // frontier frames (guide §1.2: previously 3 jobs per level, and the
     // level count is the tree depth, so this is the whole query's cost)
-    var (frontier0, nFrontier) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
+    var (frontier, nFrontier) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
       sources.select(col("node")).distinct()
         .select(col("node"), lit(0L).as("distance")))
-    var frontier = frontier0
     var dist = frontier
-    var i = 0
-    var live = nFrontier > 0
-    while (live && i < maxIterations) {
+    if (nFrontier > 0) Fixpoint.rounds("shortestPaths", maxIterations) { i =>
       // the level's distance is the loop counter — a driver constant —
       // so it never rides through the join/distinct/anti-join: the
       // frontier shuffles a single node column and the distinct and
@@ -1818,7 +1798,6 @@ object GraphOps {
           .join(dist, Seq("node"), "left_anti")
           .select(col("node"), lit((i + 1).toLong).as("distance")))
       frontier = f
-      live = nf > 0
       // the settled table re-materializes every FOURTH level, not every
       // level: in between it is a short union chain of already-
       // materialized frontier frames (narrow — no shuffle), so the
@@ -1826,59 +1805,41 @@ object GraphOps {
       // times instead of D. (The two extremes both measured worse: a
       // checkpoint per level pays D full copies; no checkpoint at all
       // re-reads every prior level's RDD in each anti-join build.)
-      if (live) {
+      if (nf > 0) {
         val u = dist.union(frontier)
         dist = if (i % 4 == 3) u.localCheckpoint() else u
       }
-      i += 1
+      nf == 0
     }
-    if (live)
-      throw new IllegalStateException(
-        s"shortestPaths frontier still live after $maxIterations rounds " +
-          "(eccentricity exceeds the bound) — raise maxIterations")
     dist
   }
 
   /** Transitive closure of a directed edge list (`src`, `dst`) by
-    * iterative doubling: after round i the path set covers all lengths up
-    * to 2^i, so a diameter-D graph converges in ⌈log₂ D⌉ + 1 rounds —
-    * O(log D) self-joins instead of the O(D) rounds of frontier BFS. This
-    * matters at corpus scale: each round is a full shuffle join, and at
-    * 10^12 edges ten shuffles vs a thousand is the whole game. Each round
-    * is `localCheckpoint`ed to cut lineage (swap for reliable
-    * checkpointing on a real cluster). Convergence = path count fixpoint;
-    * non-convergence within `maxIterations` raises rather than returning
-    * a silently partial closure.
+    * iterative doubling ([[doublingClosure]]): after round i the path set
+    * covers all lengths up to 2^i, so a diameter-D graph converges in
+    * ⌈log₂ D⌉ + 1 rounds — O(log D) self-joins instead of the O(D) rounds
+    * of frontier BFS. This matters at corpus scale: each round is a full
+    * shuffle join, and at 10^12 edges ten shuffles vs a thousand is the
+    * whole game.
     *
     * Output: all (src, dst) pairs with dst reachable in ≥ 1 step. Beware
     * the closure of a dense graph is quadratic — this is for
     * hierarchy/ancestry-shaped relations (rdfs:subClassOf, parent trees,
     * skos:broader), not social graphs.
     */
-  def transitiveClosure(edges: DataFrame, maxIterations: Int = 20): DataFrame = {
-    // checkpoint+count fused into ONE job per round (the count IS the
-    // materialization the checkpoint runs anyway) — guide §1.2: halve
-    // the per-round driver actions before tuning anything else
-    var (paths, n) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-      edges.select(col("src"), col("dst")).distinct())
-    var converged = n == 0
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val doubled = paths.as("l").join(paths.as("r"), col("l.dst") === col("r.src"))
-        .select(col("l.src").as("src"), col("r.dst").as("dst"))
-      val (next, m) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-        paths.union(doubled).distinct())
-      converged = m == n
-      paths = next
-      n = m
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"transitiveClosure did not converge in $maxIterations doubling rounds " +
-          "(cycle-free depth > 2^rounds, or a dense quadratic closure) — raise maxIterations")
-    paths
-  }
+  def transitiveClosure(edges: DataFrame, maxIterations: Int = 20): DataFrame =
+    doublingClosure("transitiveClosure", edges.select(col("src"), col("dst")).distinct(),
+      maxIterations)
+
+  /** Close `paths` under composition: the [[Fixpoint.run]] of
+    * `p ∪ chain(p, p)`, each round doubling the path lengths covered. */
+  private def doublingClosure(op: String, paths: DataFrame, maxIterations: Int): DataFrame =
+    Fixpoint.run(op, maxIterations, paths)(p => p.union(chain(p, p)).distinct())
+
+  /** Paths that run through `l` then `r`: (l.src, r.dst) where l.dst = r.src. */
+  private def chain(l: DataFrame, r: DataFrame): DataFrame =
+    l.as("l").join(r.as("r"), col("l.dst") === col("r.src"))
+      .select(col("l.src").as("src"), col("r.dst").as("dst"))
 
   /** Incrementally maintain a materialized transitive closure: given
     * the closure `C` of an edge set and a batch of NEW edges `ΔE`,
@@ -1890,20 +1851,12 @@ object GraphOps {
     *
     * Output: the UPDATED closure (old ∪ new paths), same (src, dst)
     * schema. Value-gated against the full-recompute recursive-CTE
-    * oracle (`kg_closure_delta`); raises on non-convergence like
-    * [[transitiveClosure]].
+    * oracle (`kg_closure_delta`).
     */
   def updateClosure(closure: DataFrame, newEdges: DataFrame,
                     maxIterations: Int = 20): DataFrame = {
-    // skip the defensive checkpoint when the caller hands us a frame
-    // that is ALREADY a materialized (src, dst) RDD — e.g. fresh out of
-    // [[transitiveClosure]] — re-checkpointing it is a pure O(|closure|)
-    // copy job on the biggest frame of the query
-    val c =
-      if (org.apache.spark.sql.GraftInternal
-            .isMaterializedWithColumns(closure, Seq("src", "dst"))) closure
-      else closure.select(col("src"), col("dst")).localCheckpoint()
-    val fresh = closureDeltaOn(c, newEdges, maxIterations)
+    val c = materializedClosure(closure)
+    val fresh = closureDeltaOn("updateClosure", c, newEdges, maxIterations)
     // disjoint by construction (closureDelta anti-joins the stored set),
     // so the merge is a plain append — NOT a whole-closure distinct():
     // at stored-table scale the old closure never reshuffles
@@ -1921,50 +1874,36 @@ object GraphOps {
     * optionally C-extended on either side (`Δ ∪ CΔ ∪ ΔC ∪ CΔC`).
     * Because C is transitively CLOSED, two adjacent C-segments compose
     * inside C, so any multi-new-edge path decomposes into these
-    * segments joined end to end and the loop below needs only the
-    * single Δ⋈Δ self-join per round (each round doubles the new-edge
-    * count a path may contain: O(log k) rounds for paths through k new
-    * edges). The C-joins probe the stored closure with the SMALL side
-    * broadcast; the per-round self-join never touches C at all.
+    * segments joined end to end, and [[doublingClosure]] of that set
+    * needs only the Δ⋈Δ self-join per round (each round doubles the
+    * new-edge count a path may contain: O(log k) rounds for paths
+    * through k new edges). The C-joins probe the stored closure with the
+    * SMALL side broadcast; the per-round self-join never touches C.
     */
   def closureDelta(closure: DataFrame, newEdges: DataFrame,
                    maxIterations: Int = 20): DataFrame =
-    closureDeltaOn(
-      if (org.apache.spark.sql.GraftInternal
-            .isMaterializedWithColumns(closure, Seq("src", "dst"))) closure
-      else closure.select(col("src"), col("dst")).localCheckpoint(),
-      newEdges, maxIterations)
+    closureDeltaOn("closureDelta", materializedClosure(closure), newEdges, maxIterations)
 
-  /** [[closureDelta]] over an ALREADY-materialized closure frame —
-    * [[updateClosure]] checkpoints the stored closure once and both its
-    * consumers (the delta joins here and the final append) read that one
-    * materialization instead of each paying their own checkpoint job.
+  /** The stored closure as a materialized (src, dst) frame: [[updateClosure]]
+    * reads it twice (the delta joins and the final append), and a frame
+    * fresh out of [[transitiveClosure]] is already one — re-checkpointing
+    * it would be a pure O(|closure|) copy job on the query's biggest frame.
     */
-  private def closureDeltaOn(c: DataFrame, newEdges: DataFrame,
+  private def materializedClosure(closure: DataFrame): DataFrame =
+    if (org.apache.spark.sql.GraftInternal
+          .isMaterializedWithColumns(closure, Seq("src", "dst"))) closure
+    else closure.select(col("src"), col("dst")).localCheckpoint()
+
+  /** [[closureDelta]] over an ALREADY-materialized closure frame `c`. */
+  private def closureDeltaOn(op: String, c: DataFrame, newEdges: DataFrame,
                              maxIterations: Int): DataFrame = {
     val (edges, nEdges) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
       newEdges.select(col("src"), col("dst")).distinct())
     if (nEdges == 0) return edges // empty frame, right schema
-    def chain(l: DataFrame, r: DataFrame): DataFrame =
-      l.as("l").join(r.as("r"), col("l.dst") === col("r.src"))
-        .select(col("l.src").as("src"), col("r.dst").as("dst"))
     val cEdges = chain(c, edges)
-    // checkpoint+count fused per round, same as transitiveClosure
-    var (delta, n) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-      edges.union(cEdges).union(chain(edges, c)).union(chain(cEdges, c)).distinct())
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIterations) {
-      val (next, m) = org.apache.spark.sql.GraftInternal.localCheckpointWithCount(
-        delta.union(chain(delta, delta)).distinct())
-      converged = m == n
-      delta = next
-      n = m
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"closureDelta did not converge in $maxIterations delta rounds — raise maxIterations")
+    val delta = doublingClosure(op,
+      edges.union(cEdges).union(chain(edges, c)).union(chain(cEdges, c)).distinct(),
+      maxIterations)
     // only genuinely new paths: a new edge may connect a pair the old
     // edges already connected
     delta.join(c, Seq("src", "dst"), "left_anti")

@@ -97,17 +97,20 @@ object GraftInternal {
   }
 
   /** True when `df` is ALREADY a materialized RDD (a local/reliable
-    * checkpoint or an internally-created frame over concrete rows) whose
-    * columns are exactly `cols` — i.e. re-checkpointing it would be a
-    * pure copy. Lets operators that defensively materialize an input
-    * (e.g. updateClosure's stored-closure checkpoint) skip the redundant
-    * O(rows) copy job when the caller hands them a frame that a sibling
-    * operator just materialized.
+    * checkpoint or an internally-created frame over concrete rows), or a
+    * column selection of one, whose columns are exactly `cols` — i.e.
+    * re-checkpointing it would be a pure copy. Lets operators that
+    * defensively materialize an input (e.g. updateClosure's stored-closure
+    * checkpoint) skip the redundant O(rows) copy job when the caller hands
+    * them a frame that a sibling operator just materialized.
     */
   def isMaterializedWithColumns(df: DataFrame, cols: Seq[String]): Boolean = {
-    val lp = df.asInstanceOf[ClassicDataFrame].queryExecution.logical
-    lp.isInstanceOf[LogicalRDD] &&
-      lp.output.map(_.name) == cols
+    val lp = df.asInstanceOf[ClassicDataFrame].queryExecution.analyzed
+    val rows = lp match {
+      case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) => child
+      case p => p
+    }
+    rows.isInstanceOf[LogicalRDD] && lp.output.map(_.name) == cols
   }
 
   /** Drain the async listener bus (accessor is `private[spark]`):

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
 
@@ -1755,6 +1755,69 @@ class GraphOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(core2 == Map("a" -> 3L, "b" -> 3L, "c" -> 3L, "d" -> 3L))
     assert(GraphOps.kCore(edges, k = 4).isEmpty)
+  }
+
+  // the K4-plus-pendant-chain graph above and a 60-link chain, shared by
+  // the round-budget and job-count cases below
+  private def pendantChain = {
+    val sp = spark; import sp.implicits._
+    Seq(("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+      ("c", "d"), ("d", "e"), ("e", "f")).toDF("src", "dst")
+  }
+
+  test("convergence operators: one round budget, one non-convergence error") {
+    val sp = spark; import sp.implicits._
+    val ccNodes = (0L to 1000L).toDF("id")
+    val ccEdges = (0L until 1000L).map(i => (i, i + 1)).toDF("a", "b")
+    val chain8 = (1L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
+    val stored = GraphOps.transitiveClosure(Seq((100L, 101L)).toDF("src", "dst"))
+    val chain3 = Seq(("1", "2"), ("2", "3"), ("3", "4")).toDF("src", "dst")
+    // (error name, the rounds it needs, a budget too small, the run, its
+    // row count). The rounds needed are those each operator's own loop
+    // needed before the shared round loop, so maxIterations keeps its meaning.
+    val cases = Seq[(String, Int, Int, Int => DataFrame, Long)](
+      ("connectedComponents", 11, 3,
+        m => DedupOps.connectedComponents(ccNodes, ccEdges, maxIterations = m), 1001L),
+      ("kCore(k=2)", 3, 1, m => GraphOps.kCore(pendantChain, k = 2, maxIterations = m), 4L),
+      ("transitiveClosure", 4, 1, m => GraphOps.transitiveClosure(chain8, maxIterations = m), 36L),
+      ("updateClosure", 4, 1,
+        m => GraphOps.updateClosure(stored, chain8, maxIterations = m), 37L),
+      ("closureDelta", 4, 1, m => GraphOps.closureDelta(stored, chain8, maxIterations = m), 36L),
+      ("shortestPaths", 4, 2,
+        m => GraphOps.shortestPaths(chain3, Seq("1").toDF("node"), maxIterations = m), 4L))
+    for ((op, needed, tooFew, run, rows) <- cases) {
+      assert(run(needed).count() == rows, op)
+      for (m <- Seq(tooFew, needed - 1).distinct) {
+        val e = intercept[IllegalStateException](run(m).count())
+        assert(e.getMessage == s"$op did not converge in $m rounds — raise maxIterations")
+      }
+    }
+  }
+
+  test("job counts: a kCore peel and a connected-components round are a few jobs each") {
+    val sp = spark; import sp.implicits._
+    val chain60 = (0L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    @volatile var jobs = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    def jobsOf(df: => DataFrame): Int = {
+      org.apache.spark.GraftTestAccess.waitListenerBus(spark.sparkContext)
+      val before = jobs
+      df.collect()
+      org.apache.spark.GraftTestAccess.waitListenerBus(spark.sparkContext)
+      jobs - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // 3 peels here and 7 rounds for the chain: per round one checkpoint
+      // job plus one job per shuffle
+      val kc = jobsOf(GraphOps.kCore(pendantChain, k = 2))
+      assert(kc <= 13, s"kCore ran $kc jobs")
+      val cc = jobsOf(DedupOps.connectedComponents((0L to 60L).toDF("id"), chain60))
+      assert(cc <= 36, s"connectedComponents ran $cc jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("hits: authority concentrates on the pointed-at hub target; bit-identical across partitionings") {
