@@ -176,25 +176,24 @@ object GraphOps {
     * too — same term, same datatype, so the extra key never changes the
     * solution set).
     *
-    * Bucket pruning: over a predicate-bucketed parquet graph marked with
-    * its bucket count (`CorpusIO.markBuckets`), a pattern whose predicate
-    * is a constant or an alternation of constants scans only the
-    * `predBucket` directories of those predicates
-    * (`GraftInternal.predBucketPruner`). Any other frame — a variable or
-    * negated predicate, a cached or in-memory table, a union with path
-    * closure triples, an unmarked graph — is scanned whole. The plan walk
-    * and the marker read happen once per call, and only when some
-    * pattern has a constant predicate.
+    * Bucket pruning: over a predicate-bucketed parquet graph whose
+    * schema carries its bucket count (`Pipeline.BucketsKey` on `pred`,
+    * recorded by the graph's writer), a pattern whose predicate is a
+    * constant or an alternation of constants scans only the `predBucket`
+    * directories of those predicates (`GraftInternal.predBucketPruner`).
+    * Any other frame — a variable or negated predicate, a cached or
+    * in-memory table, a union with path closure triples, a graph with no
+    * count in its schema — is scanned whole. The plan walk happens once
+    * per call, and only when some pattern has a constant predicate; it
+    * does no I/O.
     */
   private def compilePatterns(quads: DataFrame,
                               patterns: Seq[(Option[Term], TriplePattern)],
                               trackDt: Boolean): DataFrame = {
     require(patterns.nonEmpty, "empty basic graph pattern")
-    // (bucket count, pruning function) of the marked graph `quads` reads
-    lazy val pruner: Option[(Int, Seq[Int] => DataFrame)] =
-      org.apache.spark.sql.GraftInternal.predBucketPruner(quads).flatMap { case (root, prune) =>
-        jsonld.spark.CorpusIO.bucketCount(quads.sparkSession, root).map(_ -> prune)
-      }
+    // (bucket count, pruning function) of the bucketed graph `quads` reads
+    lazy val pruner =
+      org.apache.spark.sql.GraftInternal.predBucketPruner(quads, jsonld.spark.Pipeline.BucketsKey)
     def scan(terms: Seq[(String, Term)]): DataFrame =
       terms.collectFirst {
         case ("pred", Const(v)) => Seq(v)

@@ -31,12 +31,6 @@ object PortableHash {
   def h60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** Same over a binary column (md5 of the raw bytes — a string payload
-    * hashed as binary equals the string hashed as UTF-8).
-    */
-  def h60Binary(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** DuckDB SQL fragment computing h60 of `expr` (a VARCHAR expression). */
   def sqlH60(expr: String): String =
     s"CAST('0x' || substr(md5($expr), 1, 15) AS BIGINT)"

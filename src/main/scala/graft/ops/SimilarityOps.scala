@@ -385,16 +385,4 @@ object SimilarityOps {
     val nb = s"sqrt(${fold(s"list_transform($bExpr, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")})"
     s"($dot / ($na * $nb))"
   }
-
-  /** Cosine between two embedding columns (double precision, left-to-right
-    * sums — the same fold order any SQL oracle uses).
-    */
-  def cosineBetween(a: Column, b: Column): Column = {
-    val ad = transform(a, x => x.cast("double"))
-    val bd = transform(b, x => x.cast("double"))
-    val dot = aggregate(zip_with(ad, bd, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = sqrt(aggregate(transform(ad, x => x * x), lit(0.0), (acc, x) => acc + x))
-    val nb = sqrt(aggregate(transform(bd, x => x * x), lit(0.0), (acc, x) => acc + x))
-    dot / (na * nb)
-  }
 }

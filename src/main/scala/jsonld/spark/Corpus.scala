@@ -83,11 +83,8 @@ object Corpus {
     * list and 8 nested @id-less section nodes — realistic per-document
     * work including multi-blank-node URDNA2015 (distinct first-degree
     * hashes, so no factorial paths).
-    */
-  def corpusHeavy(spark: SparkSession, sfDir: String): Dataset[RepoFile] =
-    corpusHeavyFrom(spark, documents(spark, sfDir))
-
-  /** corpusHeavy over an arbitrary documents frame — lets the bench
+    *
+    * Built over an arbitrary documents frame, which lets the bench
     * replicate the documents table (with renumbered doc_ids) BEFORE corpus
     * synthesis, so every replica is a fully distinct document and corpus
     * dedup keeps all quads (a real 10^12-file corpus is not 20 copies of

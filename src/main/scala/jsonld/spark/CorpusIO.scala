@@ -1,6 +1,7 @@
 package jsonld.spark
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.MetadataBuilder
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Stage checkpointing + resume.
@@ -72,15 +73,16 @@ object CorpusIO {
     *    with a clear error instead of mis-writing a relative parquet dir.
     *
     * `df` must carry `predBucket` (see Pipeline.dedupForWrite); the
-    * iceberg branch drops it — the bucket transform supersedes it. After
-    * the parquet write commits, [[markBuckets]] records the bucket count
-    * `predBucket` was computed with in the hidden [[BucketsMarker]] file.
-    * That count comes from the column itself (`Pipeline.predBuckets`),
-    * not from `buckets`, so the two cannot disagree; a `predBucket` of
-    * unknown origin leaves the graph unmarked. GraphOps prunes a
-    * constant-predicate pattern to its bucket only on a marked graph.
-    * Spark's listing skips `_` files, so readers of the graph see the
-    * same rows.
+    * iceberg branch drops it — the bucket transform supersedes it. The
+    * parquet branch records the bucket count `predBucket` was computed
+    * with in the metadata of the written `pred` column
+    * (`Pipeline.BucketsKey`), so every file footer carries it and a
+    * reader of the graph gets it with the schema. That count comes from
+    * the column itself (`Pipeline.predBuckets`), not from `buckets`, so
+    * the two cannot disagree; a `predBucket` of unknown origin strips
+    * any count `pred` carries, so a graph read back and re-bucketed by
+    * hand keeps no stale one. GraphOps prunes a constant-predicate
+    * pattern to its bucket only on a graph with a count.
     */
   def writeTriples(df: DataFrame, target: String, buckets: Int = 64): Unit =
     if (!target.contains("/")) {
@@ -95,35 +97,10 @@ object CorpusIO {
         .using("iceberg")
         .createOrReplace()
     } else {
-      df.write.mode("overwrite").partitionBy("predBucket").parquet(target)
-      Pipeline.predBuckets(df).foreach(markBuckets(df.sparkSession, target, _))
+      val meta = new MetadataBuilder().withMetadata(df.schema("pred").metadata)
+        .remove(Pipeline.BucketsKey)
+      Pipeline.predBuckets(df).foreach(meta.putLong(Pipeline.BucketsKey, _))
+      df.withMetadata("pred", meta.build())
+        .write.mode("overwrite").partitionBy("predBucket").parquet(target)
     }
-
-  /** Hidden file in the root of a `predBucket`-partitioned parquet graph
-    * holding its bucket count: every quad of predicate `p` lies under
-    * `predBucket=Pipeline.bucketOf(p, count)`. The overwrite of a graph
-    * deletes it with the rest of the directory.
-    */
-  val BucketsMarker = "_GRAFT_BUCKETS"
-
-  private[spark] def markBuckets(spark: SparkSession, dir: String, buckets: Int): Unit = {
-    val (f, p) = fs(spark, dir)
-    val out = f.create(new Path(p, BucketsMarker), true)
-    try out.write(buckets.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** The bucket count [[markBuckets]] recorded in `dir`; `None` without a
-    * readable marker, whatever the I/O error, so a query falls back to
-    * the full scan.
-    */
-  def bucketCount(spark: SparkSession, dir: String): Option[Int] = {
-    val (f, p) = fs(spark, dir)
-    try {
-      val in = f.open(new Path(p, BucketsMarker))
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).trim
-        .toIntOption.filter(_ > 0)
-      finally in.close()
-    } catch { case _: java.io.IOException => None }
-  }
 }

@@ -43,13 +43,4 @@ object EntityLink {
       joinType)
     joined.drop("__salt").drop("__salt2")
   }
-
-  /** Namespace split of an IRI: (prefix, localName) — used to build
-    * vocabulary dictionaries from observed predicates.
-    */
-  def iriNamespace(c: Column): Column =
-    regexp_extract(c, "^(.*[#/])([^#/]*)$", 1)
-
-  def iriLocalName(c: Column): Column =
-    regexp_extract(c, "^(.*[#/])([^#/]*)$", 2)
 }

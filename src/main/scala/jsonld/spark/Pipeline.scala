@@ -21,8 +21,9 @@ import jsonld.core.Rdf._
   * lineage aggregation) is left to Catalyst: the written graph shuffles
   * once, at the predicate-bucket repartition that both dedups and writes
   * ([[dedupForWrite]]), one parquet file per bucket whenever
-  * `buckets >= spark.sql.shuffle.partitions` ([[bucketSorted]]). The written graph records its bucket count in a
-  * hidden marker ([[CorpusIO.BucketsMarker]]), and `GraphOps` prunes each
+  * `buckets >= spark.sql.shuffle.partitions` ([[bucketSorted]]). The
+  * written graph records its bucket count in its own parquet schema
+  * ([[BucketsKey]] on `pred`), and `GraphOps` prunes each
   * constant-predicate triple pattern over it to that predicate's bucket
   * ([[bucketOf]]): the scan opens one `predBucket=` directory, not all.
   *
@@ -274,8 +275,12 @@ object Pipeline extends Serializable {
     org.apache.spark.sql.GraftInternal.evalConstant(bucketCol(lit(pred), buckets))
       .asInstanceOf[Int]
 
-  /** Metadata key of the `predBucket` column holding its bucket count. */
-  private val BucketsKey = "graft.predBuckets"
+  /** Metadata key holding a graph's bucket count: on the `predBucket`
+    * column [[withBucketKey]] adds, and on the `pred` column of a graph
+    * `CorpusIO.writeTriples` wrote, whose parquet footers keep it (the
+    * metadata of a partition column does not survive the write).
+    */
+  val BucketsKey = "graft.predBuckets"
 
   /** The bucket count `df`'s `predBucket` column was computed with
     * ([[withBucketKey]] records it in the column's metadata); `None` for a

@@ -134,18 +134,22 @@ object GraftInternal {
   /** Pruning of constant-predicate scans of `df` to their `predBucket`
     * partitions, when `df` reads a predicate-bucketed file graph: `df` is
     * a chain of deterministic Projects and Filters over ONE file relation
-    * with a single root path and an integer `predBucket` partition
-    * column, the `pred` column of `df` is that relation's own attribute
-    * (not a rename or a computed value), and no node of the chain is
-    * cached (pruning below a cached node would bypass the cache).
+    * with a single root path (two roots could hold graphs of different
+    * counts) and an integer `predBucket` partition column, the `pred`
+    * column of `df` is that relation's own attribute (not a rename or a
+    * computed value) and carries a positive bucket count under
+    * `countKey` in its metadata, and no node of the chain is cached
+    * (pruning below a cached node would bypass the cache). Schema
+    * inference read that metadata from a file footer when the relation
+    * was opened, so no I/O happens here.
     *
-    * Returns the graph's root path and a function giving `df` read from
-    * only the partitions `predBucket IN (buckets)`: the filter goes
-    * directly above the file relation, so the scan lists it as a
-    * partition filter and opens only those directories. `None` for any
-    * other `df`. The plan is walked once, however many patterns prune.
+    * Returns the bucket count and a function giving `df` read from only
+    * the partitions `predBucket IN (buckets)`: the filter goes directly
+    * above the file relation, so the scan lists it as a partition filter
+    * and opens only those directories. `None` for any other `df`. The
+    * plan is walked once, however many patterns prune.
     */
-  def predBucketPruner(df: DataFrame): Option[(String, Seq[Int] => DataFrame)] = {
+  def predBucketPruner(df: DataFrame, countKey: String): Option[(Int, Seq[Int] => DataFrame)] = {
     val classic = df.asInstanceOf[ClassicDataFrame]
     val spark = classic.sparkSession.asInstanceOf[ClassicSparkSession]
     val plan = classic.queryExecution.analyzed
@@ -166,8 +170,10 @@ object GraftInternal {
           val dfPred = plan.output.filter(a => resolver(a.name, "pred"))
           val cached = !spark.sharedState.cacheManager.isEmpty &&
             chain.exists(n => spark.sharedState.cacheManager.lookupCachedData(spark, n).isDefined)
+          val count = pred.headOption.map(_.metadata).filter(_.contains(countKey))
+            .map(_.getLong(countKey).toInt).filter(_ > 0)
           if (pred.size == 1 && bucket.size == 1 && dfPred.size == 1 &&
-              dfPred.head.exprId == pred.head.exprId &&
+              dfPred.head.exprId == pred.head.exprId && count.isDefined &&
               fs.partitionSchema.fieldNames.exists(resolver(_, "predBucket")) &&
               bucket.head.dataType == IntegerType && !cached) {
             val prune = (buckets: Seq[Int]) => {
@@ -179,7 +185,7 @@ object GraftInternal {
               pruned.setAnalyzed()
               ClassicDataset.ofRows(spark, pruned): DataFrame
             }
-            Some((fs.location.rootPaths.head.toString, prune))
+            Some((count.get, prune))
           } else None
         case _ => None
       }
